@@ -117,13 +117,17 @@ object RewritePercentileAgg extends Rule[LogicalPlan] {
 
   /** Fire only when every percentile call in the aggregate is rewritable —
     * a half-rewritten aggregate would still carry the single-task merge,
-    * paying both plans for nothing. */
+    * paying both plans for nothing — and when the aggregate and everything
+    * under it is deterministic: the rewrite evaluates the child twice (main
+    * aggregate and QuantileRefine side), and with rand()/uuid() in it the
+    * two evaluations would see different rows, where the builtin sees one. */
   private def shouldRewrite(agg: Aggregate): Boolean = {
     val aes = agg.aggregateExpressions.flatMap(_.collect {
       case ae: AggregateExpression => ae
     })
     val pcts = aes.filter(isPercentileFamily)
-    pcts.nonEmpty && pcts.forall(ae => pctOf(ae).isDefined)
+    pcts.nonEmpty && pcts.forall(ae => pctOf(ae).isDefined) &&
+      agg.find(_.expressions.exists(!_.deterministic)).isEmpty
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {

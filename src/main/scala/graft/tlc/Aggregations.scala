@@ -251,12 +251,6 @@ object Aggregations {
       agg.write.mode("overwrite").partitionBy("trip_date").parquet(path)
     else agg.write.mode("overwrite").parquet(path)
 
-  /** Incremental rebuild: recompute ONLY the given dates' partitions and
-    * overwrite them in place (dynamic partition overwrite), leaving every
-    * other date's data untouched. At 100 TB a late-arriving file touches a
-    * handful of dates — truncate-rebuild (aggregations.py:19,77,129,178)
-    * would rescan the whole fact. `build` is any of the agg builders above;
-    * its input is pre-filtered so the scan itself partition-prunes. */
   /** Restrict `df` to the affected pickup_dates (r13 verdict item 6 / r14).
     * Month-grain increments stay an `isin` literal list — on the
     * pickup_date-partitioned fact that is STATIC partition pruning, the
@@ -279,19 +273,19 @@ object Aggregations {
         Seq("pickup_date"), "left_semi")
     }
 
+  /** Incremental rebuild: recompute ONLY the given dates' partitions and
+    * overwrite them in place (dynamic partition overwrite), leaving every
+    * other date's data untouched. At 100 TB a late-arriving file touches a
+    * handful of dates — truncate-rebuild (aggregations.py:19,77,129,178)
+    * would rescan the whole fact. `build` is any of the agg builders above;
+    * its input is pre-filtered so the scan itself partition-prunes. The
+    * dynamic mode is this write's own option, not the session conf, so
+    * concurrent writes in the same session never see each other's mode. */
   def rebuildDates(fact: DataFrame, build: DataFrame => DataFrame,
-                   dates: Seq[java.sql.Date], path: String): Unit = {
-    val spark = fact.sparkSession
-    val previous = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      build(filterDates(fact, dates))
-        .write.mode("overwrite").partitionBy("trip_date").parquet(path)
-    } finally previous match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-  }
+                   dates: Seq[java.sql.Date], path: String): Unit =
+    build(filterDates(fact, dates))
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("trip_date").parquet(path)
 
   def buildAll(fact: DataFrame): Map[String, DataFrame] = Map(
     "agg_pricing_by_zone_hour" -> pricingByZoneHour(fact),

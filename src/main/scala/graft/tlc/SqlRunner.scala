@@ -34,14 +34,18 @@ object SqlRunner {
 
   /** Register a parquet warehouse directory in the layout `Cli` writes
     * (fact_trips, dim_*, agg_*, data_quality_metrics subdirs): every
-    * subdir that holds parquet becomes a view named after it. */
+    * subdir that holds parquet files, or Hive-style `<column>=<value>`
+    * partition dirs (fact_trips by pickup_date, the date-grained agg_*
+    * tables by trip_date), becomes a view named after it. */
+  private val PartitionDir = """[^_.=][^=]*=.*""".r
+
   def registerWarehouse(spark: SparkSession, dir: String): Seq[String] = {
     val root = new java.io.File(dir)
     val subdirs = Option(root.listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && !f.getName.startsWith("_") &&
         !f.getName.startsWith("."))
       .filter(f => Option(f.listFiles()).getOrElse(Array.empty).exists(c =>
-        c.getName.endsWith(".parquet") || c.getName.startsWith("pickup_date=")))
+        c.getName.endsWith(".parquet") || (c.isDirectory && PartitionDir.matches(c.getName))))
     subdirs.map { d =>
       spark.read.parquet(d.getPath).createOrReplaceTempView(d.getName)
       d.getName

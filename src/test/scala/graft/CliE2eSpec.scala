@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 
 import org.apache.spark.sql.functions._
-import graft.tlc.{Cli, Downloader, Fixtures, RawLoader, Schemas}
+import graft.tlc.{Cli, Downloader, Fixtures, RawLoader, Schemas, SqlRunner}
 
 /** End-to-end Cli drive over real files: write the scaled fixture's raw
   * service frames to disk, run the full load → quality → fact → aggregate →
@@ -51,6 +51,24 @@ class CliE2eSpec extends AnyFunSuite {
     val analytics = Files.list(Paths.get(out, "analytics")).toArray.map(_.toString)
     assert(analytics.length == 14, s"expected 14 analytics outputs: ${analytics.toSeq}")
     assert(spark.read.parquet(s"$out/analytics/01_top_zones_by_revenue").count() > 0)
+
+    // run-analytics over the written warehouse: the trip_date-partitioned
+    // aggregates register as views too, so q03's SQL file (which reads
+    // agg_market_share) answers what Cli wrote for it
+    val views = SqlRunner.registerWarehouse(spark, out)
+    try {
+      assert(views.contains("agg_market_share"), s"views: $views")
+      val sql = SqlRunner.runFile(spark, "sql/analytics/03_market_share_trends.sql")
+      val written = spark.read.parquet(s"$out/analytics/03_market_share_trends")
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select(sql.columns.toSeq.map(col): _*).collect().toSeq.map(_.toSeq.map {
+          case d: Double => f"$d%.4f"
+          case other => String.valueOf(other)
+        }).sortBy(_.mkString("|"))
+      val got = rows(sql)
+      assert(got.nonEmpty)
+      assert(got == rows(written), "q03's SQL result differs from Cli's analytics output")
+    } finally views.foreach(spark.catalog.dropTempView)
   }
 
   /** The reference's full operational story in one spec: download-skip →
@@ -211,7 +229,11 @@ class CliE2eSpec extends AnyFunSuite {
       "yellow" -> s"$dir/yellow_d62.parquet", "green" -> s"$dir/green_d62.parquet",
       "hvfhv" -> s"$dir/hvfhv_d62.parquet", "zones" -> s"$dir/zones.parquet",
       "out" -> out)
+    val overwriteMode = "spark.sql.sources.partitionOverwriteMode"
+    val modeBefore = spark.conf.getOption(overwriteMode)
     Cli.runIncremental(spark, incOpts)
+    // dynamic overwrite is a per-write option: the session conf is untouched
+    assert(spark.conf.getOption(overwriteMode) == modeBefore)
 
     val fact = spark.read.parquet(s"$out/fact_trips")
     assert(fact.count() == 2 * 22320, "new month appended to the fact")

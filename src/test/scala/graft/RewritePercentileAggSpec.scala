@@ -127,6 +127,21 @@ class RewritePercentileAggSpec extends AnyFunSuite {
     }
   }
 
+  test("a non-deterministic child keeps the builtin: the rewrite would " +
+    "evaluate it twice and join two different row sets") {
+    corpus().createOrReplaceTempView("t")
+    spark.conf.set("spark.graft.sqlPercentileRewrite", "true")
+    for (sql <- Seq(
+      """SELECT g, PERCENTILE_CONT(0.5) WITHIN GROUP (ORDER BY r) AS p
+         FROM (SELECT g, v * rand(7) AS r FROM t) GROUP BY g""",
+      """SELECT PERCENTILE_CONT(0.5) WITHIN GROUP (ORDER BY v) AS p
+         FROM t WHERE rand(7) < 0.5""")) {
+      val p = spark.sql(sql).queryExecution.executedPlan.toString
+      assert(p.contains("percentile("),
+        s"non-deterministic child must keep the builtin:\n$p")
+    }
+  }
+
   test("empty input: global aggregate still returns its one row") {
     corpus().filter(col("id") < 0).createOrReplaceTempView("t_empty")
     spark.conf.set("spark.graft.sqlPercentileRewrite", "true")
