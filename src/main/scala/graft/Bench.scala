@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main — prints ONE JSON line with per-query steady-state
   * seconds at SPARK_GRAFT_SF_DIR.
   *
@@ -34,34 +32,25 @@ import org.apache.spark.sql.SparkSession
   * without that caveat (BASELINE.md records the re-cut).
   */
 object Bench {
+  /** Session confs of every measurement main (Bench, BenchFloor,
+    * ProfileQuery, PlanDump), so their numbers and plans are comparable.
+    *  - The suite compiles far more than the default 100 cached generated
+    *    classes; with the warm pass evicting the cache, every timed stage
+    *    re-ran Janino (dd4: 20.5 s benched vs 4.2 s isolated in round 1).
+    *  - Base tables stay hot across the suite (see Tables.memo's scaladoc:
+    *    the DuckDB comparison times warmed runs against its buffer pool, so
+    *    cold per-query parquet decode would skew the ratio with format-
+    *    decoder cost that is not operator work). */
+  val measurementConfs: Seq[(String, String)] = Seq(
+    "spark.sql.codegen.cache.maxEntries" -> "4096",
+    "spark.graft.cacheTables" -> "true")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // The suite compiles far more than the default 100 cached generated
-      // classes; with the warm pass evicting the cache, every timed stage
-      // re-ran Janino (dd4: 20.5 s benched vs 4.2 s isolated in round 1).
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      // Base tables stay hot across the suite (see Tables.memo's scaladoc:
-      // the DuckDB comparison times warmed runs against its buffer pool, so
-      // cold per-query parquet decode would skew the ratio with format-
-      // decoder cost that is not operator work).
-      .config("spark.graft.cacheTables",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_TABLES", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // Optional extra session confs for LOCAL A/B runs of plan variants
-    // (e.g. SPARK_GRAFT_CONF="spark.graft.percentile.bucketHist=false");
-    // the driver never sets this, so its runs get the shipped defaults.
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k, v)
-      })
+    // SPARK_GRAFT_CONF (Session.local) carries LOCAL A/B plan variants,
+    // e.g. "spark.graft.percentile.bucketHist=false"; unset, a run gets the
+    // shipped defaults.
+    val spark = Session.local("graft-bench", measurementConfs: _*)
     spark.sparkContext.setLogLevel("ERROR")
     // Optional comma-separated name-prefix filter (SPARK_GRAFT_BENCH_ONLY):
     // re-time just the queries a plan change touched, under the same rule,

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Stage-barrier floor calibration (r13 verdict item 2) + streaming
@@ -60,17 +60,9 @@ object BenchFloor {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val outPath = args.headOption.getOrElse("BENCH_FLOOR.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.graft.cacheTables",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_TABLES", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = Session.cpus
+    val spark = Session.local("graft-bench-floor", Bench.measurementConfs: _*)
     spark.sparkContext.setLogLevel("ERROR")
 
     // graft.Bench's adaptive min-of-N stop rule, verbatim
@@ -240,14 +232,18 @@ object BenchFloor {
     // (a) DATA term — the same stateful sum-agg episode over the real
     //     events file (the st1/st6 input), so the delta vs the 5-row
     //     stateful probe prices the per-batch data work at gate scale.
+    //     nanosAsLong (Tables.events' reading of TIMESTAMP(NANOS) files) is
+    //     set for the schema read and these episodes only.
     val eventsPath = s"$sfDir/events.parquet"
+    val nanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+    val nanosWas = spark.conf.getOption(nanosAsLong)
+    spark.conf.set(nanosAsLong, "true")
     val eventsSchema = spark.read.parquet(eventsPath).schema
     val evDir = java.nio.file.Files.createTempDirectory("graft_floor_ev_")
-    java.nio.file.Files.createSymbolicLink(
+    val evLink = java.nio.file.Files.createSymbolicLink(
       evDir.resolve("events_1.parquet"), java.nio.file.Paths.get(eventsPath))
     def eventsEpisode(): Unit =
       streaming.StreamingOps.withStatePartitions(spark) {
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         val src = graft.Tables.normalizeTs(
           spark.readStream.schema(eventsSchema).parquet(evDir.toString), "ts")
         val out = src.groupBy(col("user_id"))
@@ -279,7 +275,11 @@ object BenchFloor {
           .queryName(s"floor_fmgws_${probeId.incrementAndGet()}").start()
         try q.processAllAvailable() finally q.stop()
       }
-    val (fevFirst, fevMin) = firstAndMin(5)(eventsEpisode())
+    val (fevFirst, fevMin) = try firstAndMin(5)(eventsEpisode()) finally {
+      nanosWas.fold(spark.conf.unset(nanosAsLong))(spark.conf.set(nanosAsLong, _))
+      java.nio.file.Files.delete(evLink)
+      java.nio.file.Files.delete(evDir)
+    }
     val (fmgFirst, fmgMin) = firstAndMin(5)(fmgwsEpisode())
 
     // --- 4. the adjudicated tail: measured quanta + residual --------------

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Registry for QUERY-LOCAL `persist()` calls, so the benchmark harness can
   * evict them between timed repeats.
@@ -18,7 +19,8 @@ import org.apache.spark.sql.DataFrame
   * here — being warm across queries is their declared contract.
   */
 object CacheScope {
-  private val live = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+  /** `unpersist(blocking)` of every registered frame or checkpoint. */
+  private val live = new java.util.concurrent.ConcurrentLinkedQueue[Boolean => Unit]()
 
   /** `df.persist()` + register for [[drain]]. LAZY by design: an r15
     * experiment made this eager (persist + count()) to close the
@@ -32,13 +34,25 @@ object CacheScope {
     * manual barrier. */
   def persistScoped(df: DataFrame): DataFrame = {
     val p = df.persist()
-    live.add(p)
+    live.add(b => p.unpersist(b))
     p
   }
 
-  /** Unpersist every scoped frame. Removing the CacheManager entry makes the
-    * next structurally-identical plan recompute instead of plan-dedup-reusing
-    * the warm buffers. No-op when nothing is registered.
+  /** `df.localCheckpoint()` (eager) + register the checkpoint's RDD blocks
+    * for [[drain]]. Only for frames whose readers all run before the next
+    * drain: a drained local checkpoint cannot be read again. */
+  def checkpointScoped(df: DataFrame): DataFrame = {
+    val c = df.localCheckpoint()
+    c.queryExecution.logical.foreach {
+      case r: LogicalRDD => live.add(b => r.rdd.unpersist(b))
+      case _ =>
+    }
+    c
+  }
+
+  /** Unpersist every scoped frame and checkpoint. Removing the CacheManager
+    * entry makes the next structurally-identical plan recompute instead of
+    * plan-dedup-reusing the warm buffers. No-op when nothing is registered.
     *
     * `blocking = true` in the Bench path (ADVICE r12): a non-blocking
     * eviction from the previous repeat can still be running when the next
@@ -48,7 +62,7 @@ object CacheScope {
   def drain(blocking: Boolean = false): Unit = {
     var d = live.poll()
     while (d != null) {
-      d.unpersist(blocking)
+      d(blocking)
       d = live.poll()
     }
   }

@@ -1,13 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes `.explain("formatted")` for the named queries to
   * plans/<dir>/<query>_<suffix>.txt — the optimization-round evidence files
   * (the judge checks plan claims against these). Usage:
   *   runMain graft.PlanDump <dir> <suffix> <query...>
-  * Session settings mirror Bench (cacheTables on) so the dumped plan is the
+  * Session settings are Bench's (cacheTables on) so the dumped plan is the
   * one the benchmark actually runs, InMemoryRelation nodes included.
+  * `SPARK_GRAFT_SF_DIR` picks the data, e.g. the sf0.01 cut for a quick
+  * audit of plan shapes.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -15,23 +15,10 @@ object PlanDump {
     val suffix = args(1)
     val names = args.drop(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.graft.cacheTables", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // SPARK_GRAFT_CONF dumps plan variants (e.g. the r15 before-plans with
+    // spark.graft.sqlPercentileRewrite=false)
+    val spark = Session.local("graft-plan-dump", Bench.measurementConfs: _*)
     spark.sparkContext.setLogLevel("ERROR")
-    // same local-A/B hook as Bench: dump plan variants (e.g. the r15
-    // before-plans with spark.graft.sqlPercentileRewrite=false)
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k, v)
-      })
     val out = java.nio.file.Paths.get(dir)
     java.nio.file.Files.createDirectories(out)
     for (n <- names) {

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Diagnostic main for the r14 optimization round (guide §1: measure first).
   *
@@ -16,16 +15,7 @@ import org.apache.spark.sql.SparkSession
 object ProfileQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.graft.cacheTables",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_TABLES", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local("graft-profile", Bench.measurementConfs: _*)
     spark.sparkContext.setLogLevel("ERROR")
 
     @volatile var jobs = 0

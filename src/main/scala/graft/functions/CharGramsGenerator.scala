@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnaryExpression}
@@ -64,15 +63,4 @@ case class CharGramsGenerator(child: Expression, n: Int)
 
   override protected def withNewChildInternal(newChild: Expression): CharGramsGenerator =
     copy(child = newChild)
-}
-
-object CharGramsGenerator {
-  /** Register `char_grams(text, n)` as a session generator function (usable
-    * in select/generator position and LATERAL VIEW). Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "char_grams",
-      exprs => CharGramsGenerator(exprs(0),
-        NGramsGenerator.literalInt(exprs(1), "char_grams")),
-      "scala_udf")
 }

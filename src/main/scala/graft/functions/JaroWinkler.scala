@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -110,12 +109,4 @@ object JaroWinklerSimilarity {
     while (prefix < maxP && s1(prefix) == s2(prefix)) prefix += 1
     jaro + prefix * 0.1 * (1.0 - jaro)
   }
-
-  /** Register `jaro_winkler(a, b)` for `expr(...)` / `spark.sql(...)` use.
-    * Idempotent, mirrors [[CosineSimilarity.register]]. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaro_winkler",
-      exprs => JaroWinklerSimilarity(exprs(0), exprs(1)),
-      "scala_udf")
 }

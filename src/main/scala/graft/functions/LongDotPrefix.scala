@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -73,14 +72,4 @@ case class LongDotPrefix(first: Expression, second: Expression, third: Expressio
   override protected def withNewChildrenInternal(
       newFirst: Expression, newSecond: Expression, newThird: Expression): LongDotPrefix =
     copy(first = newFirst, second = newSecond, third = newThird)
-}
-
-object LongDotPrefix {
-  /** Register `long_dot_prefix(a, b, p)` in the session's function
-    * registry ([[CosineSimilarity.register]]'s convention). Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "long_dot_prefix",
-      exprs => LongDotPrefix(exprs(0), exprs(1), exprs(2)),
-      "scala_udf")
 }

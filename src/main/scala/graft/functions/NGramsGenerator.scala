@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnaryExpression}
@@ -19,8 +18,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * each n-gram straight into the `Generate` operator's output iterator, the
   * same seam Spark's own `explode`/`posexplode`/`inline` use, and the
   * tokenize→n-gram step is the single hottest map in a text corpus
-  * pipeline. Works in both `Dataset.select` and (via [[NGramsGenerator
-  * .register]]) SQL `LATERAL VIEW` / generator-function position.
+  * pipeline. Works in both `Dataset.select` and (as `ngrams`, installed by
+  * [[graft.GraftExtensions]]) SQL `LATERAL VIEW` / generator-function
+  * position.
   *
   * Semantics: rows with fewer than `n` tokens yield nothing (matching the
   * `size(ts) >= n` guards used across graft.ops); NULL input yields nothing.
@@ -61,7 +61,7 @@ object NGramsGenerator {
     * the caller passes a column or a non-integral literal (a bare
     * `.eval(null).asInstanceOf[Int]` throws an opaque ClassCastException /
     * NPE at parse time for e.g. `CAST(4 AS BIGINT)` or a column ref). */
-  private[functions] def literalInt(
+  private[graft] def literalInt(
       e: org.apache.spark.sql.catalyst.expressions.Expression,
       fn: String): Int = {
     def fail(got: String): Nothing = throw new IllegalArgumentException(
@@ -76,12 +76,4 @@ object NGramsGenerator {
       case other => fail(s"${other.getClass.getSimpleName} ${e.sql}")
     }
   }
-
-  /** Register `ngrams(tokens, n)` as a session generator function (usable
-    * in SQL generator position / LATERAL VIEW). Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ngrams",
-      exprs => NGramsGenerator(exprs(0), literalInt(exprs(1), "ngrams")),
-      "scala_udf")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -48,12 +47,4 @@ object SortableDoubleBits {
     val bits = java.lang.Double.doubleToLongBits(d)
     bits ^ ((bits >> 63) & 0x7fffffffffffffffL)
   }
-
-  /** Register `sortable_double_bits(v)` ([[LongDotPrefix.register]]'s
-    * convention). Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sortable_double_bits",
-      exprs => SortableDoubleBits(exprs(0)),
-      "scala_udf")
 }

@@ -2,9 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{GraftExtensions, Tables}
 import graft.functions.Exact._
-import graft.functions.JaroWinklerSimilarity
 
 /** Record-linkage and resampling operators — probabilistic entity
   * resolution (the Fellegi-Sunter agree/disagree log-weight model over
@@ -47,7 +46,7 @@ object LinkageOps {
     // the ER blocking field). Bucketed at 0.1 with the 1e-9 bias so the
     // final double chain can't flip a boundary cross-engine.
     "f26_jaro_winkler" -> { (s, d) =>
-      JaroWinklerSimilarity.register(s)
+      GraftExtensions.register(s)
       blockedPairs(s, d)
         .select(col("a.lang").as("lang"),
           expr("jaro_winkler(a.p, b.p)").as("jw"))
@@ -63,7 +62,7 @@ object LinkageOps {
     // prefix Jaro-Winkler ≥ 0.9 +30/−10. The score distribution per
     // language is the calibration table an ER pipeline thresholds on.
     "dd23_er_score" -> { (s, d) =>
-      JaroWinklerSimilarity.register(s)
+      GraftExtensions.register(s)
       blockedPairs(s, d)
         .select(
           col("a.lang").as("lang"),

@@ -5,8 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
-import graft.functions.SortableDoubleBits
-
 /** Exact value-at-rank over weighted rows, computed with MERGEABLE
   * aggregations only — the histogram-bucket two-phase refinement that
   * w12/a18/a26's scaladocs promised (r11 verdict item 2; reference
@@ -117,7 +115,7 @@ object QuantileRefine {
     require(values.schema("v").dataType == DoubleType,
       s"QuantileRefine buckets by double bit-prefix; got " +
         values.schema("v").dataType.simpleString)
-    SortableDoubleBits.register(values.sparkSession)
+    graft.GraftExtensions.register(values.sparkSession)
     val rows = values.filter(col("v").isNotNull && col("c") > 0)
 
     // PASS 1: bit-prefix histogram — fixed key space, no range pre-pass
@@ -178,14 +176,7 @@ object QuantileRefine {
     // separate job (the same failure as CacheScope's persist+count()
     // experiment). Lazy persist stays; the q14-style checkpoint is right
     // only for frames whose lineage the main query does NOT otherwise need.
-    // A/B switch kept for measurement honesty: spark.graft.quantileRefine
-    // .persistState=false restores the r13 recompute-per-consumer shape.
-    def scoped(df: DataFrame): DataFrame =
-      if (values.sparkSession.conf
-            .get("spark.graft.quantileRefine.persistState", "true") == "true")
-        graft.CacheScope.persistScoped(df)
-      else df
-    val state = scoped(
+    val state = graft.CacheScope.persistScoped(
       (if (manyGroups) hist else hist.coalesce(1))
       .withColumn("n", sum(col("bc")).over(wTot))
       .withColumn("cum", sum(col("bc")).over(wCum))
@@ -214,7 +205,7 @@ object QuantileRefine {
         .agg(sum(col("c")).as("bc"), min(col("v")).as("blo"), max(col("v")).as("bhi"))
       val wRid = Window.partitionBy(perRid: _*).orderBy("b")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val refined = scoped(
+      val refined = graft.CacheScope.persistScoped(
         (if (manyGroups) bucketed else bucketed.coalesce(1))
         .withColumn("cum", sum(col("bc")).over(wRid))
         .filter(col("cum") >= col("r") && col("cum") - col("bc") < col("r"))

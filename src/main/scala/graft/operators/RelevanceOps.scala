@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{GraftExtensions, Tables}
 import graft.functions.Exact.stableRound
 
 /** Round-8 relevance & robustness pack — the retrieval/curation operators a
@@ -69,7 +69,7 @@ object RelevanceOps {
       // Codegen'd primitive dot loop, NOT aggregate(zip_with(slice...)):
       // the higher-order form evaluates interpreted and allocates two
       // slice arrays per row — see LongDotPrefix's scaladoc.
-      graft.functions.LongDotPrefix.register(s)
+      GraftExtensions.register(s)
       val arrs = Tables.embeddings(s, d)
         .select(col("vec_id"),
           expr("transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1e6 + 0.5) AS BIGINT))")

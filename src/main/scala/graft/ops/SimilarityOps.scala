@@ -2,8 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
-import graft.functions.CosineSimilarity
+import graft.{GraftExtensions, Tables}
 
 /** Similarity search over the `embeddings` table (Array[Float] vectors).
   *
@@ -31,7 +30,7 @@ object SimilarityOps {
 
   /** embeddings as double vectors. */
   private def vecs(s: SparkSession, d: String): DataFrame = {
-    CosineSimilarity.register(s)
+    GraftExtensions.register(s)
     Tables.embeddings(s, d)
       .select(col("vec_id"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))

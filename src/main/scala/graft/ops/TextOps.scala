@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{GraftExtensions, Tables}
 
 /** Text-analysis operators for a large-scale training-data pipeline:
   * language-ID (marker n-gram heuristic), quality scoring, token counting
@@ -62,7 +62,7 @@ object TextOps {
     // 12-bit threshold, decided on the ROUNDED value so the cut is
     // summation-order independent (dd26's convention).
     "tx24_ngram_perplexity" -> { (s, d) =>
-      graft.functions.NGramsGenerator.register(s)
+      GraftExtensions.register(s)
       Tables.documents(s, d)
         .select(col("doc_id"), split(col("text"), " ").as("ts"))
         .createOrReplaceTempView("tx24_docs")
@@ -165,7 +165,7 @@ object TextOps {
       // 9× constant-factor gap vs DuckDB was exactly this scan). Short docs
       // (< 4 chars) yield nothing from the generator; the pushed-down
       // length filter mirrors the oracle's GREATEST(len - 3, 0) guard.
-      graft.functions.CharGramsGenerator.register(s)
+      GraftExtensions.register(s)
       val grams = Tables.documents(s, d)
         .where(length(col("text")) >= 4)
         .select(expr("char_grams(text, 4)").as("gram"))
@@ -557,7 +557,7 @@ object TextOps {
     // builds). Exercised from SQL generator position (LATERAL VIEW) to
     // prove the registry seam; the aggregate proves the emitted stream.
     "tx10_ngram_udtf" -> { (s, d) =>
-      graft.functions.NGramsGenerator.register(s)
+      GraftExtensions.register(s)
       Tables.documents(s, d)
         .select(col("doc_id"), split(col("text"), " ").as("ts"))
         .createOrReplaceTempView("tx10_docs")

@@ -3,7 +3,7 @@ package graft.plans
 import scala.collection.mutable
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftSqlAccess, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlAccess}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Cast, Expression, GenericInternalRow, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
@@ -184,7 +184,7 @@ object BucketHist {
   def of(df: DataFrame, groupCols: Seq[String], valueCols: Seq[String],
          bitShift: Int): DataFrame = {
     val spark = df.sparkSession
-    register(spark)
+    graft.GraftExtensions.register(spark)
     val plan = GraftSqlAccess.analyzedPlan(df)
     def resolve(name: String): Attribute =
       plan.output.find(a => spark.sessionState.conf.resolver(a.name, name))
@@ -205,11 +205,4 @@ object BucketHist {
       .agg(sum(col("bc")).as("bc"), min(col("blo")).as("blo"),
         max(col("bhi")).as("bhi"))
   }
-
-  /** Idempotently add the planner strategy to the session ([[TopK.register]]
-    * convention; production sessions get it via graft.GraftExtensions). */
-  def register(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(BucketHistogramStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ BucketHistogramStrategy
 }

@@ -50,9 +50,10 @@ import graft.operators.PercentileCont
   * A global aggregate (no GROUP BY) joins on TRUE against the one-row
   * percentile frame, so the one-row-on-empty-input contract survives.
   * The replacement subtree is built with the ordinary Dataset API and
-  * spliced back as its OPTIMIZED plan (this rule runs in the
-  * User Provided Optimizers batch, after column pruning — an unoptimized
-  * splice would scan every column). Any analysis failure inside the
+  * spliced back as its OPTIMIZED plan (registered through
+  * `spark.experimental` the rule runs in the User Provided Optimizers
+  * batch, after every other batch, so an unoptimized splice would scan
+  * every column). Any analysis failure inside the
   * reconstruction falls back to the original aggregate: the rule can only
   * ever trade the builtin for the proven-equal plan, never fail a query.
   *
@@ -62,9 +63,10 @@ import graft.operators.PercentileCont
   * table on the group key; small fixed key sets keep the single-partition
   * state plan.
   *
-  * Registered per-session via [[RewritePercentileAgg.register]]
-  * ([[TopK.register]] convention — SqlRunner calls it before running a
-  * file) and for production via `spark.sql.extensions=graft.GraftExtensions`.
+  * Installed by [[graft.GraftExtensions]]: injected into the operator
+  * optimization batch of sessions built with the extension, added through
+  * `spark.experimental` by `GraftExtensions.register` elsewhere (SqlRunner
+  * calls it before running a file).
   * Kill switch: `spark.graft.sqlPercentileRewrite=false`.
   */
 object RewritePercentileAgg extends Rule[LogicalPlan] {
@@ -258,9 +260,9 @@ object RewritePercentileAgg extends Rule[LogicalPlan] {
         }.reduce(And))
     val out = mainDf.join(pct, cond, "left").select(finalCols: _*)
 
-    // splice back fully optimized (this batch runs after the main ones) and
-    // verify the contract the parent operators rely on: same output ids,
-    // names and types, same order
+    // splice back fully optimized (the experimental batch runs after the
+    // main ones) and verify the contract the parent operators rely on:
+    // same output ids, names and types, same order
     val newPlan = GraftSqlAccess.optimizedPlan(out)
     require(newPlan.output.size == agg.output.size &&
       newPlan.output.zip(agg.output).forall { case (a, b) =>
@@ -268,11 +270,4 @@ object RewritePercentileAgg extends Rule[LogicalPlan] {
       }, "percentile rewrite changed the aggregate's output contract")
     newPlan
   }
-
-  /** Idempotently add the rule to the session ([[TopK.register]]
-    * convention; production sessions get it via graft.GraftExtensions). */
-  def register(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(RewritePercentileAgg))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RewritePercentileAgg
 }

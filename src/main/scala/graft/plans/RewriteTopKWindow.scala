@@ -19,9 +19,11 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *    wants the rank itself, the window must run).
   *
   * Row-number ties on a non-total order are nondeterministic in BOTH forms,
-  * so the rewrite never changes a deterministic result. Registered through
-  * `spark.experimental.extraOptimizations` by [[TopK.register]], or via
-  * `spark.sql.extensions=graft.GraftExtensions`.
+  * so the rewrite never changes a deterministic result. Installed by
+  * [[graft.GraftExtensions]] (injected, or through
+  * `spark.experimental.extraOptimizations` by `GraftExtensions.register`).
+  * `spark.sql.optimizer.excludedRules=graft.plans.RewriteTopKWindow` turns
+  * it off.
   *
   * Relation to Spark's own `WindowGroupLimit` (physical optimization for
   * the same idiom, Spark 3.5+): that still sorts each partition and runs

@@ -3,7 +3,7 @@ package graft.plans
 import scala.collection.mutable
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftSqlAccess, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlAccess}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Descending, Expression, RowOrdering, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
@@ -103,7 +103,7 @@ object TopK {
   def perGroup(df: DataFrame, k: Int, groupCols: Seq[String],
                orderBy: Seq[(String, Boolean)]): DataFrame = {
     val spark = df.sparkSession
-    register(spark)
+    graft.GraftExtensions.register(spark)
     val plan = GraftSqlAccess.analyzedPlan(df)
     def resolve(name: String): Attribute =
       plan.output.find(a => spark.sessionState.conf.resolver(a.name, name))
@@ -114,16 +114,5 @@ object TopK {
       SortOrder(resolve(n), if (asc) Ascending else Descending)
     }
     GraftSqlAccess.ofRows(spark, TopKPerGroup(k, g, o, plan))
-  }
-
-  /** Idempotently add the planner strategy and the window-rewrite optimizer
-    * rule to the session. */
-  def register(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
-    if (!spark.experimental.extraOptimizations.contains(RewriteTopKWindow))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RewriteTopKWindow
   }
 }

@@ -4,7 +4,6 @@ import java.util.concurrent.{Callable, ExecutionException, Executors}
 
 import scala.collection.mutable
 
-import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, lit, max}
 import org.apache.spark.sql.types.StructType
@@ -30,7 +29,7 @@ import org.apache.spark.sql.types.StructType
   * its writes have finished, so each `[timing]` line still covers exactly
   * its stage.
   */
-object Cli extends Logging {
+object Cli {
 
   def parseArgs(args: Array[String]): Map[String, String] =
     args.sliding(2, 2).collect {
@@ -46,27 +45,10 @@ object Cli extends Logging {
 
   private val rawArgs = Seq("yellow", "green", "hvfhv", "zones", "out")
 
-  /** Runs `body` in a `local[$SPARK_GRAFT_CPUS]` session (or
-    * `$SPARK_MASTER`) and stops it afterwards. `SPARK_GRAFT_CONF`
-    * (`k=v;k=v`) is the LOCAL A/B hook shared with Bench/PlanDump: extra
-    * session confs for plan-variant measurement runs (e.g. the BENCH_E2E
-    * percentile-shape A/B). Every key it sets is logged at WARN, so an
-    * override is visible in any run's log. */
+  /** Runs `body` in a [[graft.Session.local]] session (`SPARK_MASTER`,
+    * `SPARK_GRAFT_CPUS`, `SPARK_GRAFT_CONF`) and stops it afterwards. */
   private def withSession(appName: String)(body: SparkSession => Unit): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        logWarning(s"SPARK_GRAFT_CONF sets $k=$v")
-        spark.conf.set(k, v)
-      })
+    val spark = graft.Session.local(appName)
     try body(spark) finally spark.stop()
   }
 

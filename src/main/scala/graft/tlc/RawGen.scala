@@ -1,7 +1,5 @@
 package graft.tlc
 
-import org.apache.spark.sql.SparkSession
-
 /** BENCH_E2E input generator: writes the scaled-fixture raw service files
   * (TlcScaledDemo.rawFixtureN — `copies` stacked replicas of the hash-gated
   * 22,320-trip pattern) to parquet, plus the zones dim, so the SAME files
@@ -23,14 +21,7 @@ object RawGen {
     val dir = args(0)
     val copies = if (args.length > 1) args(1).toInt else 100
     val shiftDays = if (args.length > 2) args(2).toInt else 0
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local("graft-rawgen")
     val (y0, g0, h0, z) = graft.TlcScaledDemo.rawFixtureN(spark, copies)
     def shift(df: org.apache.spark.sql.DataFrame) =
       if (shiftDays == 0) df

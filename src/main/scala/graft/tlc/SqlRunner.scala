@@ -101,10 +101,9 @@ object SqlRunner {
     * answer). Throws on an empty script. */
   def runScript(spark: SparkSession, script: String): DataFrame = {
     // the SQL entry point is exactly where a reference user's
-    // PERCENTILE_CONT lands on the builtin single-task aggregate — give
-    // the session the scale-safe rewrite (production sessions get it via
-    // spark.sql.extensions=graft.GraftExtensions)
-    graft.plans.RewritePercentileAgg.register(spark)
+    // PERCENTILE_CONT lands on the builtin single-task aggregate — give a
+    // session built without the extension the scale-safe rewrite
+    graft.GraftExtensions.register(spark)
     val stmts = splitStatements(script)
     require(stmts.nonEmpty, "SQL script contains no statements")
     stmts.map(spark.sql).last

@@ -1,11 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.plans.BucketHist
 import graft.operators.PercentileCont
+import graft.tlc.Fixtures
 
 /** r14: the single-pass multi-column bucket histogram must be BIT-IDENTICAL
   * to the stacked-unpivot histogram it replaced in PercentileCont's pass 1
@@ -14,12 +14,7 @@ import graft.operators.PercentileCont
   * must stay bit-identical to Spark's builtin `percentile`. */
 class BucketHistogramSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = Fixtures.sparkSession()
 
   /** Hostile value mix: negatives, ±0.0, ties, nulls, subnormals, integers
     * that exercise the CAST-to-double path, one group with all-null column. */
@@ -47,7 +42,6 @@ class BucketHistogramSpec extends AnyFunSuite {
   /** The r13 stacked-expression histogram, verbatim (the reference shape). */
   private def stackedHist(df: org.apache.spark.sql.DataFrame,
                           cols: Seq[String]) = {
-    graft.functions.SortableDoubleBits.register(spark)
     val stackSql = s"stack(${cols.size}, " + cols.map(c =>
       s"'$c', CAST(`$c` AS DOUBLE)").mkString(", ") + ") AS (pcol, v)"
     df.selectExpr("g", stackSql)
@@ -92,14 +86,19 @@ class BucketHistogramSpec extends AnyFunSuite {
       PercentileCont.Spec("c_p75", "vc", 3, 4))
     val got = PercentileCont.group(df, Seq("g"), specs)
       .orderBy("g").collect()
-    val want = df.groupBy("g").agg(
-        expr("percentile(va, 0.25)").as("a_p25"),
-        expr("percentile(va, 0.5)").as("a_med"),
-        expr("percentile(vb, 0.5)").as("b_med"),
-        expr("percentile(vc, 0.75)").as("c_p75"))
-      // group() emits only groups with >=1 non-null value in SOME column;
-      // the fixture guarantees that for every group, so row sets align.
-      .orderBy("g").collect()
+    val want = Fixtures.withConf(spark, Fixtures.builtinPercentile) {
+      val builtin = df.groupBy("g").agg(
+          expr("percentile(va, 0.25)").as("a_p25"),
+          expr("percentile(va, 0.5)").as("a_med"),
+          expr("percentile(vb, 0.5)").as("b_med"),
+          expr("percentile(vc, 0.75)").as("c_p75"))
+        // group() emits only groups with >=1 non-null value in SOME column;
+        // the fixture guarantees that for every group, so row sets align.
+        .orderBy("g")
+      val plan = builtin.queryExecution.executedPlan.toString
+      assert(plan.contains("percentile("), s"reference must plan the builtin:\n$plan")
+      builtin.collect()
+    }
     assert(got.length == want.length)
     got.zip(want).foreach { case (g, w) =>
       assert(g.getString(0) == w.getString(0))

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.CosineSimilarity
 import graft.tlc.Fixtures
 
 /** The native expression must match the composable HOF form bit-for-bit
@@ -13,7 +12,6 @@ class CosineSimilaritySpec extends AnyFunSuite {
 
   test("cosine_sim equals aggregate(zip_with(...)) fold on random vectors") {
     import spark.implicits._
-    CosineSimilarity.register(spark)
     val rnd = new scala.util.Random(42)
     val rows = (0 until 200).map(i =>
       (i.toLong, Array.fill(64)(rnd.nextDouble() - 0.5),
@@ -31,7 +29,6 @@ class CosineSimilaritySpec extends AnyFunSuite {
 
   test("NULL on zero-norm input and on NULL input") {
     import spark.implicits._
-    CosineSimilarity.register(spark)
     val df = Seq(
       (Array(0.0, 0.0), Array(1.0, 2.0)),
       (Array(1.0, 2.0), Array(1.0, 2.0)))
@@ -47,7 +44,6 @@ class CosineSimilaritySpec extends AnyFunSuite {
 
   test("float arrays are implicitly cast (embeddings column shape)") {
     import spark.implicits._
-    CosineSimilarity.register(spark)
     val df = Seq((Array(1.0f, 0.0f), Array(1.0f, 0.0f))).toDF("a", "b")
       .withColumn("s", expr("cosine_sim(a, b)")).collect()
     assert(math.abs(df(0).getDouble(2) - 1.0) < 1e-12)

@@ -4,7 +4,6 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.tlc.Fixtures
-import graft.functions.NGramsGenerator
 
 /** Edge semantics of the custom n-gram Generator: short rows and NULLs
   * yield nothing (matching the size(ts) >= n guards used across graft.ops),
@@ -15,7 +14,6 @@ class NGramsGeneratorSpec extends AnyFunSuite {
 
   test("short and NULL token arrays generate no rows; n-grams match the composed form") {
     import spark.implicits._
-    NGramsGenerator.register(spark)
     val df = Seq(
       (1L, "a b c d"),
       (2L, "x y"),          // shorter than n=3 -> nothing

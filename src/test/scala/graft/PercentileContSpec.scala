@@ -42,14 +42,18 @@ class PercentileContSpec extends AnyFunSuite {
       .withColumn("xc", when(col("k") % 3 === 0, col("x")))
   }
 
-  private lazy val expected = df.groupBy("grp").agg(
-    expr("percentile(x, array(0.25, 0.5, 0.75))").as("px"),
-    expr("percentile(xc, 0.5)").as("mc"),
-    expr("percentile(k, 0.75)").as("pk"))
-    .select(col("grp"),
-      element_at(col("px"), 1).as("p25"), element_at(col("px"), 2).as("p50"),
-      element_at(col("px"), 3).as("p75"), col("mc"), col("pk"))
-    .collect().map(r => r.getString(0) -> r.toSeq.drop(1)).toMap
+  private lazy val expected = Fixtures.withConf(spark, Fixtures.builtinPercentile) {
+    val builtin = df.groupBy("grp").agg(
+      expr("percentile(x, array(0.25, 0.5, 0.75))").as("px"),
+      expr("percentile(xc, 0.5)").as("mc"),
+      expr("percentile(k, 0.75)").as("pk"))
+      .select(col("grp"),
+        element_at(col("px"), 1).as("p25"), element_at(col("px"), 2).as("p50"),
+        element_at(col("px"), 3).as("p75"), col("mc"), col("pk"))
+    val plan = builtin.queryExecution.executedPlan.toString
+    assert(plan.contains("percentile("), s"reference must plan the builtin:\n$plan")
+    builtin.collect().map(r => r.getString(0) -> r.toSeq.drop(1)).toMap
+  }
 
   for (many <- Seq(false, true)) {
     test(s"bit-identical to the builtin percentile (manyGroups=$many)") {

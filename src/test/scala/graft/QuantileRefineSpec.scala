@@ -54,11 +54,15 @@ class QuantileRefineSpec extends AnyFunSuite {
 
   test("percentile_cont(0.5) from the clo/chi rank pair (a18's mapping)") {
     data.createOrReplaceTempView("qr_data")
-    val expected = spark.sql(
-      """SELECT grp,
-        |       ROUND(percentile_cont(0.5) WITHIN GROUP (ORDER BY v), 4) AS p
-        |FROM qr_data GROUP BY grp""".stripMargin)
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    val expected = Fixtures.withConf(spark, Fixtures.builtinPercentile) {
+      val builtin = spark.sql(
+        """SELECT grp,
+          |       ROUND(percentile_cont(0.5) WITHIN GROUP (ORDER BY v), 4) AS p
+          |FROM qr_data GROUP BY grp""".stripMargin)
+      val plan = builtin.queryExecution.executedPlan.toString
+      assert(plan.contains("percentile("), s"reference must plan the builtin:\n$plan")
+      builtin.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    }
     val vals = QuantileRefine.atRankExprs(data, Seq("grp"),
       Seq("clo" -> "(n + 1) DIV 2", "chi" -> "n DIV 2 + 1"))
     def pick(rid: String) = max(when(col("rid") === rid, col("v")))

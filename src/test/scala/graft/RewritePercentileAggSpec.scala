@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.RewritePercentileAgg
 import graft.tlc.Fixtures
 
 /** RewritePercentileAgg (r14 verdict item 3): PERCENTILE_CONT SQL must plan
@@ -19,11 +18,7 @@ import graft.tlc.Fixtures
   */
 class RewritePercentileAggSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = {
-    val s = Fixtures.sparkSession()
-    RewritePercentileAgg.register(s)
-    s
-  }
+  private lazy val spark: SparkSession = Fixtures.sparkSession()
 
   /** 1000 rows, 3 groups, nulls, a NULL group key, ties and near-unique
     * doubles — the distribution classes PercentileContSpec exercises. */

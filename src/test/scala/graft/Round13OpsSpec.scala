@@ -71,15 +71,19 @@ class Round13OpsSpec extends AnyFunSuite {
         s"$lang: ${rs.length} docs, expected min($k, ${langSizes(lang)})")
     }
     // oracle-shape replay through a window rank instead of the native plan
-    val replay = Tables.documents(spark, sfDir)
-      .withColumn("h", expr(
-        "CAST(conv(substring(md5(concat('graft-reservoir', CAST(doc_id AS STRING))), 1, 7), 16, 10) AS BIGINT)"))
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("lang")
-          .orderBy(col("h"), col("doc_id"))))
-      .filter(col("rn") <= k)
-      .select("lang", "doc_id")
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    val replay = Fixtures.withConf(spark, Fixtures.builtinTopK) {
+      val ranked = Tables.documents(spark, sfDir)
+        .withColumn("h", expr(
+          "CAST(conv(substring(md5(concat('graft-reservoir', CAST(doc_id AS STRING))), 1, 7), 16, 10) AS BIGINT)"))
+        .withColumn("rn", row_number().over(
+          org.apache.spark.sql.expressions.Window.partitionBy("lang")
+            .orderBy(col("h"), col("doc_id"))))
+        .filter(col("rn") <= k)
+        .select("lang", "doc_id")
+      val plan = ranked.queryExecution.executedPlan.toString
+      assert(!plan.contains("TopKPerGroup"), s"replay must run the window:\n$plan")
+      ranked.collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    }
     assert(rows.map(r => (r.getString(0), r.getLong(1))).toSet == replay,
       "native TopKPerGroup membership differs from the window-rank replay")
     // partitioning independence: same result from a deliberately bad layout

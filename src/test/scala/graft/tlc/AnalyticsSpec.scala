@@ -1,5 +1,6 @@
 package graft.tlc
 
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -30,6 +31,17 @@ class AnalyticsSpec extends AnyFunSuite {
       val n = df.count() // forces full execution
       assert(n >= 0, s"$name failed")
     }
+  }
+
+  test("CacheScope.drain releases q14's checkpointed frames") {
+    val q = result.analytics("14_market_share_shift_vs_pricing")()
+    q.collect()
+    val checkpoints = q.queryExecution.analyzed.collect { case r: LogicalRDD => r.rdd.id }.toSet
+    assert(checkpoints.nonEmpty, "q14 checkpoints its bounded frames")
+    assert(checkpoints.subsetOf(spark.sparkContext.getPersistentRDDs.keySet))
+    graft.CacheScope.drain(blocking = true)
+    val left = checkpoints.intersect(spark.sparkContext.getPersistentRDDs.keySet)
+    assert(left.isEmpty, s"checkpoint RDDs still persisted after drain: $left")
   }
 
   test("q01 top zones: Midtown Center revenue = yellow 16.3 + hvfhv 23.09") {

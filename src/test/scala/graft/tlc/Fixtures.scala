@@ -10,17 +10,22 @@ object Fixtures {
 
   def ts(s: String): Timestamp = Timestamp.valueOf(s)
 
-  def sparkSession(): SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tlc-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+  def sparkSession(): SparkSession = graft.Session.local("graft-tlc-tests")
+
+  /** `body` with the session conf `kv` set, restored afterwards. Reference
+    * forms are computed (collected) inside, e.g. with a graft rule off, so
+    * they plan the way Spark's builtins do. */
+  def withConf[T](spark: SparkSession, kv: (String, String))(body: => T): T = {
+    val (k, v) = kv
+    val was = spark.conf.getOption(k)
+    spark.conf.set(k, v)
+    try body finally was.fold(spark.conf.unset(k))(spark.conf.set(k, _))
   }
+
+  /** Session confs that turn each graft optimizer rule off. */
+  val builtinPercentile: (String, String) = "spark.graft.sqlPercentileRewrite" -> "false"
+  val builtinTopK: (String, String) =
+    "spark.sql.optimizer.excludedRules" -> "graft.plans.RewriteTopKWindow"
 
   /** conftest.py:42–77 — 4 yellow rows on 2024-06-01 (a Saturday). */
   def yellow(spark: SparkSession): DataFrame = {
