@@ -48,7 +48,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // SPARK_GRAFT_CONF (Session.local) carries LOCAL A/B plan variants,
-    // e.g. "spark.graft.percentile.bucketHist=false"; unset, a run gets the
+    // e.g. "spark.graft.sqlPercentileRewrite=false"; unset, a run gets the
     // shipped defaults.
     val spark = Session.local("graft-bench", measurementConfs: _*)
     spark.sparkContext.setLogLevel("ERROR")

@@ -280,7 +280,9 @@ object BenchFloor {
       java.nio.file.Files.delete(evLink)
       java.nio.file.Files.delete(evDir)
     }
-    val (fmgFirst, fmgMin) = firstAndMin(5)(fmgwsEpisode())
+    // fmgws is the last probe reading the 5-row source dir
+    val (fmgFirst, fmgMin) = try firstAndMin(5)(fmgwsEpisode()) finally
+      org.apache.spark.network.util.JavaUtils.deleteRecursively(srcDir.toFile)
 
     // --- 4. the adjudicated tail: measured quanta + residual --------------
     val tail = sys.env.get("SPARK_GRAFT_FLOOR_QUERIES")

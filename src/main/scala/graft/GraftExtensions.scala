@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 import graft.functions._
-import graft.plans.{BucketHistogramStrategy, RewritePercentileAgg, RewriteTopKWindow, TopKStrategy}
+import graft.plans.{RewritePercentileAgg, RewriteTopKWindow, TopKStrategy}
 
 /** The one table of every custom Catalyst piece in this library, and its
   * two installers, `apply` (the session extension) and `register`:
@@ -25,13 +25,12 @@ import graft.plans.{BucketHistogramStrategy, RewritePercentileAgg, RewriteTopKWi
   * }}}
   *
   * The pieces:
-  *  - planner strategies: `TopKStrategy` (the [[graft.plans.TopKPerGroup]]
-  *    partial/final heap operator) and `BucketHistogramStrategy` (the
-  *    single-pass [[graft.plans.BucketHistogram]]);
+  *  - planner strategy: `TopKStrategy` (the [[graft.plans.TopKPerGroup]]
+  *    partial/final heap operator);
   *  - optimizer rules: `RewriteTopKWindow` (row_number-then-filter top-N
   *    onto TopKPerGroup) and `RewritePercentileAgg` (ascending dyadic
-  *    PERCENTILE_CONT onto the PercentileCont reconstruction, whose
-  *    multi-column batches plan through BucketHistogramStrategy);
+  *    PERCENTILE_CONT onto the PercentileCont reconstruction, which plans
+  *    with Spark's own operators and `sortable_double_bits`);
   *  - catalog functions, visible to `spark.sql`, `expr` and
   *    `DESCRIBE FUNCTION`: `cosine_sim`, `long_dot_prefix`, `jaro_winkler`,
   *    `ngrams`, `char_grams`, `sortable_double_bits`.
@@ -49,7 +48,7 @@ object GraftExtensions {
   type FunctionDescriptor =
     (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
-  val strategies: Seq[SparkStrategy] = Seq(TopKStrategy, BucketHistogramStrategy)
+  val strategies: Seq[SparkStrategy] = Seq(TopKStrategy)
 
   val rules: Seq[Rule[LogicalPlan]] = Seq(RewriteTopKWindow, RewritePercentileAgg)
 

@@ -1,8 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.functions.Exact._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -19,76 +17,47 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("a1_pricing_summary")(spark, "/root/testdata/sf0.001")
 
+  /** Every query family, in the order their maps are merged. */
+  val families: Seq[QueryFamily] = Seq(
+    operators.CsvOps,
+    operators.OrcOps,
+    operators.SinkOps,
+    operators.ReshapeOps,
+    operators.ExtendedOps,
+    operators.BreadthOps,
+    operators.BucketedOps,
+    operators.DepthOps,
+    operators.SamplingOps,
+    operators.CompletionOps,
+    operators.CurationOps,
+    operators.GraphOps,
+    operators.StatOps,
+    operators.RelevanceOps,
+    operators.LayoutOps,
+    operators.SketchOps,
+    operators.IndexOps,
+    operators.SessionScaleOps,
+    operators.GovernanceOps,
+    operators.LinkageOps,
+    operators.ScanFilterOps,
+    operators.AggOps,
+    operators.JoinOps,
+    operators.WindowSortOps,
+    functions.ScalarOps,
+    ops.TextOps,
+    ops.DedupOps,
+    ops.SimilarityOps,
+    ops.MultimodalOps,
+    streaming.StreamingOps,
+    streaming.StatefulSessionize,
+    TlcDemo,
+    TlcScaledDemo)
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    operators.CsvOps.queries ++
-    operators.OrcOps.queries ++
-    operators.SinkOps.queries ++
-    operators.ReshapeOps.queries ++
-    operators.ExtendedOps.queries ++
-    operators.BreadthOps.queries ++
-    operators.BucketedOps.queries ++
-    operators.DepthOps.queries ++
-    operators.SamplingOps.queries ++
-    operators.CompletionOps.queries ++
-    operators.CurationOps.queries ++
-    operators.GraphOps.queries ++
-    operators.StatOps.queries ++
-    operators.RelevanceOps.queries ++
-    operators.LayoutOps.queries ++
-    operators.SketchOps.queries ++
-    operators.IndexOps.queries ++
-    operators.SessionScaleOps.queries ++
-    operators.GovernanceOps.queries ++
-    operators.LinkageOps.queries ++
-    operators.ScanFilterOps.queries ++
-    operators.AggOps.queries ++
-    operators.JoinOps.queries ++
-    operators.WindowSortOps.queries ++
-    functions.ScalarOps.queries ++
-    ops.TextOps.queries ++
-    ops.DedupOps.queries ++
-    ops.SimilarityOps.queries ++
-    ops.MultimodalOps.queries ++
-    streaming.StreamingOps.queries ++
-    streaming.StatefulSessionize.queries ++
-    TlcDemo.queries ++
-    TlcScaledDemo.queries
+    families.flatMap(_.queries).toMap
 
   /** For each key in queries, equivalent SQL runnable by DuckDB on the same
     * parquet tables. Omitted keys get a weaker rows-only check. */
-  def oracleSql: Map[String, String] =
-    operators.CsvOps.oracles ++
-    operators.OrcOps.oracles ++
-    operators.SinkOps.oracles ++
-    operators.ReshapeOps.oracles ++
-    operators.ExtendedOps.oracles ++
-    operators.BreadthOps.oracles ++
-    operators.BucketedOps.oracles ++
-    operators.DepthOps.oracles ++
-    operators.SamplingOps.oracles ++
-    operators.CompletionOps.oracles ++
-    operators.CurationOps.oracles ++
-    operators.GraphOps.oracles ++
-    operators.StatOps.oracles ++
-    operators.RelevanceOps.oracles ++
-    operators.LayoutOps.oracles ++
-    operators.SketchOps.oracles ++
-    operators.IndexOps.oracles ++
-    operators.SessionScaleOps.oracles ++
-    operators.GovernanceOps.oracles ++
-    operators.LinkageOps.oracles ++
-    operators.ScanFilterOps.oracles ++
-    operators.AggOps.oracles ++
-    operators.JoinOps.oracles ++
-    operators.WindowSortOps.oracles ++
-    functions.ScalarOps.oracles ++
-    ops.TextOps.oracles ++
-    ops.DedupOps.oracles ++
-    ops.SimilarityOps.oracles ++
-    ops.MultimodalOps.oracles ++
-    streaming.StreamingOps.oracles ++
-    streaming.StatefulSessionize.oracles ++
-    TlcDemo.oracles ++
-    TlcScaledDemo.oracles
+  def oracleSql: Map[String, String] = families.flatMap(_.oracles).toMap
 }

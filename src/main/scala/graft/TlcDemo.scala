@@ -14,9 +14,7 @@ import graft.tlc._
   * results on the 10-row fixtures (q06, q11–q14 HAVING thresholds), or
   * both; their semantics are value-asserted in AnalyticsSpec instead.
   */
-object TlcDemo {
-  type Q = (SparkSession, String) => DataFrame
-
+object TlcDemo extends graft.QueryFamily {
   private def fixtures(s: SparkSession) = {
     // Reuse the test fixtures' row values without depending on test scope:
     // standardize straight from small in-memory frames.

@@ -29,9 +29,7 @@ import graft.tlc._
   * second = f(day,zone,hour)), so Standardize's dropDuplicates(trip_id)
   * removes nothing and the SQL replay needs no dedup step.
   */
-object TlcScaledDemo {
-  type Q = (SparkSession, String) => DataFrame
-
+object TlcScaledDemo extends graft.QueryFamily {
   // ---- Spark-side generator -------------------------------------------
 
   private def base(s: SparkSession): DataFrame = baseN(s, 1)

@@ -14,9 +14,7 @@ import graft.functions.Exact._
   * the `generate_series` date spine (02_dimension_tables.sql:87), JSON
   * extraction, and the scalar-subquery-threshold pattern (14:70–79).
   */
-object ScalarOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object ScalarOps extends graft.QueryFamily {
   val queries: Map[String, Q] = Map(
     // F18: TEMPORAL BUCKETING battery — the three grains every rollup
     // pipeline floors to: sub-hour (15-min, via integer epoch division —

@@ -16,9 +16,7 @@ import graft.functions.Exact._
   * whose final merge holds a per-group value-count map in one task);
   * approximate percentile would not hash-match the oracle.
   */
-object AggOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object AggOps extends graft.QueryFamily {
   val queries: Map[String, Q] = Map(
     // A25: distinct counting via BITMAPS — the roaring-bitmap pattern that
     // replaces sort/hash-based COUNT(DISTINCT) at 100 TB: bucket the key

@@ -17,9 +17,7 @@ import graft.functions.Exact._
   * is a single declarative plan (Catalyst handles pushdown/pruning); the
   * range join broadcasts its tiny band table instead of shuffling the fact.
   */
-object BreadthOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object BreadthOps extends graft.QueryFamily {
   val queries: Map[String, Q] = Map(
     // A16: GROUP BY GROUPING SETS — arbitrary grouping-set list in one pass
     // (one shuffle; Spark expands sets map-side), with grouping() markers.

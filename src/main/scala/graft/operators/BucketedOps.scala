@@ -18,9 +18,7 @@ import graft.functions.Exact._
   * pure merge. PlanAuditSpec asserts the exchange-free plan; the gate query
   * checks the results match a plain join.
   */
-object BucketedOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object BucketedOps extends graft.QueryFamily {
   private val runId = new AtomicInteger(0)
 
   // b1's bucketed layout, written once per (session, source dir, buckets):

@@ -9,9 +9,7 @@ import graft.Tables
   * aggregates, the null-semantics function family (nullif / ifnull /
   * nvl2 / null-safe equality), and correlated LATERAL derived tables.
   */
-object CompletionOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object CompletionOps extends graft.QueryFamily {
   val queries: Map[String, Q] = Map(
     // U5: PRIORITY UNION — merging corpus snapshots where the newer drop
     // wins on key collision (the "latest snapshot wins" reconciliation

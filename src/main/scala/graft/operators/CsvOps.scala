@@ -17,9 +17,7 @@ import graft.Tables
   * the CSV hop so the round trip is bit-exact and the DuckDB oracle (which
   * never sees the CSV) hash-matches.
   */
-object CsvOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object CsvOps extends graft.QueryFamily {
   val queries: Map[String, Q] = Map(
     "s3_csv_roundtrip" -> { (s, d) =>
       val dir = Files.createTempDirectory("graft_csv_").toString

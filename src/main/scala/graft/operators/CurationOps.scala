@@ -19,9 +19,7 @@ import graft.functions.Exact.{davg, dsum, dsumOver}
   * hash-gated columns (ln/exp differ by ulps across engines — see tx6's
   * integer-scaled LM for the precedent).
   */
-object CurationOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object CurationOps extends graft.QueryFamily {
   private[graft] val JACCARD_T = 0.5
   private[graft] val CONTAIN_T = 0.6
 

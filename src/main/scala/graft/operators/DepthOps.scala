@@ -13,9 +13,7 @@ import graft.functions.Exact._
   * training-data pipeline needs), and partitioned-write + partition-pruned
   * read (the Spark replacement for the reference's date indexes at 100 TB).
   */
-object DepthOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object DepthOps extends graft.QueryFamily {
   // s5/s13's hive-layout table, laid out once per (session, source dir).
   private val partitionedEvents =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()

@@ -11,9 +11,7 @@ import graft.functions.Exact._
   * composition — window carry-forward, SURVEY §7.3 preference (a)), and
   * ROLLUP multi-level aggregation.
   */
-object ExtendedOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object ExtendedOps extends graft.QueryFamily {
   val queries: Map[String, Q] = Map(
     // J15: NULL-SAFE equi-join (<=>): dimension lookups where NULL is a
     // legitimate key ("unknown" bucket) must MATCH the dim's NULL row —

@@ -23,9 +23,7 @@ import graft.functions.Exact._
   * partials everywhere, one short double chain at the end, stableRound's
   * 1e-9 bias on every emitted ratio.
   */
-object GovernanceOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object GovernanceOps extends graft.QueryFamily {
   private val k = 5 // k-anonymity threshold
 
   val queries: Map[String, Q] = Map(

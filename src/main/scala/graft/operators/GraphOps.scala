@@ -41,9 +41,7 @@ import graft.functions.Exact.stableRound
   * part of the beyond-reference training-data pack (builder brief), sited
   * with dd7/dd12 (iterative min-label CC) as the weighted-centrality twin.
   */
-object GraphOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object GraphOps extends graft.QueryFamily {
   /** 1e12 — fixed-point scale for ranks (rank 1.0 = 1e12). */
   private val SCALE = 1000000000000L
   private[graft] val ITERS = 5

@@ -26,9 +26,7 @@ import graft.Tables
   * Reference scope: the reference has no index/sequence operators —
   * beyond-reference pack per the builder brief.
   */
-object IndexOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object IndexOps extends graft.QueryFamily {
   /** s18 probe predicate: o_custkey ∈ [PROBE_LO, PROBE_HI]. */
   private val PROBE_LO = 100L
   private val PROBE_HI = 200L

@@ -18,9 +18,7 @@ import graft.functions.Exact._
   * they are actually small. Fact⋈fact joins (qc_reversed_ts, j5) shuffle on
   * their keys and rely on AQE for skew handling.
   */
-object JoinOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object JoinOps extends graft.QueryFamily {
   val queries: Map[String, Q] = Map(
     // J14: SALTED JOIN — the manual skew cure when one join key is hot
     // enough to overwhelm a single reducer and AQE's skew splitting can't

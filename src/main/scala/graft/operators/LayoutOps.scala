@@ -33,9 +33,7 @@ import graft.functions.Exact._
   * story is single-node file rebuilds); beyond-reference pack per the
   * builder brief.
   */
-object LayoutOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object LayoutOps extends graft.QueryFamily {
   /** Compaction target size, bytes (n_chars stands in for file bytes). */
   private val TARGET = 8192L
   /** SNM neighborhood width (compare each record to W-1 successors). */

@@ -22,9 +22,7 @@ import graft.functions.Exact._
   * direction); sited with dd22 (SNM blocking) and qc_welch_ttest
   * (cohort statistics).
   */
-object LinkageOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object LinkageOps extends graft.QueryFamily {
   private val B = 32 // bootstrap replicates
 
   /** Blocked candidate pairs over documents: equi-join on

@@ -21,9 +21,7 @@ import graft.functions.Exact._
   * prove). The DuckDB oracle never sees the ORC hop; matching hashes prove
   * the round trip is lossless for the long/double/string columns involved.
   */
-object OrcOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object OrcOps extends graft.QueryFamily {
   private val staged = new ConcurrentHashMap[(SparkSession, String), String]()
 
   val queries: Map[String, Q] = Map(

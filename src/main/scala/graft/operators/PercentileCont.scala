@@ -48,9 +48,12 @@ import org.apache.spark.sql.functions._
   * Cost model: ONE stacked unpivot of the requested value columns feeds a
   * single QuantileRefine batch — 2 corpus passes total for ANY number of
   * percentile columns and fractions (vs 1 pass with corpus-sized task state
-  * for the builtin), plus group-proportional state work. Callers pay one
-  * extra join (group-keyed, AQE-broadcastable state) to attach the results
-  * to their main aggregate.
+  * for the builtin), plus group-proportional state work. The unpivot feeds
+  * each row to pass 1 once per value column, but pass 1's codegen hash
+  * aggregate combines them per (group, pcol, bucket) before its exchange,
+  * so the shuffle carries bucket rows, never corpus rows (pinned by
+  * PlanAuditSpec). Callers pay one extra join (group-keyed,
+  * AQE-broadcastable state) to attach the results to their main aggregate.
   */
 object PercentileCont {
 
@@ -100,23 +103,8 @@ object PercentileCont {
         s"h_${num}_$den" -> (s"((n - 1) * $num) DIV $den + 1 + " +
           s"(CASE WHEN ((n - 1) * $num) % $den > 0 THEN 1 ELSE 0 END)"))
     }
-    // r14 (verdict item 2, guide §2.3): with ≥2 distinct value columns the
-    // stacked pass-1 histogram multiplies the corpus rows flowing through
-    // the aggregate by the column count; BucketHist computes the identical
-    // bucket table in ONE pass (its scaladoc carries the equivalence
-    // argument). The stacked frame still feeds pass 2, whose generate is
-    // filtered against the bucket state before anything shuffles. With one
-    // value column the stack is a plain projection and the codegen hash
-    // aggregate is the faster pass-1 producer, so the stacked path stays.
-    val at =
-      if (valueCols.size >= 2 && df.sparkSession.conf
-            .get("spark.graft.percentile.bucketHist", "true") == "true") {
-        val hist = graft.plans.BucketHist.of(df, groupCols, valueCols, 48)
-        QuantileRefine.withHist(stacked, hist, groupCols :+ "pcol",
-          rankSpecs, manyGroups = manyGroups)
-      } else
-        QuantileRefine.atRankExprs(stacked, groupCols :+ "pcol",
-          rankSpecs, manyGroups = manyGroups)
+    val at = QuantileRefine.atRankExprs(stacked, groupCols :+ "pcol",
+      rankSpecs, manyGroups = manyGroups)
     // 3. pivot wide per group and rebuild the builtin's interpolation
     def pick(s: Spec, rid: String, c: Column): Column =
       max(when(col("pcol") === s.value && col("rid") === rid, c))

@@ -115,32 +115,6 @@ object QuantileRefine {
     require(values.schema("v").dataType == DoubleType,
       s"QuantileRefine buckets by double bit-prefix; got " +
         values.schema("v").dataType.simpleString)
-    graft.GraftExtensions.register(values.sparkSession)
-    val rows = values.filter(col("v").isNotNull && col("c") > 0)
-
-    // PASS 1: bit-prefix histogram — fixed key space, no range pre-pass
-    val hist = rows
-      .withColumn("b", expr(s"shiftright(sortable_double_bits(v), $bitShift)"))
-      .groupBy(groupCols.map(col) :+ col("b"): _*)
-      .agg(sum(col("c")).as("bc"), min(col("v")).as("blo"), max(col("v")).as("bhi"))
-    withHist(values, hist, groupCols, rankSpecs, rounds, buckets, manyGroups)
-  }
-
-  /** [[atRankExprs]] with a caller-supplied PASS-1 bucket table — the entry
-    * point for [[graft.plans.BucketHist]]'s single-pass multi-column
-    * histogram (r14): `hist` must be (groupCols…, b, bc, blo, bhi) with `b`
-    * = `shiftright(sortable_double_bits(v), bitShift)` over exactly the
-    * non-null positive-weight rows of `values`. Everything downstream of
-    * pass 1 (state windows, short-circuit, refinement rounds, pass-2 exact
-    * selection) is shared, so the two pass-1 producers cannot drift. */
-  private[graft] def withHist(
-      values: DataFrame,
-      hist: DataFrame,
-      groupCols: Seq[String],
-      rankSpecs: Seq[(String, String)],
-      rounds: Int = 0,
-      buckets: Int = 8192,
-      manyGroups: Boolean = false): DataFrame = {
     // ADVICE r13: the internal working columns are reserved — a group column
     // named like one would silently alias into the state expressions and
     // produce wrong results rather than an error.
@@ -148,9 +122,16 @@ object QuantileRefine {
     require(clash.isEmpty,
       s"QuantileRefine group columns collide with reserved internal names: " +
         s"${clash.mkString(", ")} (reserved: ${QuantileRefine.Reserved.mkString(", ")})")
+    graft.GraftExtensions.register(values.sparkSession)
     val g = groupCols.map(col)
     val perRid = (groupCols :+ "rid").map(col)
     val rows = values.filter(col("v").isNotNull && col("c") > 0)
+
+    // PASS 1: bit-prefix histogram — fixed key space, no range pre-pass
+    val hist = rows
+      .withColumn("b", expr(s"shiftright(sortable_double_bits(v), $bitShift)"))
+      .groupBy(g :+ col("b"): _*)
+      .agg(sum(col("c")).as("bc"), min(col("v")).as("blo"), max(col("v")).as("bhi"))
 
     // bucket table work (group-proportional, never corpus-sized): totals,
     // rank fan-out, cumulative weights, bucket location

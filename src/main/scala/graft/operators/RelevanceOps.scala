@@ -32,9 +32,7 @@ import graft.functions.Exact.stableRound
   * Reference scope: beyond-reference training-data operators (builder
   * brief); the reference pipeline has no retrieval/graph/DP surface.
   */
-object RelevanceOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object RelevanceOps extends graft.QueryFamily {
   /** Fixed audit query — three corpus terms with well-spread document
     * frequencies. A user-supplied query binds here identically. */
   private val QUERY = Seq("hash", "join", "vector")

@@ -18,9 +18,7 @@ import graft.functions.Exact._
   *   structs, tag maps) — flattened back to scalars so the DuckDB oracle
   *   compares plain columns.
   */
-object ReshapeOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object ReshapeOps extends graft.QueryFamily {
   val queries: Map[String, Q] = Map(
     "u4_unpivot" -> { (s, d) =>
       val wide = Tables.orders(s, d)

@@ -13,9 +13,7 @@ import graft.Tables
   * Both operators are pure map-side projections + one shuffle for the
   * stratified rank.
   */
-object SamplingOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object SamplingOps extends graft.QueryFamily {
   /** 28-bit md5-prefix hash of the salted key — same recipe as the MinHash
     * base hash (md5 is bit-identical in both engines). */
   private def keyHash(salt: String) = expr(

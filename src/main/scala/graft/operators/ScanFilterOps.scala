@@ -15,9 +15,7 @@ import graft.functions.Exact._
   * Catalyst expressions so predicate pushdown + column pruning reach the
   * parquet scan (verified via `.explain`: PushedFilters / ReadSchema).
   */
-object ScanFilterOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object ScanFilterOps extends graft.QueryFamily {
   val queries: Map[String, Q] = Map(
     // S1/S2: projection+filter pushed down to the parquet scan.
     "s1_scan_pushdown" -> { (s, d) =>

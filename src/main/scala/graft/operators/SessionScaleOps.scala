@@ -12,9 +12,7 @@ import graft.functions.Exact._
   * sketch-based approximate aggregates (the 100 TB alternative to exact
   * COUNT DISTINCT / percentile when error tolerance allows).
   */
-object SessionScaleOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object SessionScaleOps extends graft.QueryFamily {
   private val GAP_MIN = 30 // session gap threshold, minutes
 
   val queries: Map[String, Q] = Map(

@@ -27,9 +27,7 @@ import graft.tlc.RawLoader
   *   second overwrite only the rebuilt rows exist. The partition-level
   *   incremental variant is Aggregations.rebuildDates (AnalyticsSpec).
   */
-object SinkOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object SinkOps extends graft.QueryFamily {
   /** Spark → SQL type-name canonicalization for the schema probe (the
     * names DuckDB's DESCRIBE prints for the same parquet files). */
   private def sqlTypeName(dt: DataType): String = dt match {

@@ -32,9 +32,7 @@ import graft.functions.Exact._
   * partial MAX/SUM, one exchange of constant-size state (256 registers /
   * d·w cells), driver never sees row data.
   */
-object SketchOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object SketchOps extends graft.QueryFamily {
   /** Count-Min geometry: 4 rows × 64 columns. */
   private val CM_D = 4
   private val CM_W = 64

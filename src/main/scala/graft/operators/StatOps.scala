@@ -33,7 +33,7 @@ import graft.functions.Exact._
   * (builder brief), sited with qc_drift_chi2 (distribution drift) as the
   * column-level statistical audit family.
   */
-object StatOps {
+object StatOps extends graft.QueryFamily {
 
   /** Embeddings on the exact integer grid, SHIFTED non-negative (+4e6) so
     * truncating integer division is floor division in both engines — the
@@ -106,7 +106,6 @@ object StatOps {
        c1 AS (SELECT a1.cell, iu.dim,
                      CAST((2 * SUM(iu.x) + COUNT(*)) // (2 * COUNT(*)) AS BIGINT) AS c
               FROM a1 JOIN iu ON iu.vec_id = a1.vec_id GROUP BY 1, 2)"""
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // F20: Pearson correlation per group, exact-sum formulation.

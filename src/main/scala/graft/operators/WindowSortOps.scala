@@ -14,9 +14,7 @@ import graft.functions.Exact._
   * content hashes (see SURVEY.md §7.4 risk 3). Top-k uses orderBy+limit so
   * Spark plans TakeOrderedAndProject (no full sort/collect of the input).
   */
-object WindowSortOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object WindowSortOps extends graft.QueryFamily {
   val queries: Map[String, Q] = Map(
     // W1: ROW_NUMBER over a real partition (standardize.py:182 re-expressed).
     "w1_row_number" -> { (s, d) =>

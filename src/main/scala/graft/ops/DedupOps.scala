@@ -20,9 +20,7 @@ import graft.Tables
   * join/search systems (ICDE'22 compressed-index similarity join; EDBT'20
   * incremental top-k similarity search).
   */
-object DedupOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object DedupOps extends graft.QueryFamily {
   private val K = 16     // minhashes per doc
   private val BANDS = 4  // 4 bands × 4 rows
   private val ROWS = K / BANDS

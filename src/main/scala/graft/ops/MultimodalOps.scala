@@ -18,9 +18,7 @@ import graft.Tables
   * `mapInPandas` batch), and a partition count that scales with input splits
   * rather than row count.
   */
-object MultimodalOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object MultimodalOps extends graft.QueryFamily {
   /** Deterministic fake "decode" — replace with a real media decoder. */
   private[ops] def decodeStub(payload: Array[Byte]): (Long, Long, String, Long) = {
     val md = MessageDigest.getInstance("MD5")

@@ -19,9 +19,7 @@ import graft.{GraftExtensions, Tables}
   * of per-element interpreted lambdas). Outputs round to 4 digits
   * (cross-engine accumulation-order tolerance); ranking uses the raw value.
   */
-object SimilarityOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object SimilarityOps extends graft.QueryFamily {
   private val PLANES = 8          // total hyperplanes
   private val TABLES = 2          // independent LSH tables…
   private val ROWS_PER_TABLE = 4  // …of 4 bits (16 buckets) each

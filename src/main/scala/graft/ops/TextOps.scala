@@ -14,9 +14,7 @@ import graft.{GraftExtensions, Tables}
   * whole-stage codegen and scales linearly with document count; the only
   * shuffles are the final group-bys on the (tiny) dedup keys.
   */
-object TextOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object TextOps extends graft.QueryFamily {
   /** Marker vocabularies for the language-ID heuristic. Deterministic and
     * mirrored verbatim in the DuckDB oracle. */
   private val markers: Seq[(String, Seq[String])] = Seq(

@@ -16,7 +16,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * state. Gap semantics match the batch sessionizer (`w6_sessionize`):
   * strictly-greater-than-gap starts a new session.
   */
-object StatefulSessionize {
+object StatefulSessionize extends graft.QueryFamily {
 
   final case class Event(user_id: Long, us: Long)
   final case class OpenSession(startUs: Long, lastUs: Long, n: Long)
@@ -88,7 +88,7 @@ object StatefulSessionize {
   }
 
   /** Gate query: per-user closed-session rollup. */
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, Q] = Map(
     "st3_stateful_sessions" -> { (s, d) =>
       run(s, d)
         .groupBy("user_id")

@@ -17,9 +17,7 @@ import graft.functions.Exact._
   * oracle can check (complete output mode — append would withhold windows
   * newer than the watermark).
   */
-object StreamingOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object StreamingOps extends graft.QueryFamily {
   private val runId = new AtomicInteger(0)
 
   /** Staged source dirs and their schema, memoized per (dataset, copies):

@@ -40,30 +40,20 @@ object Analytics {
 
   private def valid(t: TlcTables): DataFrame = t.fact.filter(col("is_valid") === true)
 
-  /** Eager checkpoint of a BOUNDED multi-consumer frame (r15; was
-    * persistScoped in r14). The lazy persist left the cache COLD for
-    * whichever consumer ran first — and the percentile batches' few-groups
-    * refine rounds run `coalesce(1)`, so each sequential round collapsed
-    * the whole corpus-scale lineage into ONE task while the other
-    * consumers raced the same cold cache with duplicate 32-task passes
-    * (tlc_pipeline_q14 profiled: stage-sum 23.3 s vs 5.8 s wall; 3.97 →
-    * 0.94 s with the checkpoint, q12 3.06 → 0.23 s). The checkpoint is a
-    * fresh RDD per query evaluation, so timed bench repeats still pay the
-    * full build — no cross-repeat reuse — and it is registered with
-    * [[graft.CacheScope]], so `drain` releases its blocks between repeats
-    * as it does the lazy shape's. Only calendar/dimension-bounded
-    * frames go through here (MBs at any corpus size), never corpus-sized
-    * ones.
-    *
-    * `spark.graft.tlc.eagerCheckpoint=false` restores the r14 lazy
-    * persistScoped shape — the A/B switch for re-measurement, and the hook
-    * PlanAuditSpec uses to audit the full (un-truncated) percentile
-    * lineage of these plans. */
-  private def ckpt(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf
-          .get("spark.graft.tlc.eagerCheckpoint", "true") == "true")
-      graft.CacheScope.checkpointScoped(df)
-    else graft.CacheScope.persistScoped(df)
+  /** Eager checkpoint of a BOUNDED multi-consumer frame: it is computed
+    * once, as its own job, before any consumer is planned. A lazy persist
+    * leaves the cache COLD for whichever consumer runs first — and the
+    * percentile batches' few-groups refine rounds run `coalesce(1)`, so
+    * each sequential round collapsed the whole corpus-scale lineage into
+    * ONE task while the other consumers raced the same cold cache with
+    * duplicate passes (tlc_pipeline_q14 profiled: stage-sum 23.3 s vs
+    * 5.8 s wall; 3.97 → 0.94 s with the checkpoint, q12 3.06 → 0.23 s).
+    * The checkpoint is a fresh RDD per query evaluation, so timed bench
+    * repeats still pay the full build — no cross-repeat reuse — and it is
+    * registered with [[graft.CacheScope]], so `drain` releases its blocks
+    * between repeats. Only calendar/dimension-bounded frames go through
+    * here (MBs at any corpus size), never corpus-sized ones. */
+  private def ckpt(df: DataFrame): DataFrame = graft.CacheScope.checkpointScoped(df)
 
   /** 01: top 20 zones by revenue (01_top_zones_by_revenue.sql). */
   def q01TopZonesByRevenue(t: TlcTables): DataFrame =
@@ -513,13 +503,11 @@ object Analytics {
     // dailyZone / withShare are CALENDAR × zone × service bounded (never
     // corpus-sized), but dailyZone has two consumers (totals + the share
     // join) and withShare has three (the quartile batch's two passes + the
-    // changes rollup) — without the scope-persists every consumer re-runs
+    // changes rollup) — without the checkpoints every consumer re-runs
     // the corpus-scale scan+aggregate underneath (q14 measured ~10
-    // one-pass equivalents at sf0.1; the persists cut the corpus work to
-    // the single pass the query actually needs).
-    // r15: eager ckpt, not lazy persistScoped — see ckpt's scaladoc (this
-    // query is the profiled case: five single-task corpus collapses + 8
-    // racing duplicates; 3.97 → 0.94 s).
+    // one-pass equivalents at sf0.1; materializing cuts the corpus work to
+    // the single pass the query actually needs). Eager, see ckpt's
+    // scaladoc (this query is its profiled case: 3.97 → 0.94 s).
     val dailyZone = ckpt(valid(t)
       .filter(col("price_per_mile").between(0.5, 50))
       .join(broadcast(t.dimZones), col("pickup_zone_id") === col("location_id"))

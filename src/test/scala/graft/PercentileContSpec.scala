@@ -85,4 +85,90 @@ class PercentileContSpec extends AnyFunSuite {
     assert(got("one") == ((5.5, 5.5)))
     assert(got("two") == ((1.25, 1.5)))
   }
+
+  /** Hostile multi-column mix: negatives, ±0.0, ties, nulls, subnormals,
+    * integers that exercise the CAST-to-double path, one group with an
+    * all-null column. */
+  private def hostile() = {
+    val rng = new scala.util.Random(7)
+    val rows = (1 to 5000).map { i =>
+      val g = s"g${i % 7}"
+      val a: java.lang.Double =
+        if (i % 11 == 0) null
+        else if (i % 5 == 0) 0.0
+        else if (i % 5 == 1) -0.0
+        else if (i % 3 == 0) 42.42 // heavy tie mass
+        else (rng.nextDouble() - 0.5) * 1e6
+      val b: java.lang.Double =
+        if (g == "g3") null // whole group null in this column
+        else if (i % 7 == 0) java.lang.Double.MIN_VALUE * i
+        else -rng.nextDouble() * 1e-3
+      val c: java.lang.Integer = if (i % 13 == 0) null else i % 97 - 48
+      (g, a, b, c)
+    }
+    rows.toDF("g", "va", "vb", "vc")
+  }
+
+  /** [[hostile]] plus NaN, +Inf and −Inf: a few in every group, shifting
+    * its ranks, and small groups whose quartiles land on them or
+    * interpolate between a finite value and an infinity. Spark orders NaN
+    * above +Inf; sortable_double_bits buckets NaN above +Inf and −Inf below
+    * every finite value. */
+  private def hostileNonFinite() = {
+    val (nan, inf) = (java.lang.Double.NaN, java.lang.Double.POSITIVE_INFINITY)
+    def row(g: String, a: java.lang.Double, b: java.lang.Double, c: Int) =
+      (g, a, b, java.lang.Integer.valueOf(c))
+    val spread = (1 to 60).map { i =>
+      val g = s"g${i % 7}"
+      row(g, Seq(nan, inf, -inf)(i % 3),
+        if (g == "g3") null else Seq(-inf, nan, inf)(i % 3), i % 5)
+    }
+    val small = Seq(
+      row("gi", -inf, nan, 1), row("gi", 1.0, nan, 2),
+      row("gi", inf, 2.0, 3), row("gi", nan, null, 4),
+      row("gn", nan, inf, 0), row("gn", nan, inf, 0),
+      row("gf", -inf, -inf, 5), row("gf", inf, -inf, 6))
+    hostile().unionByName((spread ++ small).toDF("g", "va", "vb", "vc"))
+  }
+
+  test("multi-column PercentileCont.group stays bit-identical to the builtin") {
+    val specs = Seq(
+      Spec("a_p25", "va", 1, 4),
+      Spec("a_med", "va", 2, 4),
+      Spec("b_med", "vb", 2, 4),
+      Spec("c_p75", "vc", 3, 4))
+    for ((input, df) <- Seq("hostile" -> hostile(),
+        "hostile + NaN/±Inf" -> hostileNonFinite())) {
+      val got = PercentileCont.group(df, Seq("g"), specs)
+        .orderBy("g").collect()
+      val want = Fixtures.withConf(spark, Fixtures.builtinPercentile) {
+        val builtin = df.groupBy("g").agg(
+            expr("percentile(va, 0.25)").as("a_p25"),
+            expr("percentile(va, 0.5)").as("a_med"),
+            expr("percentile(vb, 0.5)").as("b_med"),
+            expr("percentile(vc, 0.75)").as("c_p75"))
+          // group() emits only groups with >=1 non-null value in SOME column;
+          // the fixture guarantees that for every group, so row sets align.
+          .orderBy("g")
+        val plan = builtin.queryExecution.executedPlan.toString
+        assert(plan.contains("percentile("), s"reference must plan the builtin:\n$plan")
+        builtin.collect()
+      }
+      assert(got.length == want.length, input)
+      got.zip(want).foreach { case (g, w) =>
+        assert(g.getString(0) == w.getString(0), input)
+        for (i <- 1 to 4) {
+          val (gv, wv) = (g.isNullAt(i), w.isNullAt(i)) match {
+            case (true, true) => (0.0, 0.0)
+            case (false, false) => (g.getDouble(i), w.getDouble(i))
+            case _ => fail(s"$input: null mismatch at ${g.getString(0)} col $i")
+          }
+          // raw == on doubles: the reconstruction promises bit-parity
+          // (NaN only equals NaN)
+          assert(gv == wv || (gv.isNaN && wv.isNaN),
+            s"$input: group ${g.getString(0)} col $i: $gv != $wv")
+        }
+      }
+    }
+  }
 }

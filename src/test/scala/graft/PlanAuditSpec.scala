@@ -1,7 +1,16 @@
 package graft
 
+import org.apache.spark.ListenerBusAccess
+import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.functions.SortableDoubleBits
 import graft.tlc.Fixtures
 
 /** Physical-plan regression guards: the properties that make these operators
@@ -15,6 +24,23 @@ class PlanAuditSpec extends AnyFunSuite {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sfDir)
       .queryExecution.executedPlan.toString
+
+  /** The executed plan of every execution `body` runs in this session,
+    * including the eager checkpoints a query takes while it is built. */
+  private def executedPlans(body: => Unit): Seq[String] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      ListenerBusAccess.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    seen.toArray(Array.empty[String]).toSeq
+  }
 
   test("s1: filter is pushed to the parquet scan and columns are pruned") {
     val p = plan("s1_scan_pushdown")
@@ -788,29 +814,30 @@ class PlanAuditSpec extends AnyFunSuite {
       "tlc_agg_congestion", "tlc_agg_pricing", "a2_percentiles",
       "tlc_sql_q04", "tlc_sql_q05", "tlc_sql_q11",
       "tlc_sql_q12", "tlc_sql_q13", "tlc_sql_q14")
-    // r15: q12/q14 eagerly checkpoint their bounded frames, which truncates
-    // the percentile lineage out of the shipped physical plan — audit the
-    // FULL lineage via the r14 lazy-persist shape (the A/B switch), so this
-    // pin keeps seeing what those plans actually compute underneath.
-    spark.conf.set("spark.graft.tlc.eagerCheckpoint", "false")
-    try for (q <- gates) {
-      val p = plan(q)
-      assert(!p.contains("percentile("),
-        s"$q still plans the single-task value-map percentile:\n$p")
-      // r14: multi-column batches build pass 1 via the single-pass
-      // BucketHistogram operator (same sortable-bits bucket ids computed
-      // natively); single-column batches keep the codegen expression.
-      assert(p.contains("sortable_double_bits") || p.contains("BucketHistogram"),
-        s"$q must route percentiles through QuantileRefine's histogram:\n$p")
-    } finally spark.conf.unset("spark.graft.tlc.eagerCheckpoint")
-    // r14 pin (verdict item 2): the >=2-distinct-column batches must plan
-    // the SINGLE-pass bucket histogram, not the stacked ×cols unpivot,
-    // for pass 1.
+    // q12/q14 eagerly checkpoint their bounded frames while they are
+    // built, which truncates the percentile lineage out of the query's own
+    // plan; each checkpoint is an execution of its own, so auditing every
+    // execution keeps the full lineage in view.
+    for (q <- gates) {
+      val plans = executedPlans {
+        SparkEntry.queries(q)(spark, sfDir).collect()
+      }
+      graft.CacheScope.drain(blocking = true)
+      plans.foreach(p => assert(!p.contains("percentile("),
+        s"$q still plans the single-task value-map percentile:\n$p"))
+      assert(plans.exists(_.contains("sortable_double_bits")),
+        s"$q must route percentiles through QuantileRefine's histogram:\n" +
+          plans.mkString("\n"))
+    }
+    // the multi-column batches: the stacked unpivot feeds every column's
+    // rows to pass 1, so its bucket projection must sit under a partial
+    // hash aggregate below the pass-1 exchange — the shuffle then moves
+    // bucket rows, never corpus rows
     for (q <- Seq("tlc_agg_pricing", "tlc_agg_congestion", "tlc_pipeline_q11")) {
-      val p = plan(q)
-      assert(p.contains("BucketHistogram"),
-        s"$q (multi-column percentile batch) must plan pass 1 as the " +
-          s"single-pass BucketHistogram operator:\n$p")
+      val p = SparkEntry.queries(q)(spark, sfDir).queryExecution.executedPlan
+      val feeds = PlanAuditSpec.pass1Feeds(p)
+      assert(feeds.nonEmpty && feeds.forall(PlanAuditSpec.isPartialAgg),
+        s"$q (multi-column percentile batch) must combine pass 1 map-side:\n$p")
     }
     // the two agg-table builders not (yet) wired as their own gates
     val fixture = TlcScaledDemo.tables(spark)
@@ -915,21 +942,43 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("q14: the calendar-bounded dailyZone/withShare frames are " +
-    "materialized once, not once per consumer — eagerly checkpointed by " +
-    "default (r15), scope-persisted under the A/B switch (r14 shape)") {
-    // shipped default: every consumer reads the checkpointed RDD scan
+    "materialized once, not once per consumer — eagerly checkpointed") {
+    // every consumer reads the checkpointed RDD scan
     val p = plan("tlc_pipeline_q14")
     assert(p.contains("Scan ExistingRDD"),
       s"q14's bounded aggregates must be eagerly checkpointed:\n$p")
-    // A/B switch restores the r14 lazy persist (and gives the percentile
-    // audit above its un-truncated lineage)
-    spark.conf.set("spark.graft.tlc.eagerCheckpoint", "false")
-    try {
-      val lazyP = plan("tlc_pipeline_q14")
-      assert(lazyP.contains("InMemoryTableScan"),
-        s"q14's bounded aggregates must be scope-persisted under the A/B " +
-          s"switch:\n$lazyP")
-    } finally spark.conf.unset("spark.graft.tlc.eagerCheckpoint")
     graft.CacheScope.drain(blocking = true)
+  }
+}
+
+object PlanAuditSpec {
+
+  /** Every operator of `p` as planned, descending into cached-relation
+    * plans. An adaptive plan is read as AQE's initial plan: once it has
+    * run, AQE may have pruned a stage whose input was empty. */
+  def operators(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => operators(a.initialPlan)
+    case m: InMemoryTableScanExec => m +: operators(m.relation.cachedPlan)
+    case _ => p +: p.children.flatMap(operators)
+  }
+
+  /** The operators of the map-side stage rooted at `p`: down to the next
+    * shuffle or cached relation. */
+  private def stage(p: SparkPlan): Seq[SparkPlan] = p match {
+    case _: ShuffleExchangeLike | _: InMemoryTableScanExec => Nil
+    case _ => p +: p.children.flatMap(stage)
+  }
+
+  /** The operator feeding each shuffle whose map-side stage computes a
+    * `sortable_double_bits` bucket: QuantileRefine's pass-1 exchanges. */
+  def pass1Feeds(p: SparkPlan): Seq[SparkPlan] =
+    operators(p).collect { case e: ShuffleExchangeLike => e.child }
+      .filter(stage(_).exists(_.expressions.exists(
+        _.exists(_.isInstanceOf[SortableDoubleBits]))))
+
+  def isPartialAgg(p: SparkPlan): Boolean = p match {
+    case h: HashAggregateExec =>
+      h.groupingExpressions.nonEmpty && h.aggregateExpressions.forall(_.mode == Partial)
+    case _ => false
   }
 }

@@ -21,15 +21,21 @@ class RewritePercentileAggSpec extends AnyFunSuite {
   private lazy val spark: SparkSession = Fixtures.sparkSession()
 
   /** 1000 rows, 3 groups, nulls, a NULL group key, ties and near-unique
-    * doubles — the distribution classes PercentileContSpec exercises. */
-  private def corpus(): DataFrame = {
+    * doubles — the distribution classes PercentileContSpec exercises.
+    * `nonFinite` adds NaN, +Inf and −Inf to both value columns. */
+  private def corpus(nonFinite: Boolean = false): DataFrame = {
+    val special = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
     val rows = (1 to 1000).map { i =>
       val g = if (i % 7 == 0) null else s"g${i % 3}"
       val v: java.lang.Double =
         if (i % 11 == 0) null
+        else if (nonFinite && i % 19 == 0) special(i % 3)
         else if (i % 5 == 0) 1.25 // tie mass
         else i * 0.37 + (i % 13) * 1e-3
-      val w: java.lang.Double = if (i % 17 == 0) null else (i % 29) + 0.5
+      val w: java.lang.Double =
+        if (i % 17 == 0) null
+        else if (nonFinite && i % 23 == 0) special(i % 3)
+        else (i % 29) + 0.5
       Row(i.toLong, g, v, w)
     }
     spark.createDataFrame(
@@ -46,28 +52,33 @@ class RewritePercentileAggSpec extends AnyFunSuite {
   }
 
   /** Run `sql` twice — rule on vs off — and compare collected rows with
-    * exact equality (doubles compared bitwise via ==). */
-  private def checkBitIdentical(sql: String): Unit = {
-    corpus().createOrReplaceTempView("t")
-    spark.conf.set("spark.graft.sqlPercentileRewrite", "false")
-    val expected = spark.sql(sql).collect()
-    val builtinPlan = spark.sql(sql).queryExecution.executedPlan.toString
-    assert(builtinPlan.contains("percentile("),
-      s"control run must plan the builtin:\n$builtinPlan")
-    spark.conf.set("spark.graft.sqlPercentileRewrite", "true")
-    val actual = spark.sql(sql).collect()
-    val rewritten = spark.sql(sql).queryExecution.executedPlan.toString
-    assert(!rewritten.contains("percentile("),
-      s"rewrite did not fire:\n$rewritten")
-    assert(rewritten.contains("sortable_double_bits") ||
-      rewritten.contains("BucketHistogram"),
-      s"rewrite must route through QuantileRefine:\n$rewritten")
-    assert(actual.length == expected.length,
-      s"row count ${actual.length} != ${expected.length}")
-    actual.zip(expected).foreach { case (a, e) =>
-      assert(a == e, s"row mismatch:\n  rewrite: $a\n  builtin: $e")
+    * exact equality (doubles compared bitwise via ==), over the corpus and
+    * over the corpus with NaN/±Inf values. */
+  private def checkBitIdentical(sql: String): Unit =
+    for (nonFinite <- Seq(false, true)) {
+      corpus(nonFinite).createOrReplaceTempView("t")
+      spark.conf.set("spark.graft.sqlPercentileRewrite", "false")
+      val expected = spark.sql(sql).collect()
+      val builtinPlan = spark.sql(sql).queryExecution.executedPlan.toString
+      assert(builtinPlan.contains("percentile("),
+        s"control run must plan the builtin:\n$builtinPlan")
+      spark.conf.set("spark.graft.sqlPercentileRewrite", "true")
+      val actual = spark.sql(sql).collect()
+      val rewritten = spark.sql(sql).queryExecution.executedPlan
+      assert(!rewritten.toString.contains("percentile("),
+        s"rewrite did not fire:\n$rewritten")
+      // pass 1 buckets by sortable_double_bits and combines map-side: its
+      // exchange moves bucket rows, never corpus rows
+      val feeds = PlanAuditSpec.pass1Feeds(rewritten)
+      assert(feeds.nonEmpty && feeds.forall(PlanAuditSpec.isPartialAgg),
+        s"rewrite must route through QuantileRefine's histogram:\n$rewritten")
+      assert(actual.length == expected.length,
+        s"nonFinite=$nonFinite: row count ${actual.length} != ${expected.length}")
+      actual.zip(expected).foreach { case (a, e) =>
+        assert(a == e,
+          s"nonFinite=$nonFinite row mismatch:\n  rewrite: $a\n  builtin: $e")
+      }
     }
-  }
 
   test("grouped percentile mixed with other aggregates, inside arithmetic " +
     "— bit-identical, NULL group key kept (null-safe join)") {

@@ -2,48 +2,15 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Driver-contract integrity: the query map is assembled with ++ from many
-  * component maps — a duplicated key would silently shadow an operator and
-  * shrink coverage without any other failure. */
+/** SparkEntry integrity: the query map is merged from every family's
+  * map — a duplicated key would silently shadow an operator and shrink
+  * coverage without any other failure. */
 class SparkEntrySpec extends AnyFunSuite {
 
-  private val parts: Seq[(String, Map[String, _])] = Seq(
-    "CsvOps" -> operators.CsvOps.queries,
-    "OrcOps" -> operators.OrcOps.queries,
-    "SinkOps" -> operators.SinkOps.queries,
-    "ReshapeOps" -> operators.ReshapeOps.queries,
-    "ExtendedOps" -> operators.ExtendedOps.queries,
-    "BreadthOps" -> operators.BreadthOps.queries,
-    "BucketedOps" -> operators.BucketedOps.queries,
-    "DepthOps" -> operators.DepthOps.queries,
-    "SamplingOps" -> operators.SamplingOps.queries,
-    "CompletionOps" -> operators.CompletionOps.queries,
-    "CurationOps" -> operators.CurationOps.queries,
-    "GraphOps" -> operators.GraphOps.queries,
-    "StatOps" -> operators.StatOps.queries,
-    "RelevanceOps" -> operators.RelevanceOps.queries,
-    "LayoutOps" -> operators.LayoutOps.queries,
-    "SketchOps" -> operators.SketchOps.queries,
-    "IndexOps" -> operators.IndexOps.queries,
-    "SessionScaleOps" -> operators.SessionScaleOps.queries,
-    "GovernanceOps" -> operators.GovernanceOps.queries,
-    "LinkageOps" -> operators.LinkageOps.queries,
-    "ScanFilterOps" -> operators.ScanFilterOps.queries,
-    "AggOps" -> operators.AggOps.queries,
-    "JoinOps" -> operators.JoinOps.queries,
-    "WindowSortOps" -> operators.WindowSortOps.queries,
-    "ScalarOps" -> functions.ScalarOps.queries,
-    "TextOps" -> ops.TextOps.queries,
-    "DedupOps" -> ops.DedupOps.queries,
-    "SimilarityOps" -> ops.SimilarityOps.queries,
-    "MultimodalOps" -> ops.MultimodalOps.queries,
-    "StreamingOps" -> streaming.StreamingOps.queries,
-    "StatefulSessionize" -> streaming.StatefulSessionize.queries,
-    "TlcDemo" -> TlcDemo.queries,
-    "TlcScaledDemo" -> TlcScaledDemo.queries)
-
   test("no query key is shadowed across component maps") {
-    val all = parts.flatMap { case (owner, m) => m.keys.map(_ -> owner) }
+    val all = SparkEntry.families.flatMap { f =>
+      f.queries.keys.map(_ -> f.getClass.getName.stripSuffix("$"))
+    }
     val dups = all.groupBy(_._1).filter(_._2.size > 1)
     assert(dups.isEmpty, s"duplicated query keys: $dups")
     assert(SparkEntry.queries.size == all.size)
