@@ -11,10 +11,11 @@ import graft.functions.Exact._
   * (map-side combine is automatic for these algebraic aggregates — no extra
   * shuffle beyond the single group-key exchange). Percentiles are exact
   * interpolated PERCENTILE_CONT like the reference's
-  * (aggregations.py:33–50) — since r13 computed through
-  * [[PercentileCont]] (bit-identical to Spark's builtin `percentile`,
-  * whose final merge holds a per-group value-count map in one task);
-  * approximate percentile would not hash-match the oracle.
+  * (aggregations.py:33–50), written as Spark's `percentile` and planned by
+  * [[graft.plans.RewritePercentileAgg]] onto [[PercentileCont]]
+  * (bit-identical to the builtin, whose final merge holds a per-group
+  * value-count map in one task); approximate percentile would not
+  * hash-match the oracle.
   */
 object AggOps extends graft.QueryFamily {
   val queries: Map[String, Q] = Map(
@@ -66,25 +67,16 @@ object AggOps extends graft.QueryFamily {
     },
 
     // A2: exact interpolated percentiles (aggregations.py:33–50; 04:8–10).
-    // All three quantiles from ONE stacked PercentileCont batch — two
-    // mergeable passes total, no per-group value-count map in any task
-    // (the builtin percentile(array(...)) buffered every distinct price of
-    // a priority class in its final merge; 5 groups over near-unique
-    // prices = corpus/5 in one task at 100 TB).
+    // RewritePercentileAgg plans all three quantiles onto ONE stacked
+    // PercentileCont batch — two mergeable passes total, no per-group
+    // value-count map in any task (the builtin percentile buffers every
+    // distinct price of a priority class in its final merge; 5 groups over
+    // near-unique prices = corpus/5 in one task at 100 TB).
     "a2_percentiles" -> { (s, d) =>
-      val o = Tables.orders(s, d)
-      val main = o.groupBy("o_orderpriority").agg(count(lit(1)).as("n"))
-      val pcts = PercentileCont.group(o, Seq("o_orderpriority"), Seq(
-        PercentileCont.Spec("p25r", "o_totalprice", 1, 4),
-        PercentileCont.Spec("p50r", "o_totalprice", 2, 4),
-        PercentileCont.Spec("p75r", "o_totalprice", 3, 4)))
-      main.join(pcts, Seq("o_orderpriority"), "left")
-        .select(
-          col("o_orderpriority"),
-          round(col("p25r"), 4).as("p25"),
-          round(col("p50r"), 4).as("p50"),
-          round(col("p75r"), 4).as("p75"),
-          col("n"))
+      def p(q: Double) = round(percentile(col("o_totalprice"), lit(q)), 4)
+      Tables.orders(s, d)
+        .groupBy("o_orderpriority")
+        .agg(p(0.25).as("p25"), p(0.5).as("p50"), p(0.75).as("p75"), count(lit(1)).as("n"))
         .orderBy("o_orderpriority")
     },
 

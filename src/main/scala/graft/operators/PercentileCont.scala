@@ -6,7 +6,9 @@ import org.apache.spark.sql.functions._
 /** Exact interpolated percentiles (PERCENTILE_CONT / Spark's built-in
   * `percentile`) computed through [[QuantileRefine]]'s mergeable two-pass
   * histogram refinement — the scale-safe replacement for the builtin on the
-  * TLC fact paths (r13 verdict item 1).
+  * TLC fact paths (r13 verdict item 1). Library code asks for it by
+  * writing Spark's `percentile`; [[graft.plans.RewritePercentileAgg]] plans
+  * that onto [[group]].
   *
   * Why replace the builtin: Spark's `Percentile` is a
   * TypedImperativeAggregate whose final merge materializes a value → count
@@ -73,12 +75,15 @@ object PercentileCont {
     * Callers LEFT-join this onto their main aggregate on `groupCols`.
     *
     * NULL GROUP KEYS (ADVICE r13): a NULL group key groups normally HERE
-    * (GROUP BY treats NULL as a group, both engines), but the caller's
-    * equality left join drops it — a NULL-keyed group would come back with
-    * NULL percentiles while the builtin computes real values. Callers must
-    * either guarantee non-null group keys (every current caller filters or
-    * derives them non-null: zone joins, CASE buckets, literal groups) or
-    * join null-safely (`<=>` per key) if a nullable key ever appears.
+    * (GROUP BY treats NULL as a group, both engines), but an equality left
+    * join drops it — a NULL-keyed group would come back with NULL
+    * percentiles while the builtin computes real values. The three callers:
+    * [[graft.plans.RewritePercentileAgg]] (every library and SQL
+    * percentile) passes each nullable key as NULL-free
+    * `coalesce(k, default)` and `isnull(k)` columns;
+    * SessionScaleOps a13 and ScalarOps q2 group by keys that are never
+    * NULL (`o_orderpriority`, a literal). A new caller with a nullable key
+    * must join null-safely too.
     *
     * @param manyGroups passed through to QuantileRefine — set when the
     *                   group count grows with the data (zone×hour×date). */

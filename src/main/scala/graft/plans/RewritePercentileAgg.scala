@@ -16,22 +16,24 @@ import graft.operators.PercentileCont
 /** Optimizer rule: rewrite `PERCENTILE_CONT(p) WITHIN GROUP (ORDER BY v)`
   * aggregates (Spark's builtin `Percentile` / its `PercentileCont` sugar)
   * onto [[graft.operators.PercentileCont]]'s mergeable two-pass
-  * reconstruction — the SQL-entry-point counterpart of the r13 DataFrame
-  * rewiring (r14 verdict item 3).
+  * reconstruction. It is the one way this library asks for an exact
+  * percentile: the `sql/analytics` files reach it through SqlRunner, and
+  * the DataFrame library (tlc.Aggregations, tlc.Analytics, AggOps a2)
+  * writes `percentile(col, lit(p))` inside its own aggregates.
   *
   * Why: the builtin is a TypedImperativeAggregate whose final merge
   * materializes each group's DISTINCT-value count map in ONE task
   * (PercentileCont's scaladoc carries the full scale argument — with the
   * reference's low-cardinality group keys over near-unique double fares the
-  * buffer grows linearly with the corpus). A reference user's primary
-  * entry point is the .sql files run through `SqlRunner`, so the fix must
-  * live in the optimizer, not in hand-rewritten queries.
+  * buffer grows linearly with the corpus). Planning it in the optimizer
+  * keeps the reference user's SQL text unchanged and keeps the scale
+  * decision in one place for both entry points.
   *
   * Values are BIT-IDENTICAL, not approximately equal: the rewrite routes
-  * onto the same `PercentileCont.group` the DataFrame twins use, whose
-  * scaladoc + PercentileContSpec pin bit-parity with the builtin (same
-  * element selection, same interpolation expression tree, same
-  * short-circuits, same NULL semantics) for every dyadic fraction
+  * onto `PercentileCont.group`, whose scaladoc + PercentileContSpec pin
+  * bit-parity with the builtin (same element selection, same interpolation
+  * expression tree, same short-circuits, same NULL semantics, NULL group
+  * keys included) for every dyadic fraction
   * p = num / 2^k. Non-dyadic fractions, descending order, DISTINCT, FILTER
   * clauses and explicit frequency ≠ 1 are NOT rewritten — the builtin
   * stays, correctness over posture.
@@ -57,17 +59,18 @@ import graft.operators.PercentileCont
   * reconstruction falls back to the original aggregate: the rule can only
   * ever trade the builtin for the proven-equal plan, never fail a query.
   *
-  * `manyGroups` (QuantileRefine's scale mode) follows the DataFrame twins'
-  * choice: group counts that grow with the data span (zone × hour,
-  * year × month × company — ≥ 3 grouping columns) exchange the bucket
-  * table on the group key; small fixed key sets keep the single-partition
-  * state plan.
+  * `manyGroups` (QuantileRefine's scale mode): group counts that grow with
+  * the data span (zone × hour, year × month × company — ≥ 3 grouping
+  * columns) exchange the bucket table on the group key; small fixed key
+  * sets keep the single-partition state plan.
   *
   * Installed by [[graft.GraftExtensions]]: injected into the operator
   * optimization batch of sessions built with the extension, added through
   * `spark.experimental` by `GraftExtensions.register` elsewhere (SqlRunner
-  * calls it before running a file).
-  * Kill switch: `spark.graft.sqlPercentileRewrite=false`.
+  * calls it before running a file, tlc.Pipeline.derive and the Cli before
+  * building the warehouse).
+  * Kill switch: `spark.graft.sqlPercentileRewrite=false` sends both the SQL
+  * files and the DataFrame library back to the builtin.
   */
 object RewritePercentileAgg extends Rule[LogicalPlan] {
 
@@ -164,17 +167,24 @@ object RewritePercentileAgg extends Rule[LogicalPlan] {
     })
 
     // ---- percentile side: project keys + values, one PercentileCont batch.
-    // Group keys travel wrapped in a 1-field struct: struct equality treats
-    // NULL fields as equal, so the GROUP BY + equi-joins inside
-    // QuantileRefine (and the reattachment join below) keep NULL-keyed
-    // groups — the builtin computes real percentiles for a NULL group and
-    // a bare equality join would silently return NULL for it (the
-    // PercentileCont.group NULL-key contract, handled here at the caller).
-    val gNames = agg.groupingExpressions.indices.map(i => s"__pg$i")
+    // A NULL group key must survive the equi-joins inside QuantileRefine
+    // and the reattachment join below: the builtin computes real
+    // percentiles for a NULL group, and a bare equality join would silently
+    // return NULL for it (the PercentileCont.group NULL-key contract,
+    // handled here at the caller). A nullable key therefore travels as two
+    // NULL-free columns, coalesce(k, default) and isnull(k), which group
+    // and equi-join exactly like k under <=>. They stay plain columns: a
+    // struct-wrapped key is built and hashed per corpus row in pass 1.
+    val nullable = agg.groupingExpressions.map(_.nullable)
+    def nullFree(keys: Seq[Expression]): Seq[Expression] =
+      keys.zip(nullable).flatMap { case (k, n) =>
+        if (n) Seq(Coalesce(Seq(k, Literal.default(k.dataType))), IsNull(k)) else Seq(k)
+      }
+    val keyParts = nullFree(agg.groupingExpressions)
+    val gNames = keyParts.indices.map(i => s"__pg$i")
     val childDf = GraftSqlAccess.ofRows(spark, child)
     val prepCols: Seq[Column] =
-      agg.groupingExpressions.zip(gNames).map { case (g, n) =>
-        GraftSqlAccess.column(Alias(CreateStruct(Seq(g)), n)()) } ++
+      keyParts.zip(gNames).map { case (k, n) => GraftSqlAccess.column(Alias(k, n)()) } ++
       valueExprs.zip(valueExprs.indices.map(i => s"__pv$i")).map { case (v, n) =>
         GraftSqlAccess.column(Alias(v, n)()) }
     val prep0 = childDf.select(prepCols: _*)
@@ -254,9 +264,8 @@ object RewritePercentileAgg extends Rule[LogicalPlan] {
     val cond: Column =
       if (groupKeyAttrs.isEmpty) GraftSqlAccess.column(Literal(true))
       else GraftSqlAccess.column(
-        groupKeyAttrs.zip(pctGroups).map { case (l, r) =>
-          EqualNullSafe(CreateStruct(Seq(l)),
-            UnresolvedAttribute.quoted(r)): Expression
+        nullFree(groupKeyAttrs).zip(pctGroups).map { case (l, r) =>
+          EqualTo(l, UnresolvedAttribute.quoted(r)): Expression
         }.reduce(And))
     val out = mainDf.join(pct, cond, "left").select(finalCols: _*)
 

@@ -3,29 +3,27 @@ package graft.tlc
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.operators.PercentileCont
-import graft.operators.PercentileCont.Spec
-
 /** The five pre-computed aggregate tables
   * (reference: src/transformations/aggregations.py, plus the
   * declared-but-unpopulated agg_congestion_fee_impact from
   * 04_aggregate_tables.sql:152).
   *
   * Percentiles are EXACT interpolated PERCENTILE_CONT, like the reference's
-  * (aggregations.py:33–50), but computed through
-  * [[graft.operators.PercentileCont]] (QuantileRefine's mergeable two-pass
-  * histogram refinement) instead of Spark's built-in `percentile` — the
-  * builtin's final merge holds a per-group value-count map in ONE task, and
-  * on these tables the fares are near-unique doubles so that buffer grows
-  * linearly with the corpus (r13 verdict item 1; the bound class
-  * QuantileRefine retired for w12/a18/a26/a27/w16 in r12). The
-  * reconstruction is bit-identical to the builtin (PercentileContSpec), so
-  * every hash-gated output is unchanged. `percentile_approx` would not
-  * match a DuckDB oracle at all (SURVEY.md §2.4).
+  * (aggregations.py:33–50), written as Spark's `percentile` inside each
+  * table's own aggregate. [[graft.plans.RewritePercentileAgg]] plans them
+  * onto [[graft.operators.PercentileCont]] (QuantileRefine's mergeable
+  * two-pass histogram refinement) instead of the builtin, whose final merge
+  * holds a per-group value-count map in ONE task; on these tables the fares
+  * are near-unique doubles, so that buffer grows linearly with the corpus
+  * (r13 verdict item 1). The reconstruction is bit-identical to the builtin
+  * (PercentileContSpec), NULL group keys included: RawLoader null-fills a
+  * missing `PULocationID`, and the rule keeps NULL-keyed groups.
+  * `percentile_approx` would not match a DuckDB oracle at all (SURVEY.md
+  * §2.4).
   *
-  * Scale posture: each builder is one hash-aggregate over the fact plus one
-  * stacked QuantileRefine batch (two more mergeable passes), joined on the
-  * group key — the percentile state is group-proportional, never
+  * Scale posture: each table is one hash-aggregate over the fact plus the
+  * rule's stacked QuantileRefine batch (two more mergeable passes), joined
+  * on the group key — the percentile state is group-proportional, never
   * corpus-sized, and carries no broadcast hint (AQE broadcasts it while it
   * is actually small). The reference truncate-rebuilds (`DELETE FROM
   * agg_*`, aggregations.py:19,77,129,178); at 100 TB these are written
@@ -34,75 +32,52 @@ import graft.operators.PercentileCont.Spec
   */
 object Aggregations {
 
+  /** PERCENTILE_CONT(p) WITHIN GROUP (ORDER BY `c`). */
+  private[tlc] def pct(c: String, p: Double): Column = percentile(col(c), lit(p))
+
   private def share(cond: Column): Column =
     sum(when(cond, 1).otherwise(0)).cast("double") / count(lit(1))
 
   /** agg_pricing_by_zone_hour (aggregations.py:21–62). */
   def pricingByZoneHour(fact: DataFrame): DataFrame = {
-    val pre = fact
+    fact
       .filter(col("is_valid") === true && col("price_per_mile").isNotNull &&
         col("price_per_mile").between(0.5, 50))
       .withColumn("trip_date", col("pickup_date"))
-    val keys = Seq("service_type", "pickup_zone_id", "pickup_hour", "trip_date")
-    val main = pre
-      .groupBy(keys.map(col): _*)
+      .groupBy("service_type", "pickup_zone_id", "pickup_hour", "trip_date")
       .agg(
         count(lit(1)).as("trip_count"),
         sum(when(col("is_valid"), 1).otherwise(0)).as("valid_trip_count"),
         avg(col("trip_distance_miles")).as("avg_trip_distance"),
+        pct("trip_distance_miles", 0.5).as("median_trip_distance"),
         sum(col("trip_distance_miles")).as("total_trip_miles"),
         avg(col("trip_duration_minutes")).as("avg_trip_duration"),
+        pct("trip_duration_minutes", 0.5).as("median_trip_duration"),
         avg(col("price_per_mile")).as("avg_price_per_mile"),
         avg(col("price_per_minute")).as("avg_price_per_minute"),
         avg(col("total_fare")).as("avg_total_fare"),
+        pct("total_fare", 0.5).as("median_total_fare"),
         sum(col("total_fare")).as("total_revenue"),
         // CBD fee columns are stubbed to 0 pending the real column arriving
         // via schema drift (aggregations.py:53–55; SURVEY.md §7.4 risk 9).
         lit(0).as("trips_with_cbd_fee"),
         lit(0).as("avg_cbd_fee"),
-        lit(0).as("total_cbd_fee"))
-    // manyGroups: zone × hour × date grows with the data span — the
-    // percentile state must not collapse into one task (or a forced
-    // broadcast) at 100 TB.
-    val pcts = PercentileCont.group(pre, keys, Seq(
-      Spec("median_trip_distance", "trip_distance_miles", 2, 4),
-      Spec("median_trip_duration", "trip_duration_minutes", 2, 4),
-      Spec("p25_price_per_mile", "price_per_mile", 1, 4),
-      Spec("median_price_per_mile", "price_per_mile", 2, 4),
-      Spec("p75_price_per_mile", "price_per_mile", 3, 4),
-      Spec("p25_price_per_minute", "price_per_minute", 1, 4),
-      Spec("median_price_per_minute", "price_per_minute", 2, 4),
-      Spec("p75_price_per_minute", "price_per_minute", 3, 4),
-      Spec("median_total_fare", "total_fare", 2, 4)),
-      manyGroups = true)
-    main.join(pcts, keys, "left")
-      .select(
-        col("service_type"), col("pickup_zone_id"), col("pickup_hour"),
-        col("trip_date"),
-        col("trip_count"), col("valid_trip_count"),
-        col("avg_trip_distance"), col("median_trip_distance"),
-        col("total_trip_miles"),
-        col("avg_trip_duration"), col("median_trip_duration"),
-        col("avg_price_per_mile"),
-        col("avg_price_per_minute"),
-        col("avg_total_fare"), col("median_total_fare"),
-        col("total_revenue"),
-        col("trips_with_cbd_fee"), col("avg_cbd_fee"), col("total_cbd_fee"),
-        col("median_price_per_mile"), col("p25_price_per_mile"),
-        col("p75_price_per_mile"),
-        col("median_price_per_minute"), col("p25_price_per_minute"),
-        col("p75_price_per_minute"))
+        lit(0).as("total_cbd_fee"),
+        pct("price_per_mile", 0.5).as("median_price_per_mile"),
+        pct("price_per_mile", 0.25).as("p25_price_per_mile"),
+        pct("price_per_mile", 0.75).as("p75_price_per_mile"),
+        pct("price_per_minute", 0.5).as("median_price_per_minute"),
+        pct("price_per_minute", 0.25).as("p25_price_per_minute"),
+        pct("price_per_minute", 0.75).as("p75_price_per_minute"))
   }
 
   /** agg_hvfhv_take_rates (aggregations.py:79–114). */
   def hvfhvTakeRates(fact: DataFrame): DataFrame = {
-    val pre = fact
+    fact
       .filter(col("service_type") === "hvfhv" && col("is_valid") === true &&
         col("take_rate").isNotNull && col("take_rate").between(0, 1))
       .withColumn("trip_date", col("pickup_date"))
-    val keys = Seq("trip_date", "pickup_zone_id", "pickup_hour", "hvfhs_license_num")
-    val main = pre
-      .groupBy(keys.map(col): _*)
+      .groupBy("trip_date", "pickup_zone_id", "pickup_hour", "hvfhs_license_num")
       .agg(
         count(lit(1)).as("trip_count"),
         avg(col("trip_distance_miles")).as("avg_trip_distance"),
@@ -110,27 +85,15 @@ object Aggregations {
         avg(col("take_rate")).as("avg_take_rate"),
         stddev(col("take_rate")).as("stddev_take_rate"),
         avg(col("driver_pay")).as("avg_driver_pay"),
+        pct("driver_pay", 0.5).as("median_driver_pay"),
         sum(col("driver_pay")).as("total_driver_pay"),
         avg(col("total_fare") - col("driver_pay")).as("avg_platform_commission"),
         sum(col("total_fare") - col("driver_pay")).as("total_platform_commission"),
         avg(col("total_fare")).as("avg_total_fare"),
-        sum(col("total_fare")).as("total_revenue"))
-    val pcts = PercentileCont.group(pre, keys, Seq(
-      Spec("p25_take_rate", "take_rate", 1, 4),
-      Spec("median_take_rate", "take_rate", 2, 4),
-      Spec("p75_take_rate", "take_rate", 3, 4),
-      Spec("median_driver_pay", "driver_pay", 2, 4)),
-      manyGroups = true)
-    main.join(pcts, keys, "left")
-      .select(
-        col("trip_date"), col("pickup_zone_id"), col("pickup_hour"),
-        col("hvfhs_license_num"),
-        col("trip_count"), col("avg_trip_distance"), col("avg_trip_duration"),
-        col("avg_take_rate"), col("stddev_take_rate"),
-        col("avg_driver_pay"), col("median_driver_pay"), col("total_driver_pay"),
-        col("avg_platform_commission"), col("total_platform_commission"),
-        col("avg_total_fare"), col("total_revenue"),
-        col("median_take_rate"), col("p25_take_rate"), col("p75_take_rate"))
+        sum(col("total_fare")).as("total_revenue"),
+        pct("take_rate", 0.5).as("median_take_rate"),
+        pct("take_rate", 0.25).as("p25_take_rate"),
+        pct("take_rate", 0.75).as("p75_take_rate"))
       .filter(col("trip_count") >= 5)
   }
 
@@ -202,8 +165,7 @@ object Aggregations {
       .filter(col("pickup_date").between(
         lit("2024-12-01").cast("date"), lit("2025-01-31").cast("date")))
       .withColumn("time_period", when(col("pickup_date") < cutover, "before").otherwise("after"))
-    val keys = Seq("service_type", "pickup_zone_id", "time_period")
-    val main = scoped.groupBy(keys.map(col): _*)
+    val base = scoped.groupBy("service_type", "pickup_zone_id", "time_period")
       .agg(
         min(col("pickup_date")).as("start_date"),
         max(col("pickup_date")).as("end_date"),
@@ -211,20 +173,9 @@ object Aggregations {
         (count(lit(1)).cast("double") / countDistinct(col("pickup_date")))
           .as("avg_trips_per_day"),
         avg(col("total_fare")).as("avg_total_fare"),
-        avg(col("price_per_mile")).as("avg_price_per_mile"))
-    // period × zone × service is bounded (~1.6k groups), but manyGroups
-    // costs nothing here and keeps the whole TLC surface on one plan shape.
-    val pcts = PercentileCont.group(scoped, keys, Seq(
-      Spec("median_total_fare", "total_fare", 2, 4),
-      Spec("median_price_per_mile", "price_per_mile", 2, 4)),
-      manyGroups = true)
-    val base = main.join(pcts, keys, "left")
-      .select(
-        col("service_type"), col("pickup_zone_id"), col("time_period"),
-        col("start_date"), col("end_date"),
-        col("trip_count"), col("avg_trips_per_day"),
-        col("avg_total_fare"), col("median_total_fare"),
-        col("avg_price_per_mile"), col("median_price_per_mile"))
+        pct("total_fare", 0.5).as("median_total_fare"),
+        avg(col("price_per_mile")).as("avg_price_per_mile"),
+        pct("price_per_mile", 0.5).as("median_price_per_mile"))
       .withColumn("trips_with_cbd_fee", lit(0L))
       .withColumn("cbd_fee_adoption_rate", lit(0.0))
       .withColumn("avg_cbd_fee", lit(0.0))

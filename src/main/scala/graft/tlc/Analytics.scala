@@ -3,26 +3,24 @@ package graft.tlc
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.Exact.{davg, stableRound}
-import graft.operators.PercentileCont
-import graft.operators.PercentileCont.Spec
+import graft.functions.Exact.{davg, safeDiv, stableRound}
+import graft.tlc.Aggregations.pct
 
 /** The 14 analytics queries (reference: sql/analytics/01–14) as DataFrame
   * pipelines over the fact + dims (+ agg_market_share for q03).
   *
   * Every dim join is an explicit broadcast; top-k queries end in
   * orderBy+limit (TakeOrderedAndProject); percentile aggregates are exact
-  * interpolated PERCENTILE_CONT — computed through
-  * [[graft.operators.PercentileCont]] (bit-identical to Spark's builtin,
+  * interpolated PERCENTILE_CONT, written as Spark's `percentile` inside the
+  * query's own aggregate. [[graft.plans.RewritePercentileAgg]] plans them
+  * onto [[graft.operators.PercentileCont]] (bit-identical to the builtin,
   * PercentileContSpec) instead of the builtin `Percentile` aggregate, whose
   * final merge holds a per-group value-count map in one task; with q05's
   * three service-type groups or q04's two companies over near-unique double
   * fares, that buffer grows linearly with the corpus (r13 verdict item 1).
-  * The .sql twin entry point (SqlRunner) deliberately keeps the native
-  * PERCENTILE_CONT … WITHIN GROUP: those gates exist to prove a reference
-  * user's SQL runs UNCHANGED through Catalyst, so rewriting their text
-  * would defeat the gate — the library surface a user composes at scale is
-  * this file.
+  * The .sql twins that SqlRunner runs keep the reference's PERCENTILE_CONT
+  * … WITHIN GROUP text, and the same rule plans them, so both entry points
+  * share one plan family.
   */
 final case class TlcTables(
   fact: DataFrame,
@@ -34,9 +32,6 @@ final case class TlcTables(
   aggMarketShare: DataFrame)
 
 object Analytics {
-
-  private def safeDiv(num: Column, den: Column): Column =
-    when(den =!= 0, num / den)
 
   private def valid(t: TlcTables): DataFrame = t.fact.filter(col("is_valid") === true)
 
@@ -123,13 +118,12 @@ object Analytics {
 
   /** 04: HVFHV platform economics by company (04_hvfhv_platform_economics.sql).
     * Two company groups over EVERY hvfhv row — the worst case for the
-    * builtin percentile's one-task value map; the quartiles ride the
-    * stacked PercentileCont batch instead. */
+    * builtin percentile's one-task value map; the rule plans the quartiles
+    * onto one stacked PercentileCont batch instead. */
   def q04PlatformEconomics(t: TlcTables): DataFrame = {
-    val pre = valid(t)
+    valid(t)
       .filter(col("service_type") === "hvfhv" && col("take_rate").between(0, 1))
       .join(broadcast(t.dimHvfhsCompany), Seq("hvfhs_license_num"))
-    val main = pre
       .groupBy("company_name")
       .agg(
         count(lit(1)).as("total_trips"),
@@ -138,20 +132,10 @@ object Analytics {
         avg(col("total_fare") - col("driver_pay")).as("avg_platform_commission"),
         sum(col("total_fare") - col("driver_pay")).as("total_platform_revenue"),
         sum(col("driver_pay")).as("total_driver_pay"),
-        sum(col("total_fare")).as("total_gross_revenue"))
-    val pcts = PercentileCont.group(pre, Seq("company_name"), Seq(
-      Spec("p25_tr", "take_rate", 1, 4),
-      Spec("median_tr", "take_rate", 2, 4),
-      Spec("p75_tr", "take_rate", 3, 4)))
-    main.join(pcts, Seq("company_name"), "left")
-      .select(
-        col("company_name"), col("total_trips"), col("avg_take_rate_pct"),
-        col("avg_driver_pay"), col("avg_platform_commission"),
-        col("total_platform_revenue"), col("total_driver_pay"),
-        col("total_gross_revenue"),
-        (col("p25_tr") * 100).as("p25_take_rate_pct"),
-        (col("median_tr") * 100).as("median_take_rate_pct"),
-        (col("p75_tr") * 100).as("p75_take_rate_pct"))
+        sum(col("total_fare")).as("total_gross_revenue"),
+        (pct("take_rate", 0.25) * 100).as("p25_take_rate_pct"),
+        (pct("take_rate", 0.5) * 100).as("median_take_rate_pct"),
+        (pct("take_rate", 0.75) * 100).as("p75_take_rate_pct"))
       .orderBy(col("total_trips").desc)
   }
 
@@ -160,30 +144,21 @@ object Analytics {
     * PercentileCont (one group's distinct prices ≈ a third of the corpus
     * in the builtin's single merge task). */
   def q05PricingComparison(t: TlcTables): DataFrame = {
-    val pre = valid(t)
+    valid(t)
       .filter(col("price_per_mile").between(0.5, 50) &&
         col("price_per_minute").between(0.1, 10))
-    val main = pre
       .groupBy("service_type")
       .agg(
         count(lit(1)).as("trip_count"),
         avg(col("price_per_mile")).as("avg_price_per_mile"),
+        pct("price_per_mile", 0.5).as("median_price_per_mile"),
         avg(col("price_per_minute")).as("avg_price_per_minute"),
+        pct("price_per_minute", 0.5).as("median_price_per_minute"),
         avg(col("total_fare")).as("avg_total_fare"),
         avg(col("trip_distance_miles")).as("avg_trip_distance"),
         avg(col("trip_duration_minutes")).as("avg_trip_duration"),
         avg(col("tips")).as("avg_tips"),
         (safeDiv(avg(col("tips")), avg(col("total_fare"))) * 100).as("avg_tip_percentage"))
-    val pcts = PercentileCont.group(pre, Seq("service_type"), Seq(
-      Spec("median_price_per_mile", "price_per_mile", 2, 4),
-      Spec("median_price_per_minute", "price_per_minute", 2, 4)))
-    main.join(pcts, Seq("service_type"), "left")
-      .select(
-        col("service_type"), col("trip_count"),
-        col("avg_price_per_mile"), col("median_price_per_mile"),
-        col("avg_price_per_minute"), col("median_price_per_minute"),
-        col("avg_total_fare"), col("avg_trip_distance"),
-        col("avg_trip_duration"), col("avg_tips"), col("avg_tip_percentage"))
       .orderBy(col("trip_count").desc)
   }
 
@@ -306,45 +281,29 @@ object Analytics {
   def q11HvfhvVsTaxiPricing(t: TlcTables): DataFrame = {
     val taxi = col("service_type").isin("yellow", "green")
     val hv = col("service_type") === "hvfhv"
-    // the conditional medians ride PercentileCont's stacked batch: the
-    // when(...)-without-otherwise columns are NULL off-condition, and
+    // the conditional medians ride the rule's stacked PercentileCont batch:
+    // the when(...)-without-otherwise values are NULL off-condition, and
     // QuantileRefine's NULL handling gives exactly the builtin's
     // skip-NULLs semantics. zone × hour groups are FIXED-cardinality
     // (~6.4k), so per-group rows grow linearly with the corpus — the
     // textbook case for manyGroups (state stays off the driver) plus
     // no single-task value map.
-    val pre = valid(t)
+    def median(svc: Column, c: String): Column = percentile(when(svc, col(c)), lit(0.5))
+    val base = valid(t)
       .filter(col("price_per_mile").between(0.5, 50) &&
         col("price_per_minute").between(0.1, 10))
       .join(broadcast(t.dimZones), col("pickup_zone_id") === col("location_id"))
       .filter(col("borough") =!= "Unknown")
       .join(broadcast(t.dimTime), col("pickup_hour") === col("hour"))
-      .withColumn("taxi_ppm", when(taxi, col("price_per_mile")))
-      .withColumn("taxi_ppmin", when(taxi, col("price_per_minute")))
-      .withColumn("hv_ppm", when(hv, col("price_per_mile")))
-      .withColumn("hv_ppmin", when(hv, col("price_per_minute")))
-      .withColumn("pickup_zone", col("zone"))
-      .withColumn("hour_label", col("hour_12"))
-      .withColumn("is_peak_hour", col("is_rush_hour"))
-    val keys = Seq("pickup_zone", "borough", "hour", "hour_label", "is_peak_hour")
-    val counts = pre.groupBy(keys.map(col): _*)
+      .groupBy(col("zone").as("pickup_zone"), col("borough"), col("hour"),
+        col("hour_12").as("hour_label"), col("is_rush_hour").as("is_peak_hour"))
       .agg(
-        count(col("taxi_ppm")).as("taxi_trip_count"),
-        count(col("hv_ppm")).as("hvfhv_trip_count"))
-    val meds = PercentileCont.group(pre, keys, Seq(
-      Spec("taxi_median_price_per_mile", "taxi_ppm", 2, 4),
-      Spec("taxi_median_price_per_minute", "taxi_ppmin", 2, 4),
-      Spec("hvfhv_median_price_per_mile", "hv_ppm", 2, 4),
-      Spec("hvfhv_median_price_per_minute", "hv_ppmin", 2, 4)),
-      manyGroups = true)
-    val base = counts.join(meds, keys, "left")
-      .select(
-        col("pickup_zone"), col("borough"), col("hour"), col("hour_label"),
-        col("is_peak_hour"),
-        col("taxi_median_price_per_mile"), col("taxi_median_price_per_minute"),
-        col("taxi_trip_count"),
-        col("hvfhv_median_price_per_mile"), col("hvfhv_median_price_per_minute"),
-        col("hvfhv_trip_count"))
+        median(taxi, "price_per_mile").as("taxi_median_price_per_mile"),
+        median(taxi, "price_per_minute").as("taxi_median_price_per_minute"),
+        count(when(taxi, col("price_per_mile"))).as("taxi_trip_count"),
+        median(hv, "price_per_mile").as("hvfhv_median_price_per_mile"),
+        median(hv, "price_per_minute").as("hvfhv_median_price_per_minute"),
+        count(when(hv, col("price_per_mile"))).as("hvfhv_trip_count"))
       .filter(col("taxi_trip_count") >= 10 && col("hvfhv_trip_count") >= 10)
     val rel = safeDiv(
       col("hvfhv_median_price_per_mile") - col("taxi_median_price_per_mile"),
@@ -389,7 +348,15 @@ object Analytics {
       .filter(col("pickup_date").between(
         lit("2024-12-01").cast("date"), lit("2025-01-31").cast("date")))
       .withColumn("period", period)
-    val byPeriodMain = scoped
+    // period × service is ≤6 groups over EVERY scoped fare — the exact
+    // shape where the builtin percentile's one-task value map grows with
+    // the corpus; the rule plans the median onto PercentileCont instead.
+    // The ≤6-row result is CHECKPOINTED (r15, q14's lesson) because BOTH
+    // the before and after branches consume it: a lazy persist left the
+    // cache cold and the two branches raced it, each re-executing the whole
+    // two-pass refinement over the fact; the eager checkpoint materializes
+    // the ≤6 rows once at full parallelism.
+    val byPeriod = ckpt(scoped
       .groupBy("period", "service_type")
       .agg(
         count(lit(1)).as("trip_count"),
@@ -401,19 +368,8 @@ object Analytics {
         davg(col("surcharges")).as("avg_surcharges"),
         davg(when(col("service_type") === "hvfhv", col("driver_pay"))).as("avg_driver_pay"),
         (davg(when(col("service_type") === "hvfhv", col("take_rate"))) * 100)
-          .as("avg_take_rate_pct"))
-    // period × service is ≤6 groups over EVERY scoped fare — the exact
-    // shape where the builtin percentile's one-task value map grows with
-    // the corpus; the median rides PercentileCont instead. The ≤6-row
-    // result is CHECKPOINTED (r15, q14's lesson) because BOTH the before
-    // and after branches consume it: a lazy persist left the cache cold
-    // and the two branches raced it, each re-executing the whole two-pass
-    // refinement over the fact; the eager checkpoint materializes the
-    // ≤6 rows once at full parallelism.
-    val byPeriod = ckpt(byPeriodMain.join(
-      PercentileCont.group(scoped, Seq("period", "service_type"),
-        Seq(Spec("median_total_fare", "total_fare", 2, 4))),
-      Seq("period", "service_type"), "left"))
+          .as("avg_take_rate_pct"),
+        pct("total_fare", 0.5).as("median_total_fare")))
     val before = byPeriod.filter(col("period") === "Before Jan 5, 2025")
       .select(col("service_type"),
         col("trip_count").as("trips_before"),
@@ -470,29 +426,18 @@ object Analytics {
       .filter(col("service_type") === "hvfhv" && col("take_rate").between(0, 1))
       .join(broadcast(t.dimDate), col("pickup_date") === col("date_id"))
       .join(broadcast(t.dimHvfhsCompany), Seq("hvfhs_license_num"))
-    val keys = Seq("year", "month", "month_name", "company_name")
-    val main = pre.groupBy(keys.map(col): _*)
-      .agg(
-        count(lit(1)).as("trip_count"),
-        (avg(col("take_rate")) * 100).as("avg_take_rate"),
-        (stddev(col("take_rate")) * 100).as("stddev_take_rate"))
     // all three quartiles from ONE stacked PercentileCont batch (vs five
     // separate sort-aggs in the reference SQL); month × company groups
-    // grow with the data span → manyGroups.
-    val pcts = PercentileCont.group(pre, keys, Seq(
-      Spec("p25_tr", "take_rate", 1, 4),
-      Spec("median_tr", "take_rate", 2, 4),
-      Spec("p75_tr", "take_rate", 3, 4)),
-      manyGroups = true)
-    main.join(pcts, keys, "left")
-      .select(
-        col("year"), col("month"), col("month_name"), col("company_name"),
-        col("trip_count"),
-        (col("p25_tr") * 100).as("p25_take_rate"),
-        (col("median_tr") * 100).as("median_take_rate"),
-        (col("p75_tr") * 100).as("p75_take_rate"),
-        col("avg_take_rate"), col("stddev_take_rate"),
-        ((col("p75_tr") - col("p25_tr")) * 100).as("iqr_take_rate"))
+    // grow with the data span → the rule's manyGroups.
+    pre.groupBy("year", "month", "month_name", "company_name")
+      .agg(
+        count(lit(1)).as("trip_count"),
+        (pct("take_rate", 0.25) * 100).as("p25_take_rate"),
+        (pct("take_rate", 0.5) * 100).as("median_take_rate"),
+        (pct("take_rate", 0.75) * 100).as("p75_take_rate"),
+        (avg(col("take_rate")) * 100).as("avg_take_rate"),
+        (stddev(col("take_rate")) * 100).as("stddev_take_rate"),
+        ((pct("take_rate", 0.75) - pct("take_rate", 0.25)) * 100).as("iqr_take_rate"))
       .orderBy("year", "month", "company_name")
   }
 
@@ -531,11 +476,9 @@ object Analytics {
       .withColumn("d", datediff(col("pickup_date"), lit("1970-01-01").cast("date"))))
     // quartile dates of the filtered set (14:70–79's scalar subquery) — a
     // one-row broadcast, not a collect. The input is already the bounded
-    // date×zone×service aggregate, but PercentileCont keeps the whole TLC
+    // date×zone×service aggregate, but the rule keeps the whole TLC
     // percentile surface on one plan family (no builtin value-map merge).
-    val quartiles = PercentileCont.group(
-      withShare.withColumn("gq", lit(1)), Seq("gq"), Seq(
-        Spec("q25", "d", 1, 4), Spec("q75", "d", 3, 4))).drop("gq")
+    val quartiles = withShare.agg(pct("d", 0.25).as("q25"), pct("d", 0.75).as("q75"))
     val changes = withShare.crossJoin(broadcast(quartiles))
       .groupBy("zone", "borough", "service_type")
       .agg(
@@ -593,10 +536,9 @@ object Analytics {
       .limit(100)
   }
 
-  /** All 14 queries, keyed by their reference file number. */
-  /** Thunks, not DataFrames (r15): q12/q14 eagerly checkpoint their
-    * bounded frames at CONSTRUCTION time, so building all 14 plans eagerly
-    * would (a) run those jobs for callers that never touch q12/q14 and
+  /** All 14 queries, keyed by their reference file number. Thunks, not
+    * DataFrames (r15): q12/q14 eagerly checkpoint their bounded frames at
+    * CONSTRUCTION time, so building all 14 plans eagerly would (a) run those jobs for callers that never touch q12/q14 and
     * (b) let a memoized DataFrame smuggle the checkpointed build across
     * bench repeats — each caller constructs the query it runs, fresh. */
   def all(t: TlcTables): Map[String, () => DataFrame] = Map(

@@ -173,6 +173,9 @@ object Cli {
     * ingestion-log entries, the zones frame, the concurrent stage writer,
     * the dims stage and the closing log append. */
   private final class Run(spark: SparkSession, opts: Map[String, String]) {
+    // the percentile rule for the aggregates stage, which in
+    // runIncremental runs before Pipeline.derive registers it
+    graft.GraftExtensions.register(spark)
     val out: String = opts("out")
     val timings = new Timings
     def timed[T](stage: String)(body: => T): T = timings.timed(stage)(body)

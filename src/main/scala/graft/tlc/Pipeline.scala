@@ -54,9 +54,14 @@ object Pipeline {
     * query read the fact TABLE, not the raw-to-fact lineage): without this,
     * each of the 4 aggregate writes and 14 analytics writes re-derived
     * load → standardize from the raw files, a 19× repetition of the most
-    * expensive pass at warehouse scale. */
+    * expensive pass at warehouse scale.
+    *
+    * The aggregates and analytics write their percentiles as Spark's
+    * `percentile`; registering the graft pieces here gives a session built
+    * without [[graft.GraftExtensions]] the rule that plans them. */
   def derive(spark: SparkSession, fact: DataFrame, rawTaxiZones: DataFrame)
       : (TlcTables, Map[String, DataFrame], Map[String, () => DataFrame]) = {
+    graft.GraftExtensions.register(spark)
     val tables = TlcTables(
       fact = fact,
       dimZones = Dimensions.dimZones(rawTaxiZones),

@@ -3,6 +3,8 @@ package graft.tlc
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Exact.safeDiv
+
 /** Standardization of the three heterogeneous raw schemas into the unified
   * fact frame (reference: src/transformations/standardize.py).
   *
@@ -23,11 +25,6 @@ import org.apache.spark.sql.functions._
   * partitioned execution + spill replace it (SURVEY.md §2.6 T5).
   */
 object Standardize {
-
-  /** total / NULLIF(x, 0) — the reference's pervasive zero-division guard
-    * (standardize.py:57–59). */
-  private def safeDiv(num: Column, den: Column): Column =
-    when(den =!= 0, num / den)
 
   private def durationMinutes(pickup: Column, dropoff: Column): Column =
     (unix_timestamp(dropoff) - unix_timestamp(pickup)) / 60.0

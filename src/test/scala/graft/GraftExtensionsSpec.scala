@@ -135,6 +135,20 @@ class GraftExtensionsSpec extends AnyFunSuite {
     }
   }
 
+  test("the TLC library installs the percentile rule in a plain session itself") {
+    withPlainSession { s =>
+      val r = graft.tlc.Pipeline.run(s,
+        Fixtures.yellow(s), Fixtures.green(s), Fixtures.hvfhv(s), Fixtures.zones(s))
+      for ((name, df) <- Seq(
+          "agg_pricing_by_zone_hour" -> r.aggregates("agg_pricing_by_zone_hour"),
+          "04_hvfhv_platform_economics" -> r.analytics("04_hvfhv_platform_economics")())) {
+        val p = df.queryExecution.executedPlan.toString
+        assert(!p.contains("percentile(") && p.contains("sortable_double_bits"),
+          s"$name must plan its percentiles through RewritePercentileAgg:\n$p")
+      }
+    }
+  }
+
   test("SPARK_GRAFT_CONF parsing: pairs in order, '=' kept in values") {
     assert(Session.parseConf("a.b=1;x=k=v;no-equals;;c=") ==
       Seq("a.b" -> "1", "x" -> "k=v", "c" -> ""))

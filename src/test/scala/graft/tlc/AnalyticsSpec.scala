@@ -1,5 +1,6 @@
 package graft.tlc
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -126,5 +127,49 @@ class AnalyticsSpec extends AnyFunSuite {
   test("agg_market_share respects the >=10 trips HAVING (aggregations.py:162)") {
     // fixture zones have at most 2 trips/zone/day → empty after HAVING
     assert(result.aggregates("agg_market_share").count() == 0)
+  }
+
+  test("NULL pickup zones: agg-table percentiles equal the rule-off builtin") {
+    // RawLoader null-fills a missing PULocationID and is_valid never tests
+    // the zone, so a NULL-zone group is a real group. Six shifted copies of
+    // the fixture fact, zone NULL, hour 10, three days each side of the
+    // congestion-fee cutover: every hvfhs_license_num HV0003 group keeps
+    // the >= 5 trips of agg_hvfhv_take_rates' HAVING.
+    val nullZone = result.fact
+      .crossJoin(spark.range(6).withColumnRenamed("id", "k"))
+      .withColumn("pickup_zone_id", lit(null).cast("int"))
+      .withColumn("pickup_hour", lit(10))
+      .withColumn("pickup_date",
+        when(col("k") < 3, lit("2024-12-20")).otherwise(lit("2025-01-06")).cast("date"))
+      .withColumn("total_fare", col("total_fare") + col("k") * 0.37)
+      .withColumn("trip_distance_miles", col("trip_distance_miles") + col("k") * 0.1)
+      .withColumn("trip_duration_minutes", col("trip_duration_minutes") + col("k"))
+      .withColumn("price_per_mile", col("price_per_mile") + col("k") * 0.13)
+      .withColumn("price_per_minute", col("price_per_minute") + col("k") * 0.011)
+      .withColumn("driver_pay", col("driver_pay") + col("k") * 0.5)
+      .withColumn("take_rate", col("take_rate") * (lit(1.0) - col("k") * 0.01))
+      .drop("k")
+    val fact = result.fact.unionByName(nullZone)
+    val tables = Seq[(DataFrame => DataFrame, Seq[String])](
+      (Aggregations.pricingByZoneHour,
+        Seq("service_type", "pickup_zone_id", "pickup_hour", "trip_date")),
+      (Aggregations.hvfhvTakeRates,
+        Seq("trip_date", "pickup_zone_id", "pickup_hour", "hvfhs_license_num")),
+      (Aggregations.congestionFeeImpact, Seq("service_type", "pickup_zone_id", "time_period")))
+    for ((build, keys) <- tables) {
+      val pcts = build(fact).columns.filter(c => c.startsWith("median_") || c.matches("p\\d+_.*"))
+      def rows(df: DataFrame): Seq[Row] =
+        df.filter(col("pickup_zone_id").isNull).select((keys ++ pcts).map(col): _*)
+          .orderBy(keys.map(col): _*).collect().toSeq
+      val got = rows(build(fact))
+      val want = Fixtures.withConf(spark, Fixtures.builtinPercentile)(rows(build(fact)))
+      assert(got.nonEmpty && got.size == want.size, s"$keys: $got vs $want")
+      for ((g, w) <- got.zip(want); c <- pcts) {
+        val (gv, wv) = (g.getAs[java.lang.Double](c), w.getAs[java.lang.Double](c))
+        // the builtin computes a real value for every group here
+        assert(wv != null && gv == wv,
+          s"$keys $c of ${g.toSeq.take(keys.size)}: $gv vs rule-off $wv")
+      }
+    }
   }
 }
