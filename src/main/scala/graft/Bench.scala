@@ -5,42 +5,35 @@ package graft
   *
   * Methodology: each query runs once to warm, then adaptive min-of-N timed
   * runs (stop when two runs agree within 20% of the running min; cap 5
-  * runs / 30 s per query) and the MIN successful run is reported —
-  * tools/duckbase.py applies the IDENTICAL rule to the DuckDB side, so the
-  * committed Spark/DuckDB ratio compares steady-state to steady-state with
-  * symmetric sampling. Any multi-suite-repeat minima (BENCH_IDLE artifacts)
-  * must use the same repeat count on both engines. The warm run compiles the
-  * whole-stage codegen, JITs it, populates the session file-listing cache
-  * and amortizes one-time layout work (s5's hive layout, b1's bucketed
-  * tables) exactly as a long-lived production session would — cold-start
-  * dominated the naive numbers (dd5 7.0 s cold vs 0.69 s steady-state).
+  * runs / 30 s per query) and the MIN successful run is reported. The warm
+  * run compiles the whole-stage codegen, JITs it, populates the session
+  * file-listing cache and amortizes one-time layout work (s5's hive layout,
+  * b1's bucketed tables) exactly as a long-lived production session would —
+  * cold-start dominated the naive numbers (dd5 7.0 s cold vs 0.69 s
+  * steady-state).
   *
-  * Consumption is `collect()`, NOT `count()` (r13 honesty correction):
-  * duckbase.py consumes with `fetchall()`, i.e. every oracle pays its full
-  * select list, final sort, and result materialization — while `count()`
-  * let Catalyst prune everything that doesn't affect cardinality. That is
-  * not a rounding error: pruning turns a grouped aggregate battery into a
-  * keys-only Distinct (a1's decimal sums: 0.58 s counted vs 3.7 s computed
-  * at sf0.1), collapses chained aggregations outright
-  * (RemoveRedundantAggregates on keys-only aggregates — the BenchFloor v1
-  * chain measured a NEGATIVE per-barrier slope because count() reduced k
-  * dependent re-aggregations to ONE distinct over the composed key
-  * expression), and skips final ORDER BYs the oracle executes. Every r13+
-  * Spark number therefore pays exactly what the DuckDB number pays:
-  * compute the full result set, deliver it to the driver. Pre-r13
-  * BENCH_IDLE artifacts are count()-consumed and NOT comparable per-query
-  * without that caveat (BASELINE.md records the re-cut).
+  * Consumption is `collect()`, NOT `count()`: every query pays its full
+  * select list, final sort, and result materialization, as the DuckDB
+  * oracle's `fetchall()` does — while `count()` let Catalyst prune
+  * everything that doesn't affect cardinality. That is not a rounding
+  * error: pruning turns a grouped aggregate battery into a keys-only
+  * Distinct (a1's decimal sums: 0.58 s counted vs 3.7 s computed at
+  * sf0.1), collapses chained aggregations outright
+  * (RemoveRedundantAggregates on keys-only aggregates: a chain of k
+  * dependent re-aggregations measured a NEGATIVE per-barrier slope because
+  * count() reduced it to ONE distinct over the composed key expression),
+  * and skips final ORDER BYs. Every number therefore pays for computing
+  * the full result set and delivering it to the driver.
   */
 object Bench {
-  /** Session confs of every measurement main (Bench, BenchFloor,
-    * ProfileQuery, PlanDump), so their numbers and plans are comparable.
+  /** Session confs of every measurement main (Bench, ProfileQuery,
+    * PlanDump), so their numbers and plans are comparable.
     *  - The suite compiles far more than the default 100 cached generated
     *    classes; with the warm pass evicting the cache, every timed stage
     *    re-ran Janino (dd4: 20.5 s benched vs 4.2 s isolated in round 1).
-    *  - Base tables stay hot across the suite (see Tables.memo's scaladoc:
-    *    the DuckDB comparison times warmed runs against its buffer pool, so
-    *    cold per-query parquet decode would skew the ratio with format-
-    *    decoder cost that is not operator work). */
+    *  - Base tables stay hot across the suite (see Tables.memo's scaladoc):
+    *    cold per-query parquet decode would add format-decoder cost that is
+    *    not operator work. */
   val measurementConfs: Seq[(String, String)] = Seq(
     "spark.sql.codegen.cache.maxEntries" -> "4096",
     "spark.graft.cacheTables" -> "true")
@@ -64,11 +57,10 @@ object Bench {
     val results = names.map { n =>
       try SparkEntry.queries(n)(spark, sfDir).collect()
       catch { case _: Throwable => () }
-      // Evict query-local persists (ADVICE r11): CacheManager plan-dedup
-      // would otherwise serve every timed repeat from the warm run's
-      // InMemoryRelation, so the sample would exclude the scan+agg work the
-      // DuckDB comparable re-executes every run. Blocking (ADVICE r12): the
-      // eviction must FINISH before the next timed window opens.
+      // Evict query-local persists: CacheManager plan-dedup would otherwise
+      // serve every timed repeat from the warm run's InMemoryRelation, so
+      // the sample would exclude the query's own scan+agg work. Blocking:
+      // the eviction must FINISH before the next timed window opens.
       CacheScope.drain(blocking = true)
       // Pay the collector debt of the warm run (and of heavier neighbors)
       // OUTSIDE the timed window: round-3 timings showed multi-second GC
@@ -77,13 +69,12 @@ object Bench {
       // noise, not plan cost.
       System.gc()
       // ADAPTIVE min-of-N: the bench box runs the build driver concurrently,
-      // and round 3's artifact recorded 19 s for a plan that takes 0.5 s
-      // idle — min-of-2 was not enough chances to catch a quiet scheduler
+      // and one run recorded 19 s for a plan that takes 0.5 s idle —
+      // min-of-2 was not enough chances to catch a quiet scheduler
       // window. Keep timing until two runs agree within 20% of the running
       // min (steady-state reached), bounded by 5 runs / 30 s per query so a
       // genuinely heavy plan cannot blow the suite's wall clock. Idle, this
-      // degenerates to exactly the old min-of-2; DUCKBASE times steady-state
-      // the same way (tools/duckbase.py).
+      // degenerates to exactly the old min-of-2.
       // Only SUCCESSFUL runs contribute samples: a throwing query fails in
       // near-zero time, and timing it would report the broken query as the
       // suite's fastest instead of as an error. No-success queries get a -1
@@ -97,9 +88,9 @@ object Bench {
         val t0 = System.nanoTime()
         val ok = try { SparkEntry.queries(n)(spark, sfDir).collect(); true }
           catch { case e: Throwable =>
-            // ADVICE r13: a silently-swallowed failure recorded the query as
-            // a DNF with no trace while duckbase.py prints ERR lines — log
-            // the first failure's class and message to stderr, same shape.
+            // A silently-swallowed failure would record the query as a DNF
+            // with no trace: log the first failure's class and message to
+            // stderr.
             if (!loggedErr) {
               System.err.println(
                 s"ERR $n: ${e.getClass.getName}: ${e.getMessage}")

@@ -35,7 +35,7 @@ object TlcScaledDemo extends graft.QueryFamily {
   private def base(s: SparkSession): DataFrame = baseN(s, 1)
 
   /** `base` generalized to `copies` stacked replicas of the 22,320-trip
-    * pattern — the BENCH_E2E scale knob (tlc.RawGen). copies=1 reduces to
+    * pattern — tlc.RawGen's scale knob. copies=1 reduces to
     * the EXACT original expression tree (cpy=0, i0=i), so the hash-gated
     * fixture is untouched; copies=K reuses the day/zone/hour/service grid
     * per replica while the LCG noise runs over the FULL index (every copy
@@ -179,8 +179,8 @@ object TlcScaledDemo extends graft.QueryFamily {
   private[graft] def rawFixture(s: SparkSession)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = rawFixtureN(s, 1)
 
-  /** Raw frames at `copies`× the fixture scale (baseN's scaladoc) — the
-    * BENCH_E2E input generator (tlc.RawGen writes these to parquet). */
+  /** Raw frames at `copies`× the fixture scale (baseN's scaladoc); tlc.RawGen
+    * writes these to parquet. */
   private[graft] def rawFixtureN(s: SparkSession, copies: Int)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val b = baseN(s, copies)

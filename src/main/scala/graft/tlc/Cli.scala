@@ -5,13 +5,15 @@ import java.util.concurrent.{Callable, ExecutionException, Executors}
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{coalesce, lit, max}
 import org.apache.spark.sql.types.StructType
 
 /** Command-line pipeline runner (reference: src/cli.py `run-e2e` /
   * `run-analytics`):
   *
-  *   runMain graft.tlc.Cli --yellow p1 --green p2 --hvfhv p3 --zones p4 --out dir
+  *   runMain graft.tlc.Cli [run-e2e] --yellow p1 --green p2 --hvfhv p3 --zones p4 --out dir
+  *
+  * `run-e2e` is the default subcommand and may be left out; any other
+  * leading word that is not an option must name a subcommand.
   *
   * Loads each raw source with the drift-tolerant loader (drift reports go to
   * stderr), runs the full pipeline, and writes under --out:
@@ -92,15 +94,23 @@ object Cli {
     }
   }
 
+  /** Argument errors (a missing option, an unknown subcommand) are raised
+    * before any session starts. */
   def main(args: Array[String]): Unit = args.headOption match {
     case Some("run-analytics") => runAnalytics(args.drop(1))
     case Some("download") => runDownload(args.drop(1))
     case Some("run-incremental") =>
       val opts = requireArgs(args.drop(1), rawArgs: _*)
       withSession("graft-tlc-incremental")(runIncremental(_, opts))
-    case _ =>
-      val opts = requireArgs(args, rawArgs: _*)
-      withSession("graft-tlc-pipeline")(runPipeline(_, opts))
+    case Some("run-e2e") => runE2e(args.drop(1))
+    case Some(word) if !word.startsWith("--") =>
+      throw new IllegalArgumentException(s"unknown subcommand '$word'")
+    case _ => runE2e(args)
+  }
+
+  private def runE2e(args: Array[String]): Unit = {
+    val opts = requireArgs(args, rawArgs: _*)
+    withSession("graft-tlc-pipeline")(runPipeline(_, opts))
   }
 
   /** A write that failed inside a concurrent stage, named by its table. */
@@ -134,9 +144,8 @@ object Cli {
 
   /** Stage wall times of one run. Each is printed to stderr as
     * `[timing] stage=<name> seconds=<s>` when it ends and, with
-    * `--timings file.json`, written as one JSON object — the BASELINE.md
-    * "stage wall time on identical input" comparable (BENCH_E2E artifacts;
-    * reference point: docs/QUICK_START.md:19–34's 3–5 min sample pipeline).
+    * `--timings file.json`, written as one JSON object (reference point:
+    * docs/QUICK_START.md:19–34's 3–5 min sample pipeline).
     * A sub-timing breaks a stage down (the fold's per-query analytics); it
     * is printed and written like a stage but left out of `total`, because
     * its stage already contains it. Sub-timings end on writer threads, so
@@ -242,18 +251,11 @@ object Cli {
       .map { case (name, df) => name -> (() => df.write.mode("overwrite").parquet(s"$out/$name")) })
 
     /** The `finalize` stage, then `--timings`. The audit log is
-      * append-only; the sequence continues from the existing tail.
-      * max(load_sequence_id), not count() (ADVICE r12): a log with gaps or
-      * a partially-written append would otherwise mint duplicate sequence
-      * ids, breaking the append-only audit invariant. */
+      * append-only; the sequence continues from the existing tail
+      * ([[IngestionLog.lastSequenceId]]). */
     def finish(factRows: Long): Unit = {
       timed("finalize") {
-        val log = new org.apache.hadoop.fs.Path(s"$out/ingestion_log")
-        val base =
-          if (!log.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(log)) 0L
-          else try spark.read.parquet(log.toString)
-            .agg(coalesce(max("load_sequence_id"), lit(0L))).first().getLong(0)
-            catch { case _: Throwable => 0L }
+        val base = IngestionLog.lastSequenceId(spark, s"$out/ingestion_log")
         val entries = logEntries.toSeq.map(e => e.copy(sequenceId = e.sequenceId + base))
         IngestionLog.write(IngestionLog.build(spark, entries).coalesce(1), s"$out/ingestion_log")
       }
@@ -323,8 +325,8 @@ object Cli {
     *   runMain graft.tlc.Cli run-incremental --yellow p1 --green p2
     *     --hvfhv p3 --zones p4 --out existingWarehouse [--timings t.json]
     *
-    * Stages (each timed like runPipeline, so BENCH_E2E can put the
-    * incremental episode next to the truncate-rebuild of the same state):
+    * Stages (each timed like runPipeline, so the incremental episode can be
+    * set next to the truncate-rebuild of the same state):
     *
     *   - load/quality: the same drift-tolerant loaders + eager quality
     *     checks, over the new files only.
@@ -344,11 +346,9 @@ object Cli {
     *
     *   - analytics: the three percentile-surface queries (q04/q11/q13 —
     *     the QuantileRefine family) re-run concurrently over the FULL
-    *     folded warehouse, each sub-timed (r13 verdict item 7: the
-    *     stage-floor amortization claim, measured where it is supposed to
-    *     pay). They are query-time work, not state maintenance —
-    *     BENCH_E2E's maintenance_total excludes the analytics stage on both
-    *     sides, as in r12.
+    *     folded warehouse, each sub-timed, so their stage-floor
+    *     amortization is measured where it is supposed to pay. They are
+    *     query-time work, not state maintenance.
     *
     * Dynamic overwrite is a per-write option, never the session conf: the
     * writes of a stage run concurrently, and one restoring a session-wide
@@ -405,12 +405,11 @@ object Cli {
       if (dates.nonEmpty) Some(Pipeline.derive(spark, spark.read.parquet(s"$out/fact_trips"), run.zones))
       else None
     timed("dims") { derived.foreach { case (tables, _, _) => run.writeDims(tables) } }
-    // The QuantileRefine-family analytics over the FULL warehouse (r13
-    // verdict item 7): q04/q11/q13 are the percentile-surface queries the
-    // r12 perf-weak adjudication said amortize their stage floor once real
-    // work dominates — running them here, over the whole 16M-row fact the
-    // month was folded into, measures that claim inside the e2e episode.
-    // Each query is sub-timed so BENCH_E2E can show the family's share.
+    // The QuantileRefine-family analytics over the FULL warehouse:
+    // q04/q11/q13 are the percentile-surface queries expected to amortize
+    // their stage floor once real work dominates — running them here, over
+    // the whole fact the month was folded into, measures that inside the
+    // e2e episode. Each query is sub-timed to show the family's share.
     timed("analytics") {
       derived.foreach { case (tables, _, _) =>
         val analytics = Analytics.all(tables)

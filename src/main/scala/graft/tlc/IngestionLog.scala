@@ -1,6 +1,8 @@
 package graft.tlc
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, lit, max}
 
 /** Per-file load-audit sink (reference: src/database/loader.py:264–333 and
   * sql/ddl/01_raw_tables.sql:110–130 `ingestion_log`): every raw-file load
@@ -46,4 +48,23 @@ object IngestionLog {
   /** Append-only audit write — the log is history, never overwritten. */
   def write(log: DataFrame, path: String): Unit =
     log.write.mode("append").parquet(path)
+
+  /** The highest `load_sequence_id` in the log at `path`, where the next
+    * append continues. 0 when there is no log yet: the path is missing or
+    * holds no data files (only entries Spark's reader hides, such as
+    * `_SUCCESS` or `_temporary`). max, not count(): a log with gaps or a
+    * partially-written append would otherwise mint duplicate sequence ids.
+    * A log that exists but cannot be read fails loudly rather than
+    * restarting the sequence at 1, which would mint them too. */
+  def lastSequenceId(spark: SparkSession, path: String): Long = {
+    val log = new Path(path)
+    val fs = log.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val hasData = fs.exists(log) && fs.listStatus(log).exists { st =>
+      val name = st.getPath.getName
+      !name.startsWith("_") && !name.startsWith(".")
+    }
+    if (!hasData) 0L
+    else spark.read.parquet(path)
+      .agg(coalesce(max("load_sequence_id"), lit(0L))).first().getLong(0)
+  }
 }

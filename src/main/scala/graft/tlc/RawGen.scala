@@ -1,15 +1,13 @@
 package graft.tlc
 
-/** BENCH_E2E input generator: writes the scaled-fixture raw service files
+/** Warehouse input generator: writes the scaled-fixture raw service files
   * (TlcScaledDemo.rawFixtureN — `copies` stacked replicas of the hash-gated
-  * 22,320-trip pattern) to parquet, plus the zones dim, so the SAME files
-  * feed both `Cli run-e2e` (Spark) and `tools/duckbase_e2e.py` (the
-  * reference's own DuckDB engine path) for the BASELINE.md stage-wall-time
-  * comparable.
+  * 22,320-trip pattern) to parquet, plus the zones dim, as input for
+  * `Cli run-e2e` at any scale without a download.
   *
   *   runMain graft.tlc.RawGen <outDir> <copies> [shiftDays]
   *
-  * `shiftDays` (BENCH_E2E_r12's incremental-month episode) shifts every
+  * `shiftDays` (the incremental-month episode) shifts every
   * timestamp column forward, producing a LATER disjoint date window of the
   * same shape — the "new month of raw files" that `Cli run-incremental`
   * folds into an existing warehouse. Shifted files carry a distinct file

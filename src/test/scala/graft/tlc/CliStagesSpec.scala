@@ -6,7 +6,8 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Cli's stage machinery without a session: the concurrent writer each
-  * stage hands its tables to, and the `--timings` total. */
+  * stage hands its tables to, the `--timings` total, and the argument
+  * errors `main` raises before it starts one. */
 class CliStagesSpec extends AnyFunSuite {
 
   test("a failed write waits for its siblings, then names the failed table") {
@@ -77,5 +78,20 @@ class CliStagesSpec extends AnyFunSuite {
       """{"load": 1.000, "analytics_04_hvfhv_platform_economics": 1.500, """ +
       """"analytics_11_uber_lyft_vs_taxi_pricing": 1.250, "analytics": 2.000, """ +
       """"finalize": 0.250, "total": 3.250, "fact_rows": 7}""")
+  }
+
+  test("run-e2e names the default subcommand, so its options parse as options") {
+    val err = intercept[IllegalArgumentException] {
+      Cli.main(Array("run-e2e", "--out", "x"))
+    }
+    assert(err.getMessage.endsWith("missing arguments: --yellow --green --hvfhv --zones"),
+      err.getMessage)
+  }
+
+  test("an unknown subcommand is named, not reported as missing options") {
+    val err = intercept[IllegalArgumentException] {
+      Cli.main(Array("bogus", "--out", "x"))
+    }
+    assert(err.getMessage == "unknown subcommand 'bogus'", err.getMessage)
   }
 }

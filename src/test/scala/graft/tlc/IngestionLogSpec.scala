@@ -39,6 +39,23 @@ class IngestionLogSpec extends AnyFunSuite {
     assert(back.agg(max("load_sequence_id")).head().getLong(0) == 2L)
   }
 
+  test("lastSequenceId: 0 with no log, the max id of a written one") {
+    val root = java.nio.file.Files.createTempDirectory("graft_seq_")
+    assert(IngestionLog.lastSequenceId(spark, root.resolve("missing").toString) == 0L)
+    val empty = java.nio.file.Files.createDirectory(root.resolve("empty"))
+    java.nio.file.Files.createFile(empty.resolve("_SUCCESS"))
+    assert(IngestionLog.lastSequenceId(spark, empty.toString) == 0L)
+    val log = root.resolve("log").toString
+    IngestionLog.write(IngestionLog.build(spark, entries), log)
+    assert(IngestionLog.lastSequenceId(spark, log) == 2L)
+  }
+
+  test("lastSequenceId fails loudly on a log it cannot read, never restarts at 1") {
+    val log = java.nio.file.Files.createTempDirectory("graft_seq_bad_")
+    java.nio.file.Files.write(log.resolve("part-00000.parquet"), "not parquet".getBytes("UTF-8"))
+    intercept[Exception](IngestionLog.lastSequenceId(spark, log.toString))
+  }
+
   test("sha256 matches the NIST 'abc' vector and is chunk-size independent (validators.py:16–45)") {
     val f = java.nio.file.Files.createTempFile("graft_sha_", ".bin")
     java.nio.file.Files.write(f, "abc".getBytes("UTF-8"))
