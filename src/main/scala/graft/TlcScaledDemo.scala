@@ -193,15 +193,8 @@ object TlcScaledDemo extends graft.QueryFamily {
   def tables(s: SparkSession): TlcTables =
     tcache.computeIfAbsent(s, { _ =>
       val b = base(s)
-      val fact = Standardize.all(rawYellow(b), rawGreen(b), rawHvfhv(b)).persist()
-      TlcTables(
-        fact = fact,
-        dimZones = Dimensions.dimZones(rawZones(s)),
-        dimDate = Dimensions.dimDate(s),
-        dimTime = Dimensions.dimTime(s),
-        dimService = Dimensions.dimService(s),
-        dimHvfhsCompany = Dimensions.dimHvfhsCompany(s),
-        aggMarketShare = Aggregations.marketShare(fact))
+      Pipeline.tables(s,
+        Standardize.all(rawYellow(b), rawGreen(b), rawHvfhv(b)).persist(), rawZones(s))
     })
 
   private def analytics(s: SparkSession): Map[String, () => DataFrame] =

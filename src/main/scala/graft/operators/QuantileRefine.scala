@@ -22,11 +22,11 @@ import org.apache.spark.sql.types.DoubleType
   * materialization or shuffle. A batch of k quantiles over one column
   * costs exactly TWO passes over the rows:
   *
-  *   - PASS 1 buckets every value by the high `64 − bitShift` bits of its
+  *   - PASS 1 buckets every value by the high 16 bits of its
   *     [[SortableDoubleBits]] image — monotone by construction, and with a
-  *     FIXED key space (2^16 for the default shift of 48: sign + exponent
-  *     + 4 mantissa bits), so no min/max pre-pass is needed and the bucket
-  *     table is bounded at groups × 65536 rows REGARDLESS of the data.
+  *     FIXED key space (2^16: sign + exponent + 4 mantissa bits), so no
+  *     min/max pre-pass is needed and the bucket table is bounded at
+  *     groups × 65536 rows REGARDLESS of the data.
   *     One mergeable hash-agg (per-partition partials merge at the
   *     exchange, exactly like any SUM; no sort buffer anywhere).
   *   - On the bucket table: per-group totals n, the rank fan-out (one row
@@ -54,12 +54,6 @@ import org.apache.spark.sql.types.DoubleType
   *     exchanges on (group, rid), and sorts only the residual rows for
   *     the exact cumulative selection.
   *
-  * Optional extra `rounds` insert equal-width refinement passes between
-  * the two (interval shrinks ×`buckets` per round) for adversarial
-  * distributions that pile a corpus onto one binade-sixteenth; every such
-  * pass is the same mergeable-agg shape, and already-settled ranks skip
-  * the extra passes too.
-  *
   * NULL semantics (ADVICE r12): NULL values and non-positive weights are
   * dropped up front, matching the ordered-set builtins (percentile_disc /
   * percentile_cont ignore NULLs) — an unfiltered NULL would land in a NULL
@@ -80,6 +74,9 @@ object QuantileRefine {
   private[graft] val Reserved: Set[String] =
     Set("v", "c", "n", "rid", "b", "bc", "blo", "bhi", "cum", "lo", "hi", "r")
 
+  /** Pass-1 bucket = sortable bits >> BitShift: a 2^16 key space. */
+  private val BitShift = 48
+
   /** Values at weighted ranks, percentile_disc-style: for each group and
     * each `(rid, rankExpr)` spec, the smallest v whose cumulative weight
     * (over v ascending) reaches the 1-based rank `rankExpr(n)`.
@@ -89,11 +86,6 @@ object QuantileRefine {
     * @param rankSpecs  rid → SQL rank expression over the per-group column
     *                   `n` = Σc, e.g. `"med" -> "(n + 1) DIV 2"` for
     *                   percentile_disc(0.5).
-    * @param rounds     extra equal-width refinement rounds between the two
-    *                   passes (0 = none; each adds one corpus pass and
-    *                   shrinks the residual ×`buckets`).
-    * @param bitShift   pass-1 bucket = sortable bits >> bitShift; key space
-    *                   2^(64−bitShift).
     * @param manyGroups scale mode for group counts that GROW with the data
     *                   (zone × hour × date): bucket-table windows exchange
     *                   on the group key instead of collapsing to one
@@ -108,9 +100,6 @@ object QuantileRefine {
       values: DataFrame,
       groupCols: Seq[String],
       rankSpecs: Seq[(String, String)],
-      rounds: Int = 0,
-      buckets: Int = 8192,
-      bitShift: Int = 48,
       manyGroups: Boolean = false): DataFrame = {
     require(values.schema("v").dataType == DoubleType,
       s"QuantileRefine buckets by double bit-prefix; got " +
@@ -129,7 +118,7 @@ object QuantileRefine {
 
     // PASS 1: bit-prefix histogram — fixed key space, no range pre-pass
     val hist = rows
-      .withColumn("b", expr(s"shiftright(sortable_double_bits(v), $bitShift)"))
+      .withColumn("b", expr(s"shiftright(sortable_double_bits(v), $BitShift)"))
       .groupBy(g :+ col("b"): _*)
       .agg(sum(col("c")).as("bc"), min(col("v")).as("blo"), max(col("v")).as("bhi"))
 
@@ -166,40 +155,16 @@ object QuantileRefine {
       .select(g :+ col("rid") :+ (col("r") - (col("cum") - col("bc"))).as("r") :+
         col("blo").as("lo") :+ col("bhi").as("hi") :+ col("n"): _*))
 
-    // residual join: hint the broadcast only in few-groups mode
-    def attach(st: DataFrame): DataFrame =
-      rows.join(if (manyGroups) st else broadcast(st), groupCols)
-        .filter(col("v") >= col("lo") && col("v") <= col("hi"))
-
     // point-interval short-circuit: a settled rank's answer is `lo`
-    var live = state.filter(col("lo") < col("hi"))
-    var settled = state.filter(col("lo") >= col("hi"))
+    val live = state.filter(col("lo") < col("hi"))
+    val settled = state.filter(col("lo") >= col("hi"))
 
-    // optional equal-width refinement rounds (per rid — intervals diverge)
-    for (_ <- 1 to rounds) {
-      val bucketed = attach(live)
-        .withColumn("b",
-          least(lit(buckets - 1),
-            floor((col("v") - col("lo")) / (col("hi") - col("lo")) * buckets)
-              .cast("int")))
-        .groupBy(perRid :+ col("r") :+ col("n") :+ col("b"): _*)
-        .agg(sum(col("c")).as("bc"), min(col("v")).as("blo"), max(col("v")).as("bhi"))
-      val wRid = Window.partitionBy(perRid: _*).orderBy("b")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val refined = graft.CacheScope.persistScoped(
-        (if (manyGroups) bucketed else bucketed.coalesce(1))
-        .withColumn("cum", sum(col("bc")).over(wRid))
-        .filter(col("cum") >= col("r") && col("cum") - col("bc") < col("r"))
-        .select(g :+ col("rid") :+ (col("r") - (col("cum") - col("bc"))).as("r") :+
-          col("blo").as("lo") :+ col("bhi").as("hi") :+ col("n"): _*))
-      live = refined.filter(col("lo") < col("hi"))
-      settled = settled.unionByName(refined.filter(col("lo") >= col("hi")))
-    }
-
-    // PASS 2: exact selection over the LIVE residual intervals only
+    // PASS 2: exact selection over the LIVE residual intervals only; the
+    // residual join hints the broadcast only in few-groups mode
     val wFin = Window.partitionBy(perRid: _*).orderBy("v")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val selected = attach(live)
+    val selected = rows.join(if (manyGroups) live else broadcast(live), groupCols)
+      .filter(col("v") >= col("lo") && col("v") <= col("hi"))
       .withColumn("cum", sum(col("c")).over(wFin))
       .filter(col("cum") >= col("r"))
       .groupBy(perRid: _*)

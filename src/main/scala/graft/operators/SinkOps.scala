@@ -25,7 +25,7 @@ import graft.tlc.RawLoader
   * - S9 `s9_truncate_rebuild`: full-table overwrite semantics (the
   *   reference's DELETE + INSERT rebuild, aggregations.py:19,77) — after a
   *   second overwrite only the rebuilt rows exist. The partition-level
-  *   incremental variant is Aggregations.rebuildDates (AnalyticsSpec).
+  *   incremental variant is Aggregations.refresh (LoaderPipelineSpec).
   */
 object SinkOps extends graft.QueryFamily {
   /** Spark → SQL type-name canonicalization for the schema probe (the

@@ -1,5 +1,7 @@
 package graft.tlc
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -27,8 +29,8 @@ import org.apache.spark.sql.functions._
   * corpus-sized, and carries no broadcast hint (AQE broadcasts it while it
   * is actually small). The reference truncate-rebuilds (`DELETE FROM
   * agg_*`, aggregations.py:19,77,129,178); at 100 TB these are written
-  * `partitionBy("trip_date")` and rebuilt only for affected dates —
-  * `write(df, path)` below does the partitioned overwrite.
+  * `partitionBy("trip_date")` by `write` and rebuilt only for affected
+  * dates by `refresh`.
   */
 object Aggregations {
 
@@ -192,13 +194,30 @@ object Aggregations {
       .drop("before_excl")
   }
 
+  /** Every aggregate table, in write order: name → builder over the fact.
+    * The full build ([[buildAll]]) and the incremental fold ([[refresh]])
+    * both read this list. */
+  val tables: Seq[(String, DataFrame => DataFrame)] = Seq(
+    "agg_pricing_by_zone_hour" -> pricingByZoneHour,
+    "agg_hvfhv_take_rates" -> hvfhvTakeRates,
+    "agg_market_share" -> marketShare,
+    "agg_daily_summary" -> dailySummary,
+    "agg_congestion_fee_impact" -> congestionFeeImpact)
+
+  /** Every aggregate over `fact`, in [[tables]] order. */
+  def buildAll(fact: DataFrame): Map[String, DataFrame] =
+    tables.map { case (name, build) => name -> build(fact) }.to(ListMap)
+
+  /** Date-grained aggregates carry a trip_date column; period-grained ones
+    * (congestion_fee_impact is a before/after summary, aggregations.py's cbd
+    * table) have none. */
+  private def dateGrained(agg: DataFrame): Boolean = agg.columns.contains("trip_date")
+
   /** Partitioned overwrite — the scale-friendly replacement for the
     * reference's DELETE + INSERT truncate-rebuild. Date-grained aggregates
-    * partition by trip_date; period-grained ones (congestion_fee_impact is
-    * a before/after summary, aggregations.py's cbd table) have no date
-    * column and write flat. */
+    * partition by trip_date; period-grained ones write flat. */
   def write(agg: DataFrame, path: String): Unit =
-    if (agg.columns.contains("trip_date"))
+    if (dateGrained(agg))
       agg.write.mode("overwrite").partitionBy("trip_date").parquet(path)
     else agg.write.mode("overwrite").parquet(path)
 
@@ -224,24 +243,21 @@ object Aggregations {
         Seq("pickup_date"), "left_semi")
     }
 
-  /** Incremental rebuild: recompute ONLY the given dates' partitions and
-    * overwrite them in place (dynamic partition overwrite), leaving every
-    * other date's data untouched. At 100 TB a late-arriving file touches a
-    * handful of dates — truncate-rebuild (aggregations.py:19,77,129,178)
-    * would rescan the whole fact. `build` is any of the agg builders above;
-    * its input is pre-filtered so the scan itself partition-prunes. The
-    * dynamic mode is this write's own option, not the session conf, so
-    * concurrent writes in the same session never see each other's mode. */
-  def rebuildDates(fact: DataFrame, build: DataFrame => DataFrame,
-                   dates: Seq[java.sql.Date], path: String): Unit =
-    build(filterDates(fact, dates))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("trip_date").parquet(path)
-
-  def buildAll(fact: DataFrame): Map[String, DataFrame] = Map(
-    "agg_pricing_by_zone_hour" -> pricingByZoneHour(fact),
-    "agg_hvfhv_take_rates" -> hvfhvTakeRates(fact),
-    "agg_market_share" -> marketShare(fact),
-    "agg_daily_summary" -> dailySummary(fact),
-    "agg_congestion_fee_impact" -> congestionFeeImpact(fact))
+  /** Incremental rebuild after `dates` of `fact` changed: a date-grained
+    * table recomputes ONLY those dates' partitions and overwrites them in
+    * place (dynamic partition overwrite), leaving every other date's data
+    * untouched. At 100 TB a late-arriving file touches a handful of dates —
+    * truncate-rebuild (aggregations.py:19,77,129,178) would rescan the whole
+    * fact. The input is pre-filtered so the scan itself partition-prunes. A
+    * period-grained table is rewritten whole. The dynamic mode is this
+    * write's own option, not the session conf, so concurrent writes in the
+    * same session never see each other's mode. */
+  def refresh(fact: DataFrame, build: DataFrame => DataFrame,
+              dates: Seq[java.sql.Date], path: String): Unit = {
+    val scoped = build(filterDates(fact, dates))
+    if (dateGrained(scoped))
+      scoped.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("trip_date").parquet(path)
+    else write(build(fact), path)
+  }
 }

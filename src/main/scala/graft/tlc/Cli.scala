@@ -33,10 +33,20 @@ import org.apache.spark.sql.types.StructType
   */
 object Cli {
 
-  def parseArgs(args: Array[String]): Map[String, String] =
-    args.sliding(2, 2).collect {
-      case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
-    }.toMap
+  /** `--key value` pairs, read left to right. A word where an option should
+    * be, or an option with no value after it, is rejected by name. */
+  def parseArgs(args: Array[String]): Map[String, String] = {
+    @annotation.tailrec
+    def go(rest: List[String], opts: Map[String, String]): Map[String, String] = rest match {
+      case Nil => opts
+      case k :: v :: more if k.startsWith("--") && !v.startsWith("--") =>
+        go(more, opts + (k.drop(2) -> v))
+      case k :: _ if k.startsWith("--") =>
+        throw new IllegalArgumentException(s"missing value for $k")
+      case word :: _ => throw new IllegalArgumentException(s"unexpected argument '$word'")
+    }
+    go(args.toList, Map.empty)
+  }
 
   private def requireArgs(args: Array[String], keys: String*): Map[String, String] = {
     val opts = parseArgs(args)
@@ -79,8 +89,12 @@ object Cli {
     */
   private def runDownload(args: Array[String]): Unit = {
     val opts = requireArgs(args.filterNot(_ == "--no-skip-existing"), "start", "end", "dest")
-    val Array(sy, sm) = opts("start").split("-").map(_.toInt)
-    val Array(ey, em) = opts("end").split("-").map(_.toInt)
+    val YearMonth = """(\d{4})-(0[1-9]|1[0-2])""".r
+    def yearMonth(key: String): (Int, Int) = opts(key) match {
+      case YearMonth(y, m) => (y.toInt, m.toInt)
+      case v => throw new IllegalArgumentException(s"--$key must be YYYY-MM, got '$v'")
+    }
+    val ((sy, sm), (ey, em)) = (yearMonth("start"), yearMonth("end"))
     val services = opts.get("services")
       .map(_.split(",").toSeq).getOrElse(Seq("yellow", "green", "hvfhv"))
     val results = Downloader.downloadRange(
@@ -94,8 +108,8 @@ object Cli {
     }
   }
 
-  /** Argument errors (a missing option, an unknown subcommand) are raised
-    * before any session starts. */
+  /** Argument errors (an unknown subcommand, a stray word, an option with no
+    * value, a missing option) are raised before any session starts. */
   def main(args: Array[String]): Unit = args.headOption match {
     case Some("run-analytics") => runAnalytics(args.drop(1))
     case Some("download") => runDownload(args.drop(1))
@@ -330,19 +344,19 @@ object Cli {
     *
     *   - load/quality: the same drift-tolerant loaders + eager quality
     *     checks, over the new files only.
-    *   - standardize: IDEMPOTENT by lineage — an anti-join on source_file
+    *   - standardize: IDEMPOTENT by lineage — RawLoader.dropAlreadyLoaded
     *     against the warehouse fact (reference loader.py's already-loaded
     *     check, S6) drops rows from files already folded in, so replaying
     *     a file is a no-op; then ONLY the affected pickup_date partitions
     *     are rewritten (dynamic partition overwrite; pre-existing rows of
     *     those dates ride along via a localCheckpoint, which also severs
     *     the read-from-the-overwritten-path dependency).
-    *   - aggregates: Aggregations.rebuildDates recomputes just the
-    *     affected dates' partitions of every date-grained aggregate —
-    *     partition pruning keeps each rebuild's fact scan to those dates;
-    *     the one period-grained table (congestion_fee_impact, no date
-    *     column) and the bounded dims rebuild in full. The five tables
-    *     write concurrently, as do the dims.
+    *   - aggregates: Aggregations.refresh recomputes just the affected
+    *     dates' partitions of every date-grained aggregate — partition
+    *     pruning keeps each rebuild's fact scan to those dates; the one
+    *     period-grained table (congestion_fee_impact, no date column) and
+    *     the bounded dims rebuild in full. The five tables write
+    *     concurrently, as do the dims.
     *
     *   - analytics: the three percentile-surface queries (q04/q11/q13 —
     *     the QuantileRefine family) re-run concurrently over the FULL
@@ -364,9 +378,7 @@ object Cli {
 
     val existing = spark.read.parquet(s"$out/fact_trips")
     val (nNew, dates) = timed("standardize") {
-      val loadedFiles = existing.select("source_file").distinct()
-      val newFact = result.fact
-        .join(loadedFiles, Seq("source_file"), "left_anti")
+      val newFact = RawLoader.dropAlreadyLoaded(result.fact, existing)
         .localCheckpoint() // consumed by the date probe AND the write
       val dates = newFact.select("pickup_date").distinct()
         .collect().map(_.getDate(0)).toSeq.sortBy(_.getTime)
@@ -385,19 +397,10 @@ object Cli {
     timed("aggregates") {
       if (dates.nonEmpty) {
         val factAll = spark.read.parquet(s"$out/fact_trips")
-        val byDate = Seq[(String, DataFrame => DataFrame)](
-          "agg_pricing_by_zone_hour" -> Aggregations.pricingByZoneHour,
-          "agg_hvfhv_take_rates" -> Aggregations.hvfhvTakeRates,
-          "agg_market_share" -> Aggregations.marketShare,
-          "agg_daily_summary" -> Aggregations.dailySummary)
-          .map { case (name, build) =>
-            name -> (() => Aggregations.rebuildDates(factAll, build, dates, s"$out/$name"))
-          }
-        // period-grained (no date column): full rebuild is the contract
-        val congestion = "agg_congestion_fee_impact" -> (() => Aggregations.write(
-          Aggregations.congestionFeeImpact(factAll), s"$out/agg_congestion_fee_impact"))
-        run.writeAll((byDate :+ congestion).map { case (name, write) =>
-          name -> (() => Retry.withRetries(2, s"build-aggregates-incremental:$name")(write()))
+        run.writeAll(Aggregations.tables.map { case (name, build) =>
+          name -> (() => Retry.withRetries(2, s"build-aggregates-incremental:$name") {
+            Aggregations.refresh(factAll, build, dates, s"$out/$name")
+          })
         })
       }
     }

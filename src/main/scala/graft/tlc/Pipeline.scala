@@ -62,7 +62,14 @@ object Pipeline {
   def derive(spark: SparkSession, fact: DataFrame, rawTaxiZones: DataFrame)
       : (TlcTables, Map[String, DataFrame], Map[String, () => DataFrame]) = {
     graft.GraftExtensions.register(spark)
-    val tables = TlcTables(
+    val t = tables(spark, fact, rawTaxiZones)
+    (t, Aggregations.buildAll(fact), Analytics.all(t))
+  }
+
+  /** The warehouse tables the analytics read: `fact`, the five dims and
+    * agg_market_share over it. */
+  def tables(spark: SparkSession, fact: DataFrame, rawTaxiZones: DataFrame): TlcTables =
+    TlcTables(
       fact = fact,
       dimZones = Dimensions.dimZones(rawTaxiZones),
       dimDate = Dimensions.dimDate(spark),
@@ -70,8 +77,6 @@ object Pipeline {
       dimService = Dimensions.dimService(spark),
       dimHvfhsCompany = Dimensions.dimHvfhsCompany(spark),
       aggMarketShare = Aggregations.marketShare(fact))
-    (tables, Aggregations.buildAll(fact), Analytics.all(tables))
-  }
 
   /** Persist the fact partitioned by pickup_date (SURVEY.md §7.4 risk 10). */
   def writeFact(fact: DataFrame, path: String): Unit =

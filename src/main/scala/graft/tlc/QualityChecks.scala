@@ -4,114 +4,41 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** The four data-quality checks (reference: src/transformations/
-  * quality_checks.py), each one full-scan conditional aggregation per raw
-  * table with per-service column dispatch (quality_checks.py:22–25,66–74,
-  * 106–117,155).
+  * quality_checks.py), computed together in one full-scan conditional
+  * aggregation per raw table with per-service column dispatch
+  * (quality_checks.py:22–25,66–74,106–117,155; `Schemas.columnsFor`).
   *
-  * Each check is a single `df.agg(sum(when(...)))` — one job, no shuffle
-  * beyond the final single-row reduce. `runAll` returns the metrics as a
-  * DataFrame in the shape of the reference's `data_quality_metrics` table
-  * (sql/ddl/03_fact_tables.sql:70–98); persisting it is an idempotent
-  * overwrite of the service's partition (quality_checks.py:199–231).
+  * The aggregation is a single `df.agg(sum(when(...)), ...)` — one job, no
+  * shuffle beyond the final single-row reduce. `toMetricsFrame` returns the
+  * metrics as a DataFrame in the shape of the reference's
+  * `data_quality_metrics` table (sql/ddl/03_fact_tables.sql:70–98);
+  * persisting it is an idempotent overwrite of the service's partition
+  * (quality_checks.py:199–231).
   */
 object QualityChecks {
 
-  /** Per-service column names (quality_checks.py dispatch). */
-  final case class ServiceColumns(
-    fare: String, pickup: String, dropoff: String, distance: String)
-
-  val yellowCols: ServiceColumns = ServiceColumns(
-    "total_amount", "tpep_pickup_datetime", "tpep_dropoff_datetime", "trip_distance")
-  val greenCols: ServiceColumns = ServiceColumns(
-    "total_amount", "lpep_pickup_datetime", "lpep_dropoff_datetime", "trip_distance")
-  val hvfhvCols: ServiceColumns = ServiceColumns(
-    "base_passenger_fare", "pickup_datetime", "dropoff_datetime", "trip_miles")
-
-  def columnsFor(service: String): ServiceColumns = service match {
-    case s if s.contains("yellow") => yellowCols
-    case s if s.contains("green")  => greenCols
-    case _                         => hvfhvCols
-  }
+  /** The reference's thresholds (quality_checks.py:17, 101, 151). */
+  private val MaxFare = 1000.0
+  private val MaxSpeedMph = 100.0
+  private val MaxDist = 500.0
 
   final case class CheckResult(
     checkType: String, totalRows: Long, passedRows: Long, failedRows: Long,
     failureRate: Double, details: Map[String, String])
-
-  /** Fares: negative + excessive counts, min/max/avg (quality_checks.py:17–59). */
-  def checkFares(df: DataFrame, c: ServiceColumns, maxFare: Double = 1000.0): CheckResult = {
-    val r = df.agg(
-      count(lit(1)).as("total"),
-      sum(when(col(c.fare) < 0, 1).otherwise(0)).as("negative"),
-      sum(when(col(c.fare) > maxFare, 1).otherwise(0)).as("excessive"),
-      min(col(c.fare)).as("min_fare"),
-      max(col(c.fare)).as("max_fare"),
-      avg(col(c.fare)).as("avg_fare")).head()
-    val (total, neg, exc) = (r.getLong(0), r.getLong(1), r.getLong(2))
-    CheckResult("fare_validation", total, total - neg - exc, neg + exc,
-      if (total > 0) (neg + exc).toDouble / total else 0.0,
-      Map("negative_fares" -> neg.toString, "excessive_fares" -> exc.toString,
-        "min_fare" -> s"${r.get(3)}", "max_fare" -> s"${r.get(4)}",
-        "avg_fare" -> s"${r.get(5)}"))
-  }
-
-  /** Timestamps: dropoff < pickup + NULLs (quality_checks.py:61–99). */
-  def checkTimestamps(df: DataFrame, c: ServiceColumns): CheckResult = {
-    val r = df.agg(
-      count(lit(1)).as("total"),
-      sum(when(col(c.dropoff) < col(c.pickup), 1).otherwise(0)).as("invalid"),
-      sum(when(col(c.pickup).isNull || col(c.dropoff).isNull, 1).otherwise(0))
-        .as("nulls")).head()
-    val (total, invalid, nulls) = (r.getLong(0), r.getLong(1), r.getLong(2))
-    CheckResult("timestamp_validation", total, total - invalid - nulls, invalid + nulls,
-      if (total > 0) (invalid + nulls).toDouble / total else 0.0,
-      Map("invalid_order" -> invalid.toString, "null_timestamps" -> nulls.toString))
-  }
-
-  /** Speed: dist/(epoch/3600) > maxSpeed among dist > 0
-    * (quality_checks.py:101–149). */
-  def checkSpeed(df: DataFrame, c: ServiceColumns, maxSpeedMph: Double = 100.0): CheckResult = {
-    val epochS = unix_timestamp(col(c.dropoff)) - unix_timestamp(col(c.pickup))
-    val r = df.filter(col(c.distance) > 0).agg(
-      count(lit(1)).as("total"),
-      sum(when(col(c.distance) > 0 && epochS > 0 &&
-        col(c.distance) / (epochS / 3600.0) > maxSpeedMph, 1).otherwise(0))
-        .as("excessive")).head()
-    val (total, exc) = (r.getLong(0), r.getLong(1))
-    CheckResult("speed_validation", total, total - exc, exc,
-      if (total > 0) exc.toDouble / total else 0.0,
-      Map("excessive_speed" -> exc.toString, "max_speed_mph" -> maxSpeedMph.toString))
-  }
-
-  /** Distance: negative + excessive counts, avg (quality_checks.py:151–186). */
-  def checkDistance(df: DataFrame, c: ServiceColumns, maxDist: Double = 500.0): CheckResult = {
-    val r = df.agg(
-      count(lit(1)).as("total"),
-      sum(when(col(c.distance) < 0, 1).otherwise(0)).as("negative"),
-      sum(when(col(c.distance) > maxDist, 1).otherwise(0)).as("excessive"),
-      avg(col(c.distance)).as("avg_distance")).head()
-    val (total, neg, exc) = (r.getLong(0), r.getLong(1), r.getLong(2))
-    CheckResult("distance_validation", total, total - neg - exc, neg + exc,
-      if (total > 0) (neg + exc).toDouble / total else 0.0,
-      Map("negative_distance" -> neg.toString, "excessive_distance" -> exc.toString,
-        "avg_distance" -> s"${r.get(3)}"))
-  }
 
   /** All four checks for one raw table (quality_checks.py:188–197) in ONE
     * scan: the reference issues four separate full-table queries; at 100 TB
     * that is three scans too many. A single conditional aggregation computes
     * every metric (the speed check's `WHERE distance > 0` scope becomes a
     * conditional count), and the four CheckResults are assembled from the
-    * one collected row — same numbers as the per-check methods, which remain
-    * for targeted use. */
-  def runAll(df: DataFrame, service: String,
-             maxFare: Double = 1000.0, maxSpeedMph: Double = 100.0,
-             maxDist: Double = 500.0): Seq[CheckResult] = {
-    val c = columnsFor(service)
+    * one collected row. */
+  def runAll(df: DataFrame, service: String): Seq[CheckResult] = {
+    val c = Schemas.columnsFor(service)
     val epochS = unix_timestamp(col(c.dropoff)) - unix_timestamp(col(c.pickup))
     val r = df.agg(
       count(lit(1)).as("total"),
       sum(when(col(c.fare) < 0, 1).otherwise(0)).as("neg_fare"),
-      sum(when(col(c.fare) > maxFare, 1).otherwise(0)).as("exc_fare"),
+      sum(when(col(c.fare) > MaxFare, 1).otherwise(0)).as("exc_fare"),
       min(col(c.fare)).as("min_fare"),
       max(col(c.fare)).as("max_fare"),
       avg(col(c.fare)).as("avg_fare"),
@@ -120,10 +47,10 @@ object QualityChecks {
         .as("null_ts"),
       sum(when(col(c.distance) > 0, 1).otherwise(0)).as("dist_pos"),
       sum(when(col(c.distance) > 0 && epochS > 0 &&
-        col(c.distance) / (epochS / 3600.0) > maxSpeedMph, 1).otherwise(0))
+        col(c.distance) / (epochS / 3600.0) > MaxSpeedMph, 1).otherwise(0))
         .as("exc_speed"),
       sum(when(col(c.distance) < 0, 1).otherwise(0)).as("neg_dist"),
-      sum(when(col(c.distance) > maxDist, 1).otherwise(0)).as("exc_dist"),
+      sum(when(col(c.distance) > MaxDist, 1).otherwise(0)).as("exc_dist"),
       avg(col(c.distance)).as("avg_dist")).head()
     val total = r.getLong(0)
     def rate(failed: Long, of: Long) = if (of > 0) failed.toDouble / of else 0.0
@@ -143,7 +70,7 @@ object QualityChecks {
       CheckResult("speed_validation", distPos, distPos - excSpeed, excSpeed,
         rate(excSpeed, distPos),
         Map("excessive_speed" -> excSpeed.toString,
-          "max_speed_mph" -> maxSpeedMph.toString)),
+          "max_speed_mph" -> MaxSpeedMph.toString)),
       CheckResult("distance_validation", total, total - negD - excD, negD + excD,
         rate(negD + excD, total),
         Map("negative_distance" -> negD.toString,

@@ -82,44 +82,29 @@ object Schemas {
     StructField("wav_request_flag", StringType),
     StructField("wav_match_flag", StringType)))
 
+  /** The raw columns the quality checks and the taxi standardizer read, per
+    * service (quality_checks.py:22–25 dispatch). */
+  final case class ServiceColumns(
+    fare: String, pickup: String, dropoff: String, distance: String)
+
+  val yellowCols: ServiceColumns = ServiceColumns(
+    "total_amount", "tpep_pickup_datetime", "tpep_dropoff_datetime", "trip_distance")
+  val greenCols: ServiceColumns = ServiceColumns(
+    "total_amount", "lpep_pickup_datetime", "lpep_dropoff_datetime", "trip_distance")
+  val hvfhvCols: ServiceColumns = ServiceColumns(
+    "base_passenger_fare", "pickup_datetime", "dropoff_datetime", "trip_miles")
+
+  def columnsFor(service: String): ServiceColumns = service match {
+    case s if s.contains("yellow") => yellowCols
+    case s if s.contains("green")  => greenCols
+    case _                         => hvfhvCols
+  }
+
   val rawTaxiZones: StructType = StructType(Seq(
     StructField("LocationID", IntegerType),
     StructField("Borough", StringType),
     StructField("Zone", StringType),
     StructField("service_zone", StringType)))
-
-  /** Unified fact row (sql/ddl/03_fact_tables.sql:12–58 + restored dropoff/
-    * shared-match columns). Kept as a case class so the standardization
-    * boundary is typed; analytics work on DataFrames. */
-  final case class FactTrip(
-    trip_id: String,
-    service_type: String,
-    hvfhs_license_num: Option[String],
-    pickup_datetime: java.sql.Timestamp,
-    dropoff_datetime: Option[java.sql.Timestamp],
-    pickup_date: java.sql.Date,
-    pickup_hour: Option[Int],
-    pickup_day_of_week: Option[Int],
-    pickup_zone_id: Option[Int],
-    dropoff_zone_id: Option[Int],
-    trip_distance_miles: Option[Double],
-    trip_duration_minutes: Option[Double],
-    base_fare: Option[Double],
-    tips: Option[Double],
-    tolls: Option[Double],
-    surcharges: Option[Double],
-    airport_fee: Option[Double],
-    taxes: Option[Double],
-    total_fare: Option[Double],
-    driver_pay: Option[Double],
-    take_rate: Option[Double],
-    price_per_mile: Option[Double],
-    price_per_minute: Option[Double],
-    avg_speed_mph: Option[Double],
-    is_shared_request: Option[Boolean],
-    is_shared_match: Option[Boolean],
-    is_valid: Option[Boolean],
-    source_file: Option[String])
 
   /** Fact column order (the standardizers all emit exactly this). */
   val factColumns: Seq[String] = Seq(

@@ -20,6 +20,13 @@ import graft.functions.Exact.safeDiv
   *  - dropoff_datetime / dropoff_zone_id / is_shared_match are carried
   *    through so analytics 06/08/10 run (SURVEY.md §1.1).
   *
+  * Yellow and green share one body: their pickup, dropoff, distance and
+  * fare columns come from the per-service table the quality checks also
+  * dispatch on (`Schemas.ServiceColumns`), so the two calls differ only in
+  * service name, trip_id tag (md5 of "y"/"g" + pickup + distance) and
+  * airport fee (NULL for green, standardize.py:117). HVFHV's schema and
+  * fare composition share nothing with them and keep their own body.
+  *
   * No batching: the reference's 5M-row LIMIT/OFFSET loop
   * (standardize.py:157–237) is an OOM workaround Spark does not need —
   * partitioned execution + spill replace it (SURVEY.md §2.6 T5).
@@ -38,84 +45,50 @@ object Standardize {
     df.select(Schemas.factColumns.map(col): _*)
 
   /** Yellow taxi → fact (standardize.py:23–69). */
-  def yellow(raw: DataFrame): DataFrame = {
-    val dur = durationMinutes(col("tpep_pickup_datetime"), col("tpep_dropoff_datetime"))
-    finish(raw
-      .filter(col("tpep_pickup_datetime").isNotNull &&
-              col("tpep_dropoff_datetime").isNotNull)
-      .select(
-        md5(concat(lit("y"), col("tpep_pickup_datetime").cast("string"),
-          col("trip_distance").cast("string"))).as("trip_id"),
-        lit("yellow").as("service_type"),
-        nullS.as("hvfhs_license_num"),
-        col("tpep_pickup_datetime").as("pickup_datetime"),
-        col("tpep_dropoff_datetime").as("dropoff_datetime"),
-        col("tpep_pickup_datetime").cast("date").as("pickup_date"),
-        hour(col("tpep_pickup_datetime")).as("pickup_hour"),
-        (dayofweek(col("tpep_pickup_datetime")) - 1).as("pickup_day_of_week"),
-        col("PULocationID").as("pickup_zone_id"),
-        col("DOLocationID").as("dropoff_zone_id"),
-        col("trip_distance").as("trip_distance_miles"),
-        dur.as("trip_duration_minutes"),
-        col("fare_amount").as("base_fare"),
-        col("tip_amount").as("tips"),
-        col("tolls_amount").as("tolls"),
-        (col("extra") + col("improvement_surcharge") + col("congestion_surcharge"))
-          .as("surcharges"),
-        col("Airport_fee").as("airport_fee"),
-        col("mta_tax").as("taxes"),
-        col("total_amount").as("total_fare"),
-        nullD.as("driver_pay"),
-        nullD.as("take_rate"),
-        safeDiv(col("total_amount"), col("trip_distance")).as("price_per_mile"),
-        safeDiv(col("total_amount"), dur).as("price_per_minute"),
-        safeDiv(col("trip_distance"), dur / 60.0).as("avg_speed_mph"),
-        nullB.as("is_shared_request"),
-        nullB.as("is_shared_match"),
-        (col("total_amount") >= 0 &&
-         col("tpep_dropoff_datetime") > col("tpep_pickup_datetime") &&
-         col("trip_distance") >= 0).as("is_valid"),
-        col("source_file")))
-  }
+  def yellow(raw: DataFrame): DataFrame =
+    taxi(raw, "yellow", "y", Schemas.yellowCols, col("Airport_fee"))
 
   /** Green taxi → fact (standardize.py:89–132; NULL airport_fee :117). */
-  def green(raw: DataFrame): DataFrame = {
-    val dur = durationMinutes(col("lpep_pickup_datetime"), col("lpep_dropoff_datetime"))
+  def green(raw: DataFrame): DataFrame = taxi(raw, "green", "g", Schemas.greenCols, nullD)
+
+  /** The yellow/green body: the two taxi schemas differ only in the pickup/
+    * dropoff column prefix (`c`), the trip_id tag and the airport fee. */
+  private def taxi(raw: DataFrame, service: String, tag: String,
+                   c: Schemas.ServiceColumns, airportFee: Column): DataFrame = {
+    val (pickup, dropoff, dist, fare) =
+      (col(c.pickup), col(c.dropoff), col(c.distance), col(c.fare))
+    val dur = durationMinutes(pickup, dropoff)
     finish(raw
-      .filter(col("lpep_pickup_datetime").isNotNull &&
-              col("lpep_dropoff_datetime").isNotNull)
+      .filter(pickup.isNotNull && dropoff.isNotNull)
       .select(
-        md5(concat(lit("g"), col("lpep_pickup_datetime").cast("string"),
-          col("trip_distance").cast("string"))).as("trip_id"),
-        lit("green").as("service_type"),
+        md5(concat(lit(tag), pickup.cast("string"), dist.cast("string"))).as("trip_id"),
+        lit(service).as("service_type"),
         nullS.as("hvfhs_license_num"),
-        col("lpep_pickup_datetime").as("pickup_datetime"),
-        col("lpep_dropoff_datetime").as("dropoff_datetime"),
-        col("lpep_pickup_datetime").cast("date").as("pickup_date"),
-        hour(col("lpep_pickup_datetime")).as("pickup_hour"),
-        (dayofweek(col("lpep_pickup_datetime")) - 1).as("pickup_day_of_week"),
+        pickup.as("pickup_datetime"),
+        dropoff.as("dropoff_datetime"),
+        pickup.cast("date").as("pickup_date"),
+        hour(pickup).as("pickup_hour"),
+        (dayofweek(pickup) - 1).as("pickup_day_of_week"),
         col("PULocationID").as("pickup_zone_id"),
         col("DOLocationID").as("dropoff_zone_id"),
-        col("trip_distance").as("trip_distance_miles"),
+        dist.as("trip_distance_miles"),
         dur.as("trip_duration_minutes"),
         col("fare_amount").as("base_fare"),
         col("tip_amount").as("tips"),
         col("tolls_amount").as("tolls"),
         (col("extra") + col("improvement_surcharge") + col("congestion_surcharge"))
           .as("surcharges"),
-        nullD.as("airport_fee"),
+        airportFee.as("airport_fee"),
         col("mta_tax").as("taxes"),
-        col("total_amount").as("total_fare"),
+        fare.as("total_fare"),
         nullD.as("driver_pay"),
         nullD.as("take_rate"),
-        safeDiv(col("total_amount"), col("trip_distance")).as("price_per_mile"),
-        safeDiv(col("total_amount"), dur).as("price_per_minute"),
-        safeDiv(col("trip_distance"), dur / 60.0).as("avg_speed_mph"),
+        safeDiv(fare, dist).as("price_per_mile"),
+        safeDiv(fare, dur).as("price_per_minute"),
+        safeDiv(dist, dur / 60.0).as("avg_speed_mph"),
         nullB.as("is_shared_request"),
         nullB.as("is_shared_match"),
-        (col("total_amount") >= 0 &&
-         col("lpep_dropoff_datetime") > col("lpep_pickup_datetime") &&
-         col("trip_distance") >= 0).as("is_valid"),
+        (fare >= 0 && dropoff > pickup && dist >= 0).as("is_valid"),
         col("source_file")))
   }
 

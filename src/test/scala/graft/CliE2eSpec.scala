@@ -202,7 +202,7 @@ class CliE2eSpec extends AnyFunSuite {
   /** The 100 TB operating mode (SURVEY §7.4.10), end-to-end: build a
     * warehouse, then fold a NEW month of raw files in with
     * `run-incremental` — idempotent by source_file lineage, dynamic
-    * partition overwrite for the fact, Aggregations.rebuildDates for the
+    * partition overwrite for the fact, Aggregations.refresh for the
     * date-grained aggregates — and check the folded state matches a full
     * truncate-rebuild over the combined input. A replay of the same files
     * must be a no-op. */

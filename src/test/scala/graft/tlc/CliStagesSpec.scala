@@ -94,4 +94,26 @@ class CliStagesSpec extends AnyFunSuite {
     }
     assert(err.getMessage == "unknown subcommand 'bogus'", err.getMessage)
   }
+
+  private def argError(args: String*): String =
+    intercept[IllegalArgumentException](Cli.main(args.toArray)).getMessage
+
+  test("a stray word is named, not paired with the option after it") {
+    assert(argError("run-analytics", "--sql", "f.sql", "extra", "--warehouse", "w")
+      == "unexpected argument 'extra'")
+    assert(argError("run-e2e", "--yellow", "y", "y2", "--out", "x")
+      == "unexpected argument 'y2'")
+  }
+
+  test("an option with no value is named") {
+    assert(argError("run-incremental", "--zones", "z", "--out") == "missing value for --out")
+    assert(argError("--out", "--zones", "z") == "missing value for --out")
+  }
+
+  test("download keeps --no-skip-existing a flag and names a month that is not YYYY-MM") {
+    assert(argError("download", "--start", "202412", "--end", "2025-01", "--dest", "d")
+      == "--start must be YYYY-MM, got '202412'")
+    assert(argError("download", "--start", "2024-12", "--no-skip-existing",
+      "--end", "2025", "--dest", "d") == "--end must be YYYY-MM, got '2025'")
+  }
 }

@@ -56,7 +56,7 @@ class LoaderPipelineSpec extends AnyFunSuite {
     val modified = seeded.filter(
       !(col("pickup_date") === lit("2024-07-01").cast("date") &&
         col("service_type") === "green"))
-    Aggregations.rebuildDates(modified, Aggregations.dailySummary,
+    Aggregations.refresh(modified, Aggregations.dailySummary,
       Seq(java.sql.Date.valueOf("2024-07-01")), dir)
     val after = spark.read.parquet(dir)
     assert(after.count() == 2)

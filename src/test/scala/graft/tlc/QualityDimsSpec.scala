@@ -7,10 +7,14 @@ import org.scalatest.funsuite.AnyFunSuite
 class QualityDimsSpec extends AnyFunSuite {
   lazy val spark = Fixtures.sparkSession()
 
+  /** One check's result from the single-scan pass over a yellow table. */
+  private def check(yellow: org.apache.spark.sql.DataFrame, checkType: String) =
+    QualityChecks.runAll(yellow, "yellow").find(_.checkType == checkType).get
+
   test("fare check counts negative fares (test_quality_checks.py:33–57)") {
     val bad = Fixtures.yellow(spark).withColumn("total_amount",
       when(col("PULocationID") === 161, lit(-5.0)).otherwise(col("total_amount")))
-    val r = QualityChecks.checkFares(bad, QualityChecks.yellowCols)
+    val r = check(bad, "fare_validation")
     assert(r.totalRows == 4 && r.failedRows == 1)
     assert(r.details("negative_fares") == "1")
   }
@@ -20,7 +24,7 @@ class QualityDimsSpec extends AnyFunSuite {
       when(col("PULocationID") === 161,
         col("tpep_pickup_datetime") - expr("INTERVAL 5 MINUTES"))
         .otherwise(col("tpep_dropoff_datetime")))
-    val r = QualityChecks.checkTimestamps(bad, QualityChecks.yellowCols)
+    val r = check(bad, "timestamp_validation")
     assert(r.failedRows == 1 && r.passedRows == 3)
   }
 
@@ -31,14 +35,14 @@ class QualityDimsSpec extends AnyFunSuite {
         when(col("PULocationID") === 161,
           col("tpep_pickup_datetime") + expr("INTERVAL 1 HOUR"))
           .otherwise(col("tpep_dropoff_datetime")))
-    val r = QualityChecks.checkSpeed(bad, QualityChecks.yellowCols)
+    val r = check(bad, "speed_validation")
     assert(r.details("excessive_speed") == "1")
   }
 
   test("distance check counts negatives (test_quality_checks.py:141–161)") {
     val bad = Fixtures.yellow(spark).withColumn("trip_distance",
       when(col("PULocationID") === 161, lit(-1.0)).otherwise(col("trip_distance")))
-    val r = QualityChecks.checkDistance(bad, QualityChecks.yellowCols)
+    val r = check(bad, "distance_validation")
     assert(r.details("negative_distance") == "1" && r.failedRows == 1)
   }
 

@@ -92,6 +92,20 @@ class StandardizeSpec extends AnyFunSuite {
     assert(fact.select("trip_id").except(again.select("trip_id")).count() == 0)
   }
 
+  test("taxi trip_id is md5 of tag + pickup + distance: 'y' for yellow, 'g' for green") {
+    def md5Hex(s: String): String = java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    for ((raw, standardize, tag, pickup) <- Seq(
+        (Fixtures.yellow(spark), Standardize.yellow _, "y", "tpep_pickup_datetime"),
+        (Fixtures.green(spark), Standardize.green _, "g", "lpep_pickup_datetime"))) {
+      val row = raw.orderBy(pickup).limit(1)
+      val Row(pickupStr: String, distStr: String) = row
+        .select(col(pickup).cast("string"), col("trip_distance").cast("string")).head()
+      val id = standardize(row).select("trip_id").head().getString(0)
+      assert(id == md5Hex(tag + pickupStr + distStr), s"$tag: $pickupStr, $distStr")
+    }
+  }
+
   test("green carries NULL airport_fee (standardize.py:117)") {
     val g = Standardize.green(Fixtures.green(spark))
     assert(g.filter(col("airport_fee").isNull).count() == 3)
