@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 import graft.functions._
-import graft.plans.{RewritePercentileAgg, RewriteTopKWindow, TopKStrategy}
+import graft.plans.{PercentileAggregateStrategy, RewritePercentileAgg, RewriteTopKWindow, TopKStrategy}
 
 /** The one table of every custom Catalyst piece in this library, and its
   * two installers, `apply` (the session extension) and `register`:
@@ -25,12 +25,14 @@ import graft.plans.{RewritePercentileAgg, RewriteTopKWindow, TopKStrategy}
   * }}}
   *
   * The pieces:
-  *  - planner strategy: `TopKStrategy` (the [[graft.plans.TopKPerGroup]]
-  *    partial/final heap operator);
+  *  - planner strategies: `TopKStrategy` (the [[graft.plans.TopKPerGroup]]
+  *    partial/final heap operator) and `PercentileAggregateStrategy` (the
+  *    [[graft.plans.PercentileAggregate]] operator the percentile rewrite
+  *    plans onto);
   *  - optimizer rules: `RewriteTopKWindow` (row_number-then-filter top-N
   *    onto TopKPerGroup) and `RewritePercentileAgg` (ascending dyadic
-  *    PERCENTILE_CONT onto the PercentileCont reconstruction, which plans
-  *    with Spark's own operators and `sortable_double_bits`);
+  *    PERCENTILE_CONT onto QuantileRefine's two passes, planned with
+  *    `sortable_double_bits` and PercentileAggregate);
   *  - catalog functions, visible to `spark.sql`, `expr` and
   *    `DESCRIBE FUNCTION`: `cosine_sim`, `long_dot_prefix`, `jaro_winkler`,
   *    `ngrams`, `char_grams`, `sortable_double_bits`.
@@ -48,7 +50,7 @@ object GraftExtensions {
   type FunctionDescriptor =
     (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
-  val strategies: Seq[SparkStrategy] = Seq(TopKStrategy)
+  val strategies: Seq[SparkStrategy] = Seq(TopKStrategy, PercentileAggregateStrategy)
 
   val rules: Seq[Rule[LogicalPlan]] = Seq(RewriteTopKWindow, RewritePercentileAgg)
 

@@ -8,7 +8,9 @@ import org.apache.spark.sql.functions._
   * histogram refinement — the scale-safe replacement for the builtin on the
   * TLC fact paths (r13 verdict item 1). Library code asks for it by
   * writing Spark's `percentile`; [[graft.plans.RewritePercentileAgg]] plans
-  * that onto [[group]].
+  * that onto the same two passes and this interpolation in
+  * [[graft.plans.PercentileAggregate]]. [[group]] serves the callers that
+  * build their own frames (SessionScaleOps a13, ScalarOps q2).
   *
   * Why replace the builtin: Spark's `Percentile` is a
   * TypedImperativeAggregate whose final merge materializes a value → count
@@ -54,8 +56,11 @@ import org.apache.spark.sql.functions._
   * each row to pass 1 once per value column, but pass 1's codegen hash
   * aggregate combines them per (group, pcol, bucket) before its exchange,
   * so the shuffle carries bucket rows, never corpus rows (pinned by
-  * PlanAuditSpec). Callers pay one extra join (group-keyed,
-  * AQE-broadcastable state) to attach the results to their main aggregate.
+  * PlanAuditSpec). [[group]] reads its input three times (pass 1, pass 2
+  * and the caller's main aggregate), and its callers pay one extra join
+  * (group-keyed, AQE-broadcastable state) to attach the results to their
+  * main aggregate; a rewritten aggregate reads its child twice and joins
+  * nothing (PercentileAggregate's scaladoc).
   */
 object PercentileCont {
 
@@ -77,11 +82,8 @@ object PercentileCont {
     * NULL GROUP KEYS (ADVICE r13): a NULL group key groups normally HERE
     * (GROUP BY treats NULL as a group, both engines), but an equality left
     * join drops it — a NULL-keyed group would come back with NULL
-    * percentiles while the builtin computes real values. The three callers:
-    * [[graft.plans.RewritePercentileAgg]] (every library and SQL
-    * percentile) passes each nullable key as NULL-free
-    * `coalesce(k, default)` and `isnull(k)` columns;
-    * SessionScaleOps a13 and ScalarOps q2 group by keys that are never
+    * percentiles while the builtin computes real values. The two callers,
+    * SessionScaleOps a13 and ScalarOps q2, group by keys that are never
     * NULL (`o_orderpriority`, a literal). A new caller with a nullable key
     * must join null-safely too.
     *

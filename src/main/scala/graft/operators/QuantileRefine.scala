@@ -54,6 +54,10 @@ import org.apache.spark.sql.types.DoubleType
   *     exchanges on (group, rid), and sorts only the residual rows for
   *     the exact cumulative selection.
   *
+  * [[graft.plans.RewritePercentileAgg]] runs the same two passes through
+  * [[graft.plans.PercentileAggregate]], which locates the ranks per group
+  * in one task instead of in bucket-table windows and caches nothing.
+  *
   * NULL semantics (ADVICE r12): NULL values and non-positive weights are
   * dropped up front, matching the ordered-set builtins (percentile_disc /
   * percentile_cont ignore NULLs) — an unfiltered NULL would land in a NULL

@@ -1,0 +1,221 @@
+package graft.plans
+
+import scala.collection.mutable
+
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet, BoundReference, GenericInternalRow, InterpretedUnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, Statistics}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
+import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.types.DataType
+
+/** The exact percentiles of one aggregate, planned by
+  * [[RewritePercentileAgg]]: the two passes of QuantileRefine's histogram
+  * refinement as Spark plans, and everything between and after them in ONE
+  * operator that generates no code.
+  *
+  * `pass1` is the bit-prefix histogram with the aggregate's other functions
+  * riding it: (keys..., pcol, b, bc, blo, bhi, mains...), one row per
+  * (group, value column, bucket) plus one main row per group whose pcol is
+  * NULL. `pass2` is the value rows: (keys..., pcol, v), v non-NULL. Output:
+  * (keys..., one double per spec, mains...).
+  *
+  * The operator (i) gathers each group's histogram in one task — bounded by
+  * the 2^16 bucket key space, never by the corpus — and locates every rank
+  * in it; a rank whose bucket holds one value is answered there; (ii)
+  * collects the other ranks' residual intervals (a few per group) and
+  * broadcasts them; (iii) keeps the pass-2 rows inside an interval, and
+  * (iv) sorts them per group beside the group's located state, so one
+  * streaming pass selects each rank's value and interpolates. Pass 2 is not
+  * run when no rank needs it. Nothing is cached: step (ii) and step (iv)
+  * both read the located state back from step (i)'s one shuffle.
+  *
+  * @param specs (value column, num, den) per output percentile, p = num/den
+  */
+case class PercentileAggregate(
+    output: Seq[Attribute],
+    keys: Int,
+    specs: Seq[(Int, Int, Int)],
+    sizeInBytes: BigInt,
+    pass1: LogicalPlan,
+    pass2: LogicalPlan) extends BinaryNode {
+  override def left: LogicalPlan = pass1
+  override def right: LogicalPlan = pass2
+  override def producedAttributes: AttributeSet = outputSet
+  // every column of both passes is read: no rule prunes them from outside
+  override def references: AttributeSet = pass1.outputSet ++ pass2.outputSet
+  override def stats: Statistics = Statistics(sizeInBytes)
+  override protected def withNewChildrenInternal(
+      l: LogicalPlan, r: LogicalPlan): PercentileAggregate = copy(pass1 = l, pass2 = r)
+}
+
+case class PercentileAggregateExec(
+    output: Seq[Attribute],
+    keys: Int,
+    specs: Seq[(Int, Int, Int)],
+    pass1: SparkPlan,
+    pass2: SparkPlan) extends BinaryExecNode {
+  import PercentileAggregateExec._
+
+  override def left: SparkPlan = pass1
+  override def right: SparkPlan = pass2
+
+  override protected def doExecute(): RDD[InternalRow] = {
+    val k = keys
+    val sp = specs.toArray
+    val types = output.map(_.dataType)
+    val keyTypes = types.take(k)
+    val mainTypes = pass1.output.drop(k + 5).map(_.dataType)
+    val hist = pass1.execute()
+    // as many tasks as pass 1's final aggregate runs (AQE sizes those)
+    val parts = if (k == 0) 1 else hist.getNumPartitions.max(1)
+
+    // (i) every group's histogram in one task, its ranks located there
+    val located = hist.mapPartitions { rows =>
+      val key = projection(keyTypes)
+      rows.map(r => (key(r).copy(), r.copy()))
+    }.groupByKey(new HashPartitioner(parts)).mapValues(locate(k, sp, mainTypes, _))
+
+    // (ii) the residual intervals of the ranks not yet answered
+    val live = located.flatMap { case (g, s) =>
+      s.r.indices.filter(s.r(_) > 0).map(j => (g, sp(j / 2)._1) -> (j, s.lo(j), s.hi(j)))
+    }.collect().groupBy(_._1).map { case (gp, js) => gp -> js.map(_._2) }
+    val states = located.map { case (g, s) => (Key(g, -1, 0.0), s) }
+    val rows = if (live.isEmpty) states else {
+      // (iii) pass 2: the rows inside a live rank's interval, once per rank
+      val intervals = sparkContext.broadcast(live)
+      states.union(pass2.execute().mapPartitions { rows =>
+        val key = projection(keyTypes)
+        rows.flatMap { r =>
+          val g = key(r)
+          val v = r.getDouble(k + 1)
+          intervals.value.getOrElse((g, r.getInt(k)), Array.empty[(Int, Double, Double)])
+            .iterator.collect { case (j, lo, hi) if compareDoubles(v, lo) >= 0 &&
+              compareDoubles(v, hi) <= 0 => (Key(g.copy(), j, v), null: State) }
+        }
+      })
+    }
+
+    // (iv) per group: its state, then each live rank's rows by v ascending
+    rows.repartitionAndSortWithinPartitions(new HashPartitioner(parts)).mapPartitions { it =>
+      val out = projection(types)
+      val in = it.buffered
+      var global = k == 0
+      new Iterator[InternalRow] {
+        override def hasNext: Boolean = in.hasNext || global
+        override def next(): InternalRow = {
+          global = false
+          // a global aggregate answers one row even over no input
+          if (!in.hasNext) return out(new GenericInternalRow(types.size))
+          val (group, s) = in.next()
+          var rank = -1
+          var seen = 0L
+          while (in.hasNext && in.head._1.rank >= 0) {
+            val row = in.next()._1
+            if (row.rank != rank) { rank = row.rank; seen = 0L }
+            seen += 1
+            if (seen == s.r(rank)) s.at(rank) = row.v
+          }
+          out(s.row(group.g, k, sp, types))
+        }
+      }
+    }
+  }
+
+  override protected def withNewChildrenInternal(
+      l: SparkPlan, r: SparkPlan): PercentileAggregateExec = copy(pass1 = l, pass2 = r)
+}
+
+object PercentileAggregateExec {
+
+  /** An UnsafeRow of the leading `types.size` columns, interpreted: this
+    * operator compiles no code. */
+  private def projection(types: Seq[DataType]) =
+    InterpretedUnsafeProjection.createProjection(types.zipWithIndex.map {
+      case (t, i) => BoundReference(i, t, nullable = true) })
+
+  /** A shuffle key: the group, the rank (−1: the group's state, sorted
+    * first) and the value. Hashes by group only, so a group meets in one
+    * task. */
+  case class Key(g: UnsafeRow, rank: Int, v: Double) {
+    override def hashCode: Int = g.hashCode
+  }
+
+  implicit val keyOrdering: Ordering[Key] = (a: Key, b: Key) => {
+    val byGroup = java.util.Arrays.compareUnsigned(a.g.getBytes, b.g.getBytes)
+    if (byGroup != 0) byGroup
+    else if (a.rank != b.rank) Integer.compare(a.rank, b.rank)
+    else compareDoubles(a.v, b.v)
+  }
+
+  /** One group's located state: per column its non-NULL count `n`; per rank
+    * (2 per spec: the floor and ceil elements) its answer `at`, or, while
+    * `r` > 0, its residual interval [lo, hi] and the rank within it. */
+  case class State(main: InternalRow, n: Array[Long], at: Array[Double],
+      r: Array[Long], lo: Array[Double], hi: Array[Double]) {
+
+    /** The output row: keys, the builtin's interpolation per spec (PercentileCont's
+      * expression tree, so bit-identical), the main aggregates. */
+    def row(g: UnsafeRow, k: Int, specs: Array[(Int, Int, Int)],
+        types: Seq[DataType]): InternalRow = {
+      val o = new GenericInternalRow(types.size)
+      for (i <- 0 until k) o.update(i, g.get(i, types(i)))
+      for (((c, num, den), i) <- specs.zipWithIndex if n(c) > 0) {
+        val (lower, higher) = (at(2 * i), at(2 * i + 1))
+        val rem = (n(c) - 1) * num % den
+        val f = rem.toDouble / den
+        o.update(k + i, if (rem == 0 || compareDoubles(lower, higher) == 0) lower
+          else (1.0 - f) * lower + f * higher)
+      }
+      if (main != null) for (j <- 0 until main.numFields)
+        o.update(k + specs.length + j, main.get(j, types(k + specs.length + j)))
+      o
+    }
+  }
+
+  /** Locates every rank of one group in its buckets (pass-1 rows). */
+  private def locate(k: Int, specs: Array[(Int, Int, Int)],
+      mainTypes: Seq[DataType],
+      rows: Iterable[InternalRow]): State = {
+    val cols = specs.map(_._1).max + 1
+    val buckets = Array.fill(cols)(mutable.ArrayBuffer.empty[InternalRow])
+    var main: InternalRow = null
+    rows.foreach { r =>
+      if (r.isNullAt(k)) main = new GenericInternalRow(
+        mainTypes.zipWithIndex.map { case (t, j) => r.get(k + 5 + j, t) }.toArray)
+      else buckets(r.getInt(k)) += r
+    }
+    val n = buckets.map(_.iterator.map(_.getLong(k + 2)).sum)
+    val sorted = buckets.map(_.sortBy(_.getLong(k + 1)))
+    val s = State(main, n, new Array(2 * specs.length), new Array(2 * specs.length),
+      new Array(2 * specs.length), new Array(2 * specs.length))
+    for (j <- s.r.indices) {
+      val (c, num, den) = specs(j / 2)
+      if (n(c) > 0) {
+        // 1-based rank of the floor (even j) or ceil (odd j) element
+        val pos = (n(c) - 1) * num
+        val rank = pos / den + 1 + (if (j % 2 == 1 && pos % den > 0) 1 else 0)
+        var below = 0L
+        val b = sorted(c).find { b => below += b.getLong(k + 2); below >= rank }.get
+        val (lo, hi) = (b.getDouble(k + 3), b.getDouble(k + 4))
+        if (compareDoubles(lo, hi) < 0) {
+          s.r(j) = rank - (below - b.getLong(k + 2))
+          s.lo(j) = lo
+          s.hi(j) = hi
+        } else s.at(j) = lo
+      }
+    }
+    s
+  }
+}
+
+/** Plans [[PercentileAggregate]]. */
+object PercentileAggregateStrategy extends SparkStrategy {
+  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case p: PercentileAggregate =>
+      PercentileAggregateExec(p.output, p.keys, p.specs, planLater(p.pass1), planLater(p.pass2)) :: Nil
+    case _ => Nil
+  }
+}

@@ -2,16 +2,15 @@ package graft.plans
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, GraftSqlAccess, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.{GraftSqlAccess, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Percentile, PercentileCont => PercentileContCall}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Max, Min, Percentile, PercentileCont => PercentileContCall}
+import org.apache.spark.sql.catalyst.plans.LeftOuter
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Expand, Filter, Join, JoinHint, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.functions.lit
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, NumericType}
 
-import graft.operators.PercentileCont
+import graft.functions.SortableDoubleBits
 
 /** Optimizer rule: rewrite `PERCENTILE_CONT(p) WITHIN GROUP (ORDER BY v)`
   * aggregates (Spark's builtin `Percentile` / its `PercentileCont` sugar)
@@ -29,40 +28,38 @@ import graft.operators.PercentileCont
   * keeps the reference user's SQL text unchanged and keeps the scale
   * decision in one place for both entry points.
   *
-  * Values are BIT-IDENTICAL, not approximately equal: the rewrite routes
-  * onto `PercentileCont.group`, whose scaladoc + PercentileContSpec pin
-  * bit-parity with the builtin (same element selection, same interpolation
-  * expression tree, same short-circuits, same NULL semantics, NULL group
-  * keys included) for every dyadic fraction
-  * p = num / 2^k. Non-dyadic fractions, descending order, DISTINCT, FILTER
-  * clauses and explicit frequency ≠ 1 are NOT rewritten — the builtin
-  * stays, correctness over posture.
+  * Values are BIT-IDENTICAL, not approximately equal: the replacement
+  * selects the builtin's elements (value at 0-indexed floor and ceil of
+  * (n−1)·p over the non-NULL values in ascending order) and interpolates
+  * with PercentileCont's expression tree, whose scaladoc +
+  * PercentileContSpec pin bit-parity with the builtin for every dyadic
+  * fraction p = num / 2^k; NULL groups, NULL values and a global
+  * aggregate's one row over empty input behave as under the builtin.
+  * Non-dyadic fractions, descending order, DISTINCT, FILTER clauses,
+  * explicit frequency ≠ 1 and non-numeric values are NOT rewritten — the
+  * builtin stays, correctness over posture.
   *
   * Shape: `Aggregate(G, aggs, child)` where some aggs contain rewritable
   * percentile calls becomes
   *
   * {{{
-  *   Project(aggs with percentiles substituted,          — original names
-  *     Join(left,                                        — and ExprIds
-  *       Aggregate(G, non-percentile aggs + keys, child),
-  *       PercentileCont.group(child projected to keys + values),
-  *       keys null-safe-equal))                          — NULL groups kept
+  *   Project(aggs over keys, percentiles, main results)  — original names
+  *     PercentileAggregate(                               — and ExprIds
+  *       pass 1: Aggregate(G, pcol, bucket: histogram + main aggregates,
+  *                 Expand(row, row per value column, child)),
+  *       pass 2: Expand(row per value column, child))
   * }}}
   *
-  * A global aggregate (no GROUP BY) joins on TRUE against the one-row
-  * percentile frame, so the one-row-on-empty-input contract survives.
-  * The replacement subtree is built with the ordinary Dataset API and
-  * spliced back as its OPTIMIZED plan (registered through
-  * `spark.experimental` the rule runs in the User Provided Optimizers
-  * batch, after every other batch, so an unoptimized splice would scan
-  * every column). Any analysis failure inside the
-  * reconstruction falls back to the original aggregate: the rule can only
-  * ever trade the builtin for the proven-equal plan, never fail a query.
-  *
-  * `manyGroups` (QuantileRefine's scale mode): group counts that grow with
-  * the data span (zone × hour, year × month × company — ≥ 3 grouping
-  * columns) exchange the bucket table on the group key; small fixed key
-  * sets keep the single-partition state plan.
+  * The child is evaluated twice and nothing is cached: pass 1's hash
+  * aggregate combines map-side before its one exchange, and
+  * [[PercentileAggregate]] does the rest without generating code (its
+  * scaladoc has the steps). A main aggregate the hash aggregate cannot
+  * carry (DISTINCT, or a buffer it cannot hold) runs as its own aggregate,
+  * left-joined on the group key. The replacement is built from resolved
+  * Catalyst nodes, never re-analysed; it is left to the optimizer batches
+  * that follow. Any failure while building it falls back to the original
+  * aggregate: the rule can only ever trade the builtin for the
+  * proven-equal plan.
   *
   * Installed by [[graft.GraftExtensions]]: injected into the operator
   * optimization batch of sessions built with the extension, added through
@@ -114,7 +111,7 @@ object RewritePercentileAgg extends Rule[LogicalPlan] {
 
   private def pctOf(ae: AggregateExpression): Option[(Expression, Int, Int)] =
     if (ae.isDistinct || ae.filter.isDefined) None
-    else contCall(ae.aggregateFunction)
+    else contCall(ae.aggregateFunction).filter(_._1.dataType.isInstanceOf[NumericType])
 
   private def isPercentileFamily(ae: AggregateExpression): Boolean =
     ae.aggregateFunction.isInstanceOf[Percentile] ||
@@ -123,9 +120,9 @@ object RewritePercentileAgg extends Rule[LogicalPlan] {
   /** Fire only when every percentile call in the aggregate is rewritable —
     * a half-rewritten aggregate would still carry the single-task merge,
     * paying both plans for nothing — and when the aggregate and everything
-    * under it is deterministic: the rewrite evaluates the child twice (main
-    * aggregate and QuantileRefine side), and with rand()/uuid() in it the
-    * two evaluations would see different rows, where the builtin sees one. */
+    * under it is deterministic: the rewrite evaluates the child twice (pass
+    * 1 with the main aggregates, and pass 2), and with rand()/uuid() in it the two evaluations would see
+    * different rows, where the builtin sees one. */
   private def shouldRewrite(agg: Aggregate): Boolean = {
     val aes = agg.aggregateExpressions.flatMap(_.collect {
       case ae: AggregateExpression => ae
@@ -140,7 +137,7 @@ object RewritePercentileAgg extends Rule[LogicalPlan] {
     if (spark.conf.get("spark.graft.sqlPercentileRewrite", "true") != "true") plan
     else plan.transformUp {
       case agg: Aggregate if shouldRewrite(agg) =>
-        try rewrite(spark, agg)
+        try rewrite(agg)
         catch {
           case e: Exception =>
             logWarning(s"percentile rewrite fell back to the builtin: $e")
@@ -149,131 +146,100 @@ object RewritePercentileAgg extends Rule[LogicalPlan] {
     }
   }
 
-  private def rewrite(spark: SparkSession, agg: Aggregate): LogicalPlan = {
+  private def rewrite(agg: Aggregate): LogicalPlan = {
     val child = agg.child
+    val keys = agg.groupingExpressions
 
-    // ---- collect distinct value expressions and (value, num, den) specs
-    val valueExprs = mutable.ArrayBuffer.empty[Expression]
-    def valueIdx(e: Expression): Int = {
-      val i = valueExprs.indexWhere(_.semanticEquals(e))
-      if (i >= 0) i else { valueExprs += e; valueExprs.size - 1 }
+    // ---- distinct value expressions, (value, num, den) specs and main
+    // aggregates; value i is the specs' i-th distinct value (the pcol index)
+    def idx[T <: Expression](buf: mutable.ArrayBuffer[T], e: T): Int = {
+      val i = buf.indexWhere(_.semanticEquals(e))
+      if (i >= 0) i else { buf += e; buf.size - 1 }
     }
-    val specKeys = mutable.LinkedHashMap.empty[(Int, Int, Int), String]
+    val values = mutable.ArrayBuffer.empty[Expression]
+    val mains = mutable.ArrayBuffer.empty[AggregateExpression]
+    val specs = mutable.LinkedHashMap.empty[(Int, Int, Int), Int]
+    def pctIdx(ae: AggregateExpression): Option[Int] = pctOf(ae).map { case (x, n, d) =>
+      specs.getOrElseUpdate((idx(values, x), n, d), specs.size) }
     agg.aggregateExpressions.foreach(_.foreach {
-      case ae: AggregateExpression => pctOf(ae).foreach { case (v, n, d) =>
-        specKeys.getOrElseUpdate((valueIdx(v), n, d), s"__pq${specKeys.size}")
-      }
+      case ae: AggregateExpression => if (pctIdx(ae).isEmpty) idx(mains, ae)
       case _ => ()
     })
 
-    // ---- percentile side: project keys + values, one PercentileCont batch.
-    // A NULL group key must survive the equi-joins inside QuantileRefine
-    // and the reattachment join below: the builtin computes real
-    // percentiles for a NULL group, and a bare equality join would silently
-    // return NULL for it (the PercentileCont.group NULL-key contract,
-    // handled here at the caller). A nullable key therefore travels as two
-    // NULL-free columns, coalesce(k, default) and isnull(k), which group
-    // and equi-join exactly like k under <=>. They stay plain columns: a
-    // struct-wrapped key is built and hashed per corpus row in pass 1.
-    val nullable = agg.groupingExpressions.map(_.nullable)
-    def nullFree(keys: Seq[Expression]): Seq[Expression] =
-      keys.zip(nullable).flatMap { case (k, n) =>
-        if (n) Seq(Coalesce(Seq(k, Literal.default(k.dataType))), IsNull(k)) else Seq(k)
-      }
-    val keyParts = nullFree(agg.groupingExpressions)
-    val gNames = keyParts.indices.map(i => s"__pg$i")
-    val childDf = GraftSqlAccess.ofRows(spark, child)
-    val prepCols: Seq[Column] =
-      keyParts.zip(gNames).map { case (k, n) => GraftSqlAccess.column(Alias(k, n)()) } ++
-      valueExprs.zip(valueExprs.indices.map(i => s"__pv$i")).map { case (v, n) =>
-        GraftSqlAccess.column(Alias(v, n)()) }
-    val prep0 = childDf.select(prepCols: _*)
-    val (prep, pctGroups) =
-      if (gNames.isEmpty) (prep0.withColumn("__pg0", lit(1)), Seq("__pg0"))
-      else (prep0, gNames)
-    val specs = specKeys.toSeq.map { case ((vi, n, d), out) =>
-      PercentileCont.Spec(out, s"__pv$vi", n, d) }
-    val manyGroups = agg.groupingExpressions.size >= 3
-    val pct = PercentileCont.group(prep, pctGroups, specs, manyGroups = manyGroups)
+    // ---- the child, read twice: per row its group key (float keys
+    // normalized as GROUP BY normalizes them) and per value column (pcol,
+    // v), v the value as a double
+    def attr(n: String, e: Expression) = AttributeReference(n, e.dataType, e.nullable)()
+    val g = keys.map(GraftSqlAccess.normalizeFloats)
+    def pcol = AttributeReference("__pcol", IntegerType)()
+    def v = AttributeReference("__v", DoubleType)()
+    val asDouble = values.map(Cast(_, DoubleType))
 
-    // ---- main aggregate: original non-percentile entries, ExprIds intact
-    val keep = mutable.ArrayBuffer.empty[NamedExpression]
-    val extraAggs = mutable.ArrayBuffer.empty[NamedExpression]
-
-    // join keys: reuse an output that IS the grouping expr, else add one
-    val groupKeyAttrs: Seq[Attribute] = agg.groupingExpressions.map { g =>
-      agg.aggregateExpressions.collectFirst {
-        case a: Attribute if a.semanticEquals(g) => a
-        case al @ Alias(c, _) if c.semanticEquals(g) => al.toAttribute
-      }.getOrElse {
-        g match {
-          case a: Attribute => extraAggs += a; a
-          case other =>
-            val al = Alias(other, s"__mg${extraAggs.size}")()
-            extraAggs += al
-            al.toAttribute
-        }
-      }
+    // ---- pass 1 and the main aggregates in ONE hash aggregate (Spark's
+    // RewriteDistinctAggregates pattern): each row once as itself (pcol, v,
+    // b NULL), read by the main aggregates, and once per value column with
+    // its bucket, read by the histogram. A main aggregate that cannot ride
+    // it (DISTINCT, or a buffer the hash aggregate cannot hold) runs as its
+    // own aggregate, joined on the group key.
+    val (riding, apart) = mains.partition(ae => !ae.isDistinct &&
+      Aggregate.supportsHashAggregate(ae.aggregateFunction.aggBufferAttributes, Nil))
+    val read = AttributeSet(riding.flatMap(_.references)).toSeq
+    val readAs = read.map(a => AttributeReference(a.name, a.dataType)())
+    val (g1, p1, v1, b1) = (keys.indices.map(i => attr(s"__pg$i", keys(i))), pcol, v,
+      AttributeReference("__b", LongType)())
+    val expand1 = Expand(
+      (g ++ read ++ Seq(Literal(null, IntegerType), Literal(null, DoubleType),
+        Literal(null, LongType))) +: asDouble.zipWithIndex.map { case (x, i) =>
+        g ++ read.map(a => Literal(null, a.dataType)) ++
+          Seq(Literal(i), x, ShiftRight(SortableDoubleBits(x), Literal(48)))
+      }.toSeq, g1 ++ readAs ++ Seq(p1, v1, b1), child)
+    val onRead = AttributeMap(read.zip(readAs))
+    val ridingOut = riding.zipWithIndex.map { case (ae, j) =>
+      val own = ae.transform { case a: Attribute => onRead.getOrElse(a, a) }
+        .asInstanceOf[AggregateExpression]
+      Alias(own.copy(filter = Some(own.filter.fold[Expression](IsNull(p1))(And(IsNull(p1), _)))),
+        s"__ma$j")()
     }
+    val pass1 = Aggregate(g1 ++ Seq(p1, b1), g1 ++ Seq(p1, b1,
+      Alias(Count(v1).toAggregateExpression(), "__bc")(),
+      Alias(Min(v1).toAggregateExpression(), "__blo")(),
+      Alias(Max(v1).toAggregateExpression(), "__bhi")()) ++ ridingOut,
+      Filter(Or(IsNull(p1), IsNotNull(v1)), expand1))
+    val (g2, p2, v2) = (keys.indices.map(i => attr(s"__pg$i", keys(i))), pcol, v)
+    val pass2 = Filter(IsNotNull(v2), Expand(asDouble.zipWithIndex.map { case (x, i) =>
+      g ++ Seq(Literal(i), x) }.toSeq, g2 ++ Seq(p2, v2), child))
 
-    def substitute(e: Expression): Expression = e.transformUp {
-      case ae: AggregateExpression =>
-        pctOf(ae) match {
-          case Some((v, n, d)) =>
-            UnresolvedAttribute.quoted(specKeys((valueIdx(v), n, d)))
-          case None =>
-            val al = Alias(ae, s"__ma${extraAggs.size}")()
-            extraAggs += al
-            al.toAttribute
-        }
+    val keysOut = g1.map(_.newInstance())
+    val pctOut = specs.values.toSeq.map(i => AttributeReference(s"__pq$i", DoubleType)())
+    val ridingAttrs = ridingOut.map(a => AttributeReference(a.name, a.dataType)())
+    val node = PercentileAggregate(keysOut ++ pctOut ++ ridingAttrs, keys.size,
+      specs.keys.toSeq, agg.stats.sizeInBytes, pass1, pass2)
+    val apartOut = apart.zipWithIndex.map { case (ae, j) => Alias(ae, s"__mb$j")() }
+    val top = if (apart.isEmpty) node else {
+      val ks = keys.zipWithIndex.map { case (k, i) => Alias(k, s"__ak$i")() }
+      Join(node, Aggregate(keys, ks ++ apartOut, child), LeftOuter,
+        keysOut.zip(ks).map { case (a, k) => EqualNullSafe(a, k.toAttribute): Expression }
+          .reduceOption(And), JoinHint.NONE)
     }
+    val mainAttr = (riding.zip(ridingAttrs) ++ apart.zip(apartOut.map(_.toAttribute))).toSeq
 
-    val finalCols: Seq[Column] = agg.aggregateExpressions.map { ne =>
-      val hasPct = ne.exists {
-        case ae: AggregateExpression => pctOf(ae).isDefined
-        case _ => false
+    // ---- the original outputs, ExprIds intact
+    def substitute(e: Expression): Expression = e.transformDown {
+      case ae: AggregateExpression => pctIdx(ae) match {
+        case Some(i) => pctOut(i)
+        case None =>
+          val m = mainAttr.find(_._1.semanticEquals(ae)).get._2
+          // COUNT over no rows is 0, not NULL: the one-row global answer
+          ae.aggregateFunction.defaultResult.fold[Expression](m)(d => Coalesce(Seq(m, d)))
       }
-      if (!hasPct) {
-        keep += ne
-        GraftSqlAccess.column(ne.toAttribute)
-      } else ne match {
-        case al @ Alias(c, name) =>
-          GraftSqlAccess.column(Alias(substitute(c), name)(
-            exprId = al.exprId, qualifier = al.qualifier,
-            explicitMetadata = al.explicitMetadata))
-        case other =>
-          // a NamedExpression that is itself an aggregate call without an
-          // Alias cannot occur in a resolved Aggregate; bail via exception
-          // to the fallback
-          throw new IllegalStateException(s"unexpected aggregate entry $other")
-      }
+      case k if keys.exists(_.semanticEquals(k)) => keysOut(keys.indexWhere(_.semanticEquals(k)))
     }
-
-    val mainDf =
-      if (agg.groupingExpressions.isEmpty && keep.isEmpty && extraAggs.isEmpty)
-        // all-percentile GLOBAL aggregate (q14's quartile CTE shape): the
-        // main side exists only to supply the one-row-even-on-empty-input
-        // contract — a global Aggregate over the child would re-evaluate
-        // the whole corpus-side subtree to produce a constant row (one
-        // full extra pass measured on tlc_sql_q14). A 1-row range supplies
-        // the row for free; the left join still yields NULL percentiles
-        // when the pct side is empty.
-        spark.range(1).toDF()
-      else GraftSqlAccess.ofRows(spark,
-        Aggregate(agg.groupingExpressions, (keep ++ extraAggs).toSeq, child))
-    val cond: Column =
-      if (groupKeyAttrs.isEmpty) GraftSqlAccess.column(Literal(true))
-      else GraftSqlAccess.column(
-        nullFree(groupKeyAttrs).zip(pctGroups).map { case (l, r) =>
-          EqualTo(l, UnresolvedAttribute.quoted(r)): Expression
-        }.reduce(And))
-    val out = mainDf.join(pct, cond, "left").select(finalCols: _*)
-
-    // splice back fully optimized (the experimental batch runs after the
-    // main ones) and verify the contract the parent operators rely on:
-    // same output ids, names and types, same order
-    val newPlan = GraftSqlAccess.optimizedPlan(out)
-    require(newPlan.output.size == agg.output.size &&
+    val newPlan = Project(agg.aggregateExpressions.map {
+      case al @ Alias(e, name) => Alias(substitute(e), name)(exprId = al.exprId,
+        qualifier = al.qualifier, explicitMetadata = al.explicitMetadata)
+      case a => Alias(substitute(a), a.name)(exprId = a.exprId, qualifier = a.qualifier)
+    }, top)
+    require(newPlan.resolved && newPlan.output.size == agg.output.size &&
       newPlan.output.zip(agg.output).forall { case (a, b) =>
         a.exprId == b.exprId && a.name == b.name && a.dataType == b.dataType
       }, "percentile rewrite changed the aggregate's output contract")

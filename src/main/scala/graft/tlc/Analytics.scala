@@ -281,13 +281,11 @@ object Analytics {
   def q11HvfhvVsTaxiPricing(t: TlcTables): DataFrame = {
     val taxi = col("service_type").isin("yellow", "green")
     val hv = col("service_type") === "hvfhv"
-    // the conditional medians ride the rule's stacked PercentileCont batch:
-    // the when(...)-without-otherwise values are NULL off-condition, and
-    // QuantileRefine's NULL handling gives exactly the builtin's
-    // skip-NULLs semantics. zone × hour groups are FIXED-cardinality
-    // (~6.4k), so per-group rows grow linearly with the corpus — the
-    // textbook case for manyGroups (state stays off the driver) plus
-    // no single-task value map.
+    // the conditional medians ride the rule's one percentile batch: the
+    // when(...)-without-otherwise values are NULL off-condition, and the
+    // rewrite skips NULL values exactly as the builtin does. zone × hour
+    // groups are FIXED-cardinality (~6.4k), so per-group rows grow
+    // linearly with the corpus — no single-task value map.
     def median(svc: Column, c: String): Column = percentile(when(svc, col(c)), lit(0.5))
     val base = valid(t)
       .filter(col("price_per_mile").between(0.5, 50) &&
@@ -426,9 +424,9 @@ object Analytics {
       .filter(col("service_type") === "hvfhv" && col("take_rate").between(0, 1))
       .join(broadcast(t.dimDate), col("pickup_date") === col("date_id"))
       .join(broadcast(t.dimHvfhsCompany), Seq("hvfhs_license_num"))
-    // all three quartiles from ONE stacked PercentileCont batch (vs five
-    // separate sort-aggs in the reference SQL); month × company groups
-    // grow with the data span → the rule's manyGroups.
+    // all three quartiles from ONE percentile batch (vs five separate
+    // sort-aggs in the reference SQL); month × company groups grow with
+    // the data span.
     pre.groupBy("year", "month", "month_name", "company_name")
       .agg(
         count(lit(1)).as("trip_count"),

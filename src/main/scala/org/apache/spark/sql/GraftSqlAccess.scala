@@ -23,4 +23,10 @@ object GraftSqlAccess {
     * through the classic bridge. */
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
     classic.ExpressionUtils.column(e)
+
+  /** `e` with -0.0 and NaN normalized as GROUP BY and join keys are. */
+  def normalizeFloats(
+      e: org.apache.spark.sql.catalyst.expressions.Expression
+  ): org.apache.spark.sql.catalyst.expressions.Expression =
+    org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
 }

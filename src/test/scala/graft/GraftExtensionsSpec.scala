@@ -51,7 +51,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
   private val allPieces = (
     Set("cosine_sim", "long_dot_prefix", "jaro_winkler", "ngrams", "char_grams",
       "sortable_double_bits"),
-    Set("graft.plans.TopKStrategy$"),
+    Set("graft.plans.TopKStrategy$", "graft.plans.PercentileAggregateStrategy$"),
     Set("graft.plans.RewriteTopKWindow", "graft.plans.RewritePercentileAgg"))
 
   test("cosine_sim resolves from the catalog registry (no register() call)") {
@@ -123,7 +123,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
       val once = snapshot(s)
       GraftExtensions.register(s)
       assert(snapshot(s) == once)
-      assert(s.experimental.extraStrategies.size == 1 &&
+      assert(s.experimental.extraStrategies.size == 2 &&
         s.experimental.extraOptimizations.size == 2)
     }
     withExtendedSession { s =>
