@@ -27,15 +27,12 @@ package graft
   */
 object Bench {
   /** Session confs of every measurement main (Bench, ProfileQuery,
-    * PlanDump), so their numbers and plans are comparable.
-    *  - The suite compiles far more than the default 100 cached generated
-    *    classes; with the warm pass evicting the cache, every timed stage
-    *    re-ran Janino (dd4: 20.5 s benched vs 4.2 s isolated in round 1).
-    *  - Base tables stay hot across the suite (see Tables.memo's scaladoc):
-    *    cold per-query parquet decode would add format-decoder cost that is
-    *    not operator work. */
+    * PlanDump), so their numbers and plans are comparable: base tables
+    * stay hot across the suite (see Tables.memo's scaladoc), since cold
+    * per-query parquet decode would add format-decoder cost that is not
+    * operator work. (The codegen cache size every session gets is set by
+    * [[Session.local]].) */
   val measurementConfs: Seq[(String, String)] = Seq(
-    "spark.sql.codegen.cache.maxEntries" -> "4096",
     "spark.graft.cacheTables" -> "true")
 
   def main(args: Array[String]): Unit = {

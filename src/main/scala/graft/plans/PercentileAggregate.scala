@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet, Bound
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, Statistics}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.adaptive.CoalesceShufflePartitions
 import org.apache.spark.sql.types.DataType
 
 /** The exact percentiles of one aggregate, planned by
@@ -68,9 +69,15 @@ case class PercentileAggregateExec(
     val types = output.map(_.dataType)
     val keyTypes = types.take(k)
     val mainTypes = pass1.output.drop(k + 5).map(_.dataType)
-    val hist = pass1.execute()
-    // as many tasks as pass 1's final aggregate runs (AQE sizes those)
-    val parts = if (k == 0) 1 else hist.getNumPartitions.max(1)
+    // AQE coalesces no shuffle read below this operator: it forms no
+    // coalesce group under a binary node whose leaves are not all query
+    // stages, and pass 2's leaves are scans. So pass 1's materialized stage
+    // is coalesced here, by Spark's own rule, before its final aggregate
+    // runs (a no-op without AQE, where pass 1 holds no query stage).
+    val hist = CoalesceShufflePartitions(session).apply(pass1).execute()
+    // as many tasks as pass 1's final aggregate runs, at most the
+    // session's shuffle partitions
+    val parts = if (k == 0) 1 else hist.getNumPartitions.min(conf.numShufflePartitions).max(1)
 
     // (i) every group's histogram in one task, its ranks located there
     val located = hist.mapPartitions { rows =>

@@ -5,7 +5,6 @@ import java.util.concurrent.{Callable, ExecutionException, Executors}
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
 
 /** Command-line pipeline runner (reference: src/cli.py `run-e2e` /
   * `run-analytics`):
@@ -18,18 +17,26 @@ import org.apache.spark.sql.types.StructType
   * Loads each raw source with the drift-tolerant loader (drift reports go to
   * stderr), runs the full pipeline, and writes under --out:
   * fact_trips/ (partitioned by pickup_date), agg_* tables, dim_* tables,
-  * data_quality_metrics/, and analytics/<query>/ for all 14 queries.
-  * Downloading stays outside the engine (SURVEY.md §2.1 S4).
+  * data_quality_metrics/, ingestion_log/ and analytics/<query>/ for all 14
+  * queries. Downloading stays outside the engine (SURVEY.md §2.1 S4).
   *
-  * Stages run one after another, but the tables WITHIN a stage (the
-  * aggregates, the dims, the analytics results) do not depend on one
-  * another, so they are written concurrently on
+  * Stages: load → quality → standardize → aggregates → dims → analytics →
+  * finalize. They run one after another, but the work WITHIN a stage (the
+  * three services' loads and quality scans, the fact and quality-metrics
+  * writes, the aggregates, the dims, the analytics results) is
+  * independent, so it runs concurrently on
   * `spark.sparkContext.defaultParallelism` driver threads (see
-  * [[writeConcurrently]]): each write is a short chain of small jobs that
+  * [[writeConcurrently]]): each piece is a short chain of small jobs that
   * alone leaves most cores idle, and Spark runs jobs submitted from several
   * threads of one session side by side. A stage returns only once all of
-  * its writes have finished, so each `[timing]` line still covers exactly
+  * its pieces have finished, so each `[timing]` line still covers exactly
   * its stage.
+  *
+  * Each raw file is scanned once before the fact write: its quality scan,
+  * whose total is also the row count the ingestion log records (the
+  * reference's per-file validation, S5, without a second read). The fold
+  * (`run-incremental`) decides per file, on the driver, whether it is
+  * already loaded (S6), and leaves loaded files out whole.
   */
 object Cli {
 
@@ -127,32 +134,37 @@ object Cli {
     withSession("graft-tlc-pipeline")(runPipeline(_, opts))
   }
 
-  /** A write that failed inside a concurrent stage, named by its table. */
+  /** A task that failed inside a concurrent stage, named by the table it
+    * wrote or the service it read. */
   final class WriteFailed(val table: String, cause: Throwable)
-    extends RuntimeException(s"write of '$table' failed: ${cause.getMessage}", cause)
+    extends RuntimeException(s"'$table' failed: ${cause.getMessage}", cause)
 
-  /** Runs `writes` (table → write) on `threads` driver threads, capped at
-    * the number of writes, and returns once EVERY write has finished. A
-    * failure does not cut its siblings short: all of them run to the end,
-    * then the first failure in `writes` order is thrown as [[WriteFailed]],
-    * with the others attached as suppressed exceptions. The pool's threads
-    * are created from the calling thread, so they inherit its active
-    * session and Spark local properties. */
-  private[graft] def writeConcurrently(threads: Int, writes: Seq[(String, () => Unit)]): Unit =
-    if (writes.nonEmpty) {
-      val pool = Executors.newFixedThreadPool(math.max(1, math.min(threads, writes.size)))
+  /** Runs `tasks` (name → body) on `threads` driver threads, capped at the
+    * number of tasks, and returns once EVERY task has finished, with their
+    * results in `tasks` order whatever order they finished in. A failure
+    * does not cut its siblings short: all of them run to the end, then the
+    * first failure in `tasks` order is thrown as [[WriteFailed]], with the
+    * others attached as suppressed exceptions. The pool's threads are
+    * created from the calling thread, so they inherit its active session
+    * and Spark local properties. */
+  private[graft] def writeConcurrently[T](threads: Int, tasks: Seq[(String, () => T)]): Seq[T] =
+    if (tasks.isEmpty) Seq.empty
+    else {
+      val pool = Executors.newFixedThreadPool(math.max(1, math.min(threads, tasks.size)))
       try {
-        val pending = writes.map { case (table, write) =>
-          table -> pool.submit(new Callable[Unit] { def call(): Unit = write() })
+        val pending = tasks.map { case (name, task) =>
+          name -> pool.submit(new Callable[T] { def call(): T = task() })
         }
-        val failures = pending.flatMap { case (table, f) =>
-          try { f.get(); None }
-          catch { case e: ExecutionException => Some(new WriteFailed(table, e.getCause)) }
+        val outcomes = pending.map { case (name, f) =>
+          try Right(f.get())
+          catch { case e: ExecutionException => Left(new WriteFailed(name, e.getCause)) }
         }
+        val failures = outcomes.collect { case Left(e) => e }
         failures.headOption.foreach { first =>
           failures.drop(1).foreach(first.addSuppressed)
           throw first
         }
+        outcomes.collect { case Right(v) => v }
       } finally pool.shutdownNow()
     }
 
@@ -192,66 +204,77 @@ object Cli {
     }
   }
 
-  /** What both runs share: stage timing, the timed raw loads with their
-    * ingestion-log entries, the zones frame, the concurrent stage writer,
-    * the dims stage and the closing log append. */
+  /** One raw file after the `load` and `quality` stages: its loaded frame,
+    * its four quality checks and its ingestion-log entry. */
+  private final case class Ingested(service: String, raw: DataFrame,
+      checks: Seq[QualityChecks.CheckResult], logEntry: IngestionLog.Entry)
+
+  /** The three services in ingestion-log order, with their raw schemas. */
+  private val services = Seq(
+    "yellow" -> Schemas.rawYellow, "green" -> Schemas.rawGreen, "hvfhv" -> Schemas.rawHvfhv)
+
+  /** What both runs share: stage timing, the concurrent stage runner, the
+    * `load` and `quality` stages with their ingestion-log entries, the
+    * zones frame, the dims stage and the closing log append. */
   private final class Run(spark: SparkSession, opts: Map[String, String]) {
     // the percentile rule for the aggregates stage, which in
-    // runIncremental runs before Pipeline.derive registers it
+    // runIncremental runs before any Pipeline call registers it
     graft.GraftExtensions.register(spark)
     val out: String = opts("out")
     val timings = new Timings
     def timed[T](stage: String)(body: => T): T = timings.timed(stage)(body)
 
-    val zones: DataFrame = {
+    /** Read at first use: only the dims and the analytics need it, so a run
+      * that folds nothing in never reads it. */
+    lazy val zones: DataFrame = {
       val path = opts("zones")
       if (path.endsWith(".csv"))
         spark.read.option("header", true).option("inferSchema", true).csv(path)
       else spark.read.parquet(path)
     }
 
-    // Per-file load audit (reference loader.py:264–333): each raw source
-    // load appends an ingestion_log entry with row count, duration, checksum
-    // and status, written by `finish`.
-    private val logEntries = mutable.ArrayBuffer.empty[IngestionLog.Entry]
+    def writeAll[T](tasks: Seq[(String, () => T)]): Seq[T] =
+      writeConcurrently(spark.sparkContext.defaultParallelism, tasks)
 
-    private def loadRaw(key: String, schema: StructType): DataFrame = {
-      val path = opts(key)
-      val t0 = System.nanoTime()
-      val (df, drift) = RawLoader.load(spark, path, schema, new java.io.File(path).getName)
-      if (drift.hasDrift) System.err.println(s"[drift] $key: $drift")
-      val (rows, _, sha) = RawLoader.validate(spark, path)
-      logEntries += IngestionLog.Entry(
-        sequenceId = logEntries.size + 1L,
-        sourceFile = new java.io.File(path).getName,
-        serviceType = key,
-        rowCount = rows,
-        durationSeconds = (System.nanoTime() - t0) / 1e9,
-        status = "completed",
-        errorMessage = None,
-        fileSha256 = sha,
-        loadedAt = new java.sql.Timestamp(System.currentTimeMillis()))
-      df
+    /** The `load` and `quality` stages, each running the three services
+      * side by side. `load` reads each raw file's schema for the drift
+      * report and hashes the file on the driver; the parquet scan itself is
+      * lazy. `quality` is each file's ONE scan: QualityChecks.runAll's
+      * conditional aggregate, whose total is also the row count the
+      * ingestion log records (validators.py's row-count step). Log entries
+      * take sequence ids in service order, whatever order the threads
+      * finish in. Stage retry counts mirror the reference's Prefect task
+      * config (flows.py: load-data 2, quality-check 1); see Retry's
+      * scaladoc for why retries wrap actions. */
+    def ingest(): Seq[Ingested] = {
+      val loaded = timed("load")(writeAll(services.map { case (svc, schema) =>
+        svc -> (() => Retry.withRetries(2, s"load-$svc") {
+          val path = opts(svc)
+          val t0 = System.nanoTime()
+          val file = new java.io.File(path).getName
+          val (df, drift) = RawLoader.load(spark, path, schema, file)
+          if (drift.hasDrift) System.err.println(s"[drift] $svc: $drift")
+          (svc, df, file, RawLoader.sha256(path), (System.nanoTime() - t0) / 1e9)
+        })
+      }))
+      timed("quality")(writeAll(loaded.zipWithIndex.map {
+        case ((svc, df, file, sha, loadSecs), i) =>
+          svc -> (() => Retry.withRetries(1, s"quality-check:$svc") {
+            val t0 = System.nanoTime()
+            val checks = QualityChecks.runAll(df, svc)
+            Ingested(svc, df, checks, IngestionLog.Entry(
+              sequenceId = i + 1L,
+              sourceFile = file,
+              serviceType = svc,
+              rowCount = QualityChecks.rowCount(checks),
+              durationSeconds = loadSecs + (System.nanoTime() - t0) / 1e9,
+              status = "completed",
+              errorMessage = None,
+              fileSha256 = sha,
+              loadedAt = new java.sql.Timestamp(System.currentTimeMillis())))
+          })
+      }))
     }
-
-    /** The `load` and `quality` stages. Stage retry counts mirror the
-      * reference's Prefect task config (flows.py: load-data 2,
-      * transform-to-fact 2, build-aggregates 2, quality-check 1); see
-      * Retry's scaladoc for why retries wrap actions. `load` covers
-      * validation (row count + column probe + SHA256) of each raw file; the
-      * parquet scan itself is lazy and is paid once, in the fact write.
-      * Pipeline.run executes the quality-check actions eagerly (the rest of
-      * the Result is lazy lineage), so its wall time IS the quality stage. */
-    def loadAndCheck(): Pipeline.Result = {
-      val (rawY, rawG, rawH) = timed("load") {(
-        Retry.withRetries(2, "load-yellow")(loadRaw("yellow", Schemas.rawYellow)),
-        Retry.withRetries(2, "load-green")(loadRaw("green", Schemas.rawGreen)),
-        Retry.withRetries(2, "load-hvfhv")(loadRaw("hvfhv", Schemas.rawHvfhv)))}
-      timed("quality") { Pipeline.run(spark, rawY, rawG, rawH, zones) }
-    }
-
-    def writeAll(writes: Seq[(String, () => Unit)]): Unit =
-      writeConcurrently(spark.sparkContext.defaultParallelism, writes)
 
     /** Dims write WITHOUT a coalesce(1) funnel, like the analytics results:
       * they are bounded (3–1826 rows, naturally few partitions), and plain
@@ -264,13 +287,13 @@ object Cli {
       "dim_hvfhs_company" -> tables.dimHvfhsCompany)
       .map { case (name, df) => name -> (() => df.write.mode("overwrite").parquet(s"$out/$name")) })
 
-    /** The `finalize` stage, then `--timings`. The audit log is
-      * append-only; the sequence continues from the existing tail
-      * ([[IngestionLog.lastSequenceId]]). */
-    def finish(factRows: Long): Unit = {
+    /** The `finalize` stage, then `--timings`. The per-file load audit
+      * (reference loader.py:264–333) is append-only; the sequence continues
+      * from the existing tail ([[IngestionLog.lastSequenceId]]). */
+    def finish(ingested: Seq[Ingested], factRows: Long): Unit = {
       timed("finalize") {
         val base = IngestionLog.lastSequenceId(spark, s"$out/ingestion_log")
-        val entries = logEntries.toSeq.map(e => e.copy(sequenceId = e.sequenceId + base))
+        val entries = ingested.map(i => i.logEntry.copy(sequenceId = i.logEntry.sequenceId + base))
         IngestionLog.write(IngestionLog.build(spark, entries).coalesce(1), s"$out/ingestion_log")
       }
       opts.get("timings").foreach(path =>
@@ -278,35 +301,44 @@ object Cli {
     }
   }
 
+  /** The fact frame of `ingested`: each service standardized, then unioned
+    * and deduplicated by trip_id ([[Standardize.union]]). */
+  private def standardize(ingested: Seq[Ingested]): DataFrame =
+    Standardize.union(ingested.map(i => Standardize.byService(i.service)(i.raw)))
+
   /** The e2e body behind `main`, session-injected so tests can drive it
     * without the session lifecycle.
     *
     * Stages: load → quality → standardize → aggregates → dims → analytics
-    * → finalize, each timed (see [[Timings]]). The 5 aggregates, the 5 dims
-    * and the 14 analytics results are each written concurrently within
-    * their stage.
+    * → finalize, each timed (see [[Timings]]). Load and quality run the
+    * three services side by side and touch each raw file once (see
+    * `Run.ingest`); standardize writes the fact and data_quality_metrics
+    * side by side; the 5 aggregates, the 5 dims and the 14 analytics
+    * results are each written concurrently within their stage.
     *
     * After the fact write, every downstream stage reads the MATERIALIZED
-    * fact_trips back from disk (Pipeline.derive's scaladoc): one
-    * standardize pass per pipeline run, like the reference's warehouse. */
+    * fact_trips back from disk (Pipeline.derive's scaladoc), read once for
+    * its count and for them: one standardize pass per pipeline run, like
+    * the reference's warehouse. */
   private[graft] def runPipeline(spark: SparkSession, opts: Map[String, String]): Unit = {
     val run = new Run(spark, opts)
     import run.{out, timed}
-    val result = run.loadAndCheck()
-    val nFact = timed("standardize") {
-      Retry.withRetries(2, "transform-to-fact") {
-        Pipeline.writeFact(result.fact, s"$out/fact_trips")
-      }
-      Retry.withRetries(1, "quality-check") {
-        result.qualityMetrics.coalesce(1).write.mode("overwrite")
-          .parquet(s"$out/data_quality_metrics")
-      }
-      spark.read.parquet(s"$out/fact_trips").count()
+    val ingested = run.ingest()
+    val fact = standardize(ingested)
+    val quality = QualityChecks.metricsFrame(spark, ingested.map(i => i.service -> i.checks))
+    val (factOnDisk, nFact) = timed("standardize") {
+      run.writeAll(Seq(
+        "fact_trips" -> (() => Retry.withRetries(2, "transform-to-fact") {
+          Pipeline.writeFact(fact, s"$out/fact_trips")
+        }),
+        "data_quality_metrics" -> (() => Retry.withRetries(1, "quality-check") {
+          quality.coalesce(1).write.mode("overwrite").parquet(s"$out/data_quality_metrics")
+        })))
+      // Everything downstream reads the MATERIALIZED fact partitioned by
+      // pickup_date, so date-scoped analytics prune partitions.
+      val onDisk = spark.read.parquet(s"$out/fact_trips")
+      (onDisk, onDisk.count())
     }
-    // Everything downstream reads the MATERIALIZED fact partitioned by
-    // pickup_date — one standardize pass per run, and date-scoped analytics
-    // prune partitions (Pipeline.derive's scaladoc).
-    val factOnDisk = spark.read.parquet(s"$out/fact_trips")
     val (tables, aggregates, analytics) = Pipeline.derive(spark, factOnDisk, run.zones)
 
     timed("aggregates") {
@@ -327,7 +359,7 @@ object Cli {
         name -> (() => mk().write.mode("overwrite").parquet(s"$out/analytics/$name"))
       })
     }
-    run.finish(nFact)
+    run.finish(ingested, nFact)
     println(s"[graft] pipeline complete: $nFact fact rows -> $out")
   }
 
@@ -342,15 +374,20 @@ object Cli {
     * Stages (each timed like runPipeline, so the incremental episode can be
     * set next to the truncate-rebuild of the same state):
     *
-    *   - load/quality: the same drift-tolerant loaders + eager quality
-    *     checks, over the new files only.
-    *   - standardize: IDEMPOTENT by lineage — RawLoader.dropAlreadyLoaded
-    *     against the warehouse fact (reference loader.py's already-loaded
-    *     check, S6) drops rows from files already folded in, so replaying
-    *     a file is a no-op; then ONLY the affected pickup_date partitions
-    *     are rewritten (dynamic partition overwrite; pre-existing rows of
-    *     those dates ride along via a localCheckpoint, which also severs
-    *     the read-from-the-overwritten-path dependency).
+    *   - load/quality: the same concurrent drift-tolerant loads and
+    *     one-scan quality checks, over the new files only.
+    *   - standardize: IDEMPOTENT by lineage, decided per FILE on the driver
+    *     (reference loader.py's already-loaded check, S6's path-level
+    *     manifest check): RawLoader.loadedFiles collects the warehouse
+    *     fact's distinct source_file set once, and a raw file whose name is
+    *     in it is left out whole (a loaded frame carries one constant
+    *     source_file, so a file is either wholly loaded or wholly new).
+    *     Replaying loaded files thus standardizes, checkpoints and counts
+    *     nothing, and still logs each file as `completed` with its row
+    *     count. The new files' fact rows are written to ONLY the affected
+    *     pickup_date partitions (dynamic partition overwrite; pre-existing
+    *     rows of those dates ride along via a localCheckpoint, which also
+    *     severs the read-from-the-overwritten-path dependency).
     *   - aggregates: Aggregations.refresh recomputes just the affected
     *     dates' partitions of every date-grained aggregate — partition
     *     pruning keeps each rebuild's fact scan to those dates; the one
@@ -369,53 +406,60 @@ object Cli {
     * mode could turn a sibling's dynamic overwrite into a static one that
     * deletes every other date.
     *
-    * The affected-date list comes to the driver (calendar-bounded — same
-    * contract as dd7's convergence scalar, never row data). */
+    * The loaded-file set and the affected-date list come to the driver
+    * (bounded by the file count and the calendar — same contract as dd7's
+    * convergence scalar, never row data). */
   private[graft] def runIncremental(spark: SparkSession, opts: Map[String, String]): Unit = {
     val run = new Run(spark, opts)
     import run.{out, timed}
-    val result = run.loadAndCheck()
+    val ingested = run.ingest()
 
-    val existing = spark.read.parquet(s"$out/fact_trips")
     val (nNew, dates) = timed("standardize") {
-      val newFact = RawLoader.dropAlreadyLoaded(result.fact, existing)
-        .localCheckpoint() // consumed by the date probe AND the write
-      val dates = newFact.select("pickup_date").distinct()
-        .collect().map(_.getDate(0)).toSeq.sortBy(_.getTime)
-      if (dates.nonEmpty) {
-        // pre-existing rows of the affected dates ride along; checkpointed
-        // so the dynamic overwrite never reads the path it rewrites
-        val oldRows = Aggregations.filterDates(existing, dates).localCheckpoint()
-        Retry.withRetries(2, "transform-to-fact-incremental") {
-          oldRows.unionByName(newFact)
-            .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-            .partitionBy("pickup_date").parquet(s"$out/fact_trips")
+      val existing = spark.read.parquet(s"$out/fact_trips")
+      val loaded = RawLoader.loadedFiles(existing)
+      val fresh = ingested.filterNot(i => loaded(i.logEntry.sourceFile))
+      if (fresh.isEmpty) (0L, Seq.empty[java.sql.Date])
+      else {
+        val newFact = standardize(fresh)
+          .localCheckpoint() // consumed by the date probe, the write and the count
+        val dates = newFact.select("pickup_date").distinct()
+          .collect().map(_.getDate(0)).toSeq.sortBy(_.getTime)
+        if (dates.nonEmpty) {
+          // pre-existing rows of the affected dates ride along; checkpointed
+          // so the dynamic overwrite never reads the path it rewrites
+          val oldRows = Aggregations.filterDates(existing, dates).localCheckpoint()
+          Retry.withRetries(2, "transform-to-fact-incremental") {
+            oldRows.unionByName(newFact)
+              .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+              .partitionBy("pickup_date").parquet(s"$out/fact_trips")
+          }
         }
+        (newFact.count(), dates)
       }
-      (newFact.count(), dates)
     }
-    timed("aggregates") {
-      if (dates.nonEmpty) {
-        val factAll = spark.read.parquet(s"$out/fact_trips")
+    // the folded fact, read once for the aggregates, the dims and analytics
+    val factAll = timed("aggregates") {
+      if (dates.isEmpty) None
+      else {
+        val fact = spark.read.parquet(s"$out/fact_trips")
         run.writeAll(Aggregations.tables.map { case (name, build) =>
           name -> (() => Retry.withRetries(2, s"build-aggregates-incremental:$name") {
-            Aggregations.refresh(factAll, build, dates, s"$out/$name")
+            Aggregations.refresh(fact, build, dates, s"$out/$name")
           })
         })
+        Some(fact)
       }
     }
-    val derived =
-      if (dates.nonEmpty) Some(Pipeline.derive(spark, spark.read.parquet(s"$out/fact_trips"), run.zones))
-      else None
-    timed("dims") { derived.foreach { case (tables, _, _) => run.writeDims(tables) } }
+    val tables = factAll.map(Pipeline.tables(spark, _, run.zones))
+    timed("dims")(tables.foreach(run.writeDims))
     // The QuantileRefine-family analytics over the FULL warehouse:
     // q04/q11/q13 are the percentile-surface queries expected to amortize
     // their stage floor once real work dominates — running them here, over
     // the whole fact the month was folded into, measures that inside the
     // e2e episode. Each query is sub-timed to show the family's share.
     timed("analytics") {
-      derived.foreach { case (tables, _, _) =>
-        val analytics = Analytics.all(tables)
+      tables.foreach { t =>
+        val analytics = Analytics.all(t)
         run.writeAll(Seq("04_hvfhv_platform_economics", "11_uber_lyft_vs_taxi_pricing",
           "13_hvfhv_take_rate_variance").map { name =>
           name -> (() => run.timings.timed(s"analytics_$name", sub = true) {
@@ -424,7 +468,7 @@ object Cli {
         })
       }
     }
-    run.finish(nNew)
+    run.finish(ingested, nNew)
     println(s"[graft] incremental fold: $nNew new fact rows across " +
       s"${dates.size} dates -> $out")
   }

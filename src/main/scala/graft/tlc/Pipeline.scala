@@ -28,19 +28,20 @@ object Pipeline {
     analytics: Map[String, () => DataFrame])
 
   /** Run the full pipeline on pre-loaded raw frames (no I/O here — pass the
-    * outputs of RawLoader.load, or fixture frames in tests). */
+    * outputs of RawLoader.load, or fixture frames in tests). The quality
+    * checks run eagerly, one scan per frame; everything else is lazy
+    * lineage over the raw frames. The Cli does not call this: it runs the
+    * quality checks per service side by side, writes the fact, and derives
+    * everything downstream from the fact on disk ([[derive]]). */
   def run(spark: SparkSession,
           rawYellow: DataFrame,
           rawGreen: DataFrame,
           rawHvfhv: DataFrame,
           rawTaxiZones: DataFrame): Result = {
 
-    val quality = Seq(
+    val quality = QualityChecks.metricsFrame(spark, Seq(
       "yellow" -> rawYellow, "green" -> rawGreen, "hvfhv" -> rawHvfhv)
-      .map { case (svc, df) =>
-        QualityChecks.toMetricsFrame(spark, svc, QualityChecks.runAll(df, svc))
-      }
-      .reduce(_ unionByName _)
+      .map { case (svc, df) => svc -> QualityChecks.runAll(df, svc) })
 
     val fact = Standardize.all(rawYellow, rawGreen, rawHvfhv)
     val (tables, aggs, analytics) = derive(spark, fact, rawTaxiZones)

@@ -77,6 +77,17 @@ object QualityChecks {
           "excessive_distance" -> excD.toString, "avg_distance" -> s"${r.get(12)}")))
   }
 
+  /** The row count of the table `results` checked: the fare check covers
+    * every row (the speed check covers only those with a distance). */
+  def rowCount(results: Seq[CheckResult]): Long =
+    results.find(_.checkType == "fare_validation").get.totalRows
+
+  /** Every service's results → one data_quality_metrics frame, services in
+    * the given order. */
+  def metricsFrame(spark: org.apache.spark.sql.SparkSession,
+                   results: Seq[(String, Seq[CheckResult])]): DataFrame =
+    results.map { case (svc, r) => toMetricsFrame(spark, svc, r) }.reduce(_ unionByName _)
+
   /** Results → data_quality_metrics-shaped frame. */
   def toMetricsFrame(spark: org.apache.spark.sql.SparkSession,
                      service: String, results: Seq[CheckResult]): DataFrame = {

@@ -16,10 +16,12 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructType
   * intervention exactly like the reference (schema_drift.py:163–168).
   *
   * Idempotency: the reference skips files whose name is already in
-  * `source_file` via NOT IN (loader.py:147–165); here that is a left-anti
-  * join of the new file's lineage key against the sink's distinct
-  * source_file set — or a cheap metadata check when the sink is partitioned
-  * by source_file.
+  * `source_file` via NOT IN (loader.py:147–165). A frame from [[load]]
+  * carries ONE constant source_file, so a file is either wholly loaded or
+  * wholly new: [[loadedFiles]] brings the sink's distinct source_file set to
+  * the driver and the caller leaves a loaded file out whole (S6's
+  * path-level manifest check; the Cli's fold does this), instead of
+  * anti-joining every row against the sink.
   */
 object RawLoader {
 
@@ -99,19 +101,25 @@ object RawLoader {
     md.digest().map("%02x".format(_)).mkString
   }
 
-  /** File-level validation (validators.py:16–89): row count, column names,
-    * and the file's SHA256 checksum. */
+  /** File-level validation as one standalone call (validators.py:16–89):
+    * row count, column names, and the file's SHA256 checksum. It reads the
+    * file again and counts it in its own job, so the Cli does not call it:
+    * its ingestion log takes the row count from the quality scan's total,
+    * the columns from [[load]]'s drift report and the checksum from
+    * [[sha256]]. */
   def validate(spark: SparkSession, path: String): (Long, Seq[String], String) = {
     val df = spark.read.parquet(path)
     (df.count(), df.columns.toSeq, sha256(path))
   }
 
-  /** Idempotent-load filter: drop rows whose source_file already exists in
-    * the sink (NOT IN → left-anti, schema_drift.py:213–215). */
-  def dropAlreadyLoaded(newRows: DataFrame, existing: DataFrame): DataFrame =
-    newRows.join(
-      existing.select(col("source_file")).distinct(),
-      Seq("source_file"), "left_anti")
+  /** The sink's distinct `source_file` values, on the driver: one entry per
+    * file ever loaded into it, so bounded by the file count, never by rows.
+    * Each task dedups its own rows and the driver merges the few names each
+    * sends: one job, no shuffle. */
+  def loadedFiles(sink: DataFrame): Set[String] = {
+    import sink.sparkSession.implicits._
+    sink.select("source_file").as[String].mapPartitions(_.toSet.iterator).collect().toSet
+  }
 
   /** Append to a raw parquet sink, partitioned by lineage so idempotency
     * checks and re-loads are partition-pruned at scale. */

@@ -109,8 +109,20 @@ object SqlRunner {
     stmts.map(spark.sql).last
   }
 
-  def runFile(spark: SparkSession, path: String): DataFrame =
-    runScript(spark, new String(
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
-      java.nio.charset.StandardCharsets.UTF_8))
+  /** [[runScript]] over the file at `path`. A relative path resolves
+    * against the working directory, so a missing file fails naming both the
+    * absolute path tried and that directory. */
+  def runFile(spark: SparkSession, path: String): DataFrame = {
+    val file = java.nio.file.Paths.get(path).toAbsolutePath
+    val bytes =
+      try java.nio.file.Files.readAllBytes(file)
+      catch {
+        case e: java.nio.file.NoSuchFileException =>
+          val missing = new java.io.FileNotFoundException(s"SQL file $file not found " +
+            s"(working directory ${java.nio.file.Paths.get("").toAbsolutePath})")
+          missing.initCause(e)
+          throw missing
+      }
+    runScript(spark, new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
+  }
 }

@@ -136,12 +136,17 @@ object Standardize {
         col("source_file")))
   }
 
-  /** All services → one fact frame. Union-by-construction
+  /** Each service's standardizer, by service name. */
+  val byService: Map[String, DataFrame => DataFrame] =
+    Map("yellow" -> (yellow(_)), "green" -> (green(_)), "hvfhv" -> (hvfhv(_)))
+
+  /** Standardized services → one fact frame. Union-by-construction
     * (standardize.py:24,90,168) becomes unionByName; INSERT OR IGNORE PK
     * dedup becomes dropDuplicates on trip_id. */
+  def union(facts: Seq[DataFrame]): DataFrame =
+    facts.reduce(_ unionByName _).dropDuplicates("trip_id")
+
+  /** All three services → one fact frame ([[union]]). */
   def all(rawYellow: DataFrame, rawGreen: DataFrame, rawHvfhv: DataFrame): DataFrame =
-    yellow(rawYellow)
-      .unionByName(green(rawGreen))
-      .unionByName(hvfhv(rawHvfhv))
-      .dropDuplicates("trip_id")
+    union(Seq(yellow(rawYellow), green(rawGreen), hvfhv(rawHvfhv)))
 }

@@ -1,6 +1,14 @@
 package graft
 
+import java.io.PrintStream
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 import org.apache.spark.sql.functions._
@@ -12,6 +20,56 @@ import graft.tlc.{Cli, Downloader, Fixtures, RawLoader, Schemas, SqlRunner}
   * warehouse layout a downstream `run-analytics` user depends on. */
 class CliE2eSpec extends AnyFunSuite {
   lazy val spark = Fixtures.sparkSession()
+
+  private val Timing = """\[timing\] stage=(\S+) seconds=.*""".r
+
+  /** Runs `body` and returns the jobs each Cli stage submitted, in stage
+    * order: a stage's jobs are those submitted after the previous
+    * `[timing]` line and before its own (stages are barriers, so every job
+    * of a stage runs inside that window). */
+  private def jobsByStage(body: => Unit): Seq[(String, Int)] = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger()
+    val stages = mutable.ArrayBuffer.empty[(String, Int)]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val err = System.err
+    val tap = new PrintStream(err, true) {
+      override def println(line: String): Unit = {
+        line match {
+          case Timing(stage) =>
+            ListenerBusAccess.drain(sc)
+            stages.synchronized(stages += stage -> jobs.getAndSet(0))
+          case _ =>
+        }
+        super.println(line)
+      }
+    }
+    ListenerBusAccess.drain(sc)
+    sc.addSparkListener(listener)
+    System.setErr(tap)
+    try body
+    finally {
+      System.setErr(err)
+      sc.removeSparkListener(listener)
+    }
+    stages.toSeq
+  }
+
+  /** The jobs submitted before the `standardize` stage began. */
+  private def beforeStandardize(stages: Seq[(String, Int)]): Int =
+    stages.takeWhile(_._1 != "standardize").map(_._2).sum
+
+  /** Every data file under `dir` with its size and modification time. */
+  private def files(dir: String): Map[String, (Long, Long)] = {
+    val root = Paths.get(dir)
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.filter(Files.isRegularFile(_)).map { f =>
+      root.relativize(f).toString -> (Files.size(f), Files.getLastModifiedTime(f).toMillis)
+    }.toMap
+    finally walk.close()
+  }
 
   test("cli pipeline produces the full warehouse layout from raw files") {
     val dir = Files.createTempDirectory("graft_cli_e2e").toString
@@ -221,17 +279,20 @@ class CliE2eSpec extends AnyFunSuite {
     z.coalesce(1).write.mode("overwrite").parquet(s"$dir/zones.parquet")
 
     val out = s"$dir/warehouse"
-    Cli.runPipeline(spark, Map(
+    val build = jobsByStage(Cli.runPipeline(spark, Map(
       "yellow" -> s"$dir/yellow.parquet", "green" -> s"$dir/green.parquet",
       "hvfhv" -> s"$dir/hvfhv.parquet", "zones" -> s"$dir/zones.parquet",
-      "out" -> out))
+      "out" -> out)))
+    // one schema read and one two-job quality scan per raw file
+    assert(beforeStandardize(build) <= 9, s"jobs per stage: $build")
     val incOpts = Map(
       "yellow" -> s"$dir/yellow_d62.parquet", "green" -> s"$dir/green_d62.parquet",
       "hvfhv" -> s"$dir/hvfhv_d62.parquet", "zones" -> s"$dir/zones.parquet",
       "out" -> out)
     val overwriteMode = "spark.sql.sources.partitionOverwriteMode"
     val modeBefore = spark.conf.getOption(overwriteMode)
-    Cli.runIncremental(spark, incOpts)
+    val fold = jobsByStage(Cli.runIncremental(spark, incOpts))
+    assert(beforeStandardize(fold) <= 9, s"jobs per stage: $fold")
     // dynamic overwrite is a per-write option: the session conf is untouched
     assert(spark.conf.getOption(overwriteMode) == modeBefore)
 
@@ -242,9 +303,34 @@ class CliE2eSpec extends AnyFunSuite {
     val log = spark.read.parquet(s"$out/ingestion_log")
     assert(log.count() == 6 && log.agg(max("load_sequence_id")).head.getLong(0) == 6L)
 
-    // replay of the SAME files: idempotent no-op (anti-join by lineage)
-    Cli.runIncremental(spark, incOpts)
+    // each log row counts its file's rows; ids follow yellow, green, hvfhv
+    def logRows() = spark.read.parquet(s"$out/ingestion_log").orderBy("load_sequence_id")
+      .select("load_sequence_id", "source_file", "service_type", "row_count", "status")
+      .collect().toSeq.map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3),
+        r.getString(4)))
+    val files6 = Seq("yellow.parquet", "green.parquet", "hvfhv.parquet",
+      "yellow_d62.parquet", "green_d62.parquet", "hvfhv_d62.parquet")
+    val expectedLog = files6.zipWithIndex.map { case (f, i) =>
+      (i + 1L, f, f.takeWhile(_.isLetter), spark.read.parquet(s"$dir/$f").count(), "completed")
+    }
+    assert(logRows() == expectedLog)
+
+    // replay of the SAME files: idempotent no-op. Every file is already in
+    // the fact, so the standardize stage runs only the loaded-file check:
+    // no standardize, checkpoint, date or count job, and no fact write.
+    val factBefore = files(s"$out/fact_trips")
+    val replay = jobsByStage(Cli.runIncremental(spark, incOpts))
+    val checkOnly = jobsByStage {
+      RawLoader.loadedFiles(spark.read.parquet(s"$out/fact_trips"))
+      System.err.println("[timing] stage=check seconds=0")
+    }
+    assert(replay.find(_._1 == "standardize").map(_._2) == checkOnly.headOption.map(_._2),
+      s"replay jobs per stage: $replay; the loaded-file check alone: $checkOnly")
+    assert(beforeStandardize(replay) <= 9, s"jobs per stage: $replay")
+    assert(files(s"$out/fact_trips") == factBefore, "the replay rewrote the fact")
     assert(spark.read.parquet(s"$out/fact_trips").count() == 2 * 22320)
+    // ... and still logs the three files as completed, with their counts
+    assert(logRows() == expectedLog ++ expectedLog.drop(3).map(e => e.copy(_1 = e._1 + 3)))
 
     // folded state == full truncate-rebuild over the combined input
     val comb = s"$dir/combined"
@@ -286,5 +372,30 @@ class CliE2eSpec extends AnyFunSuite {
           assert(a.isEmpty && b.isEmpty, s"$t readable on one side only")
       }
     }
+  }
+
+  test("a truncated raw file fails run-e2e naming its service, before any write") {
+    val dir = Files.createTempDirectory("graft_cli_truncated").toString
+    val (y, g, h, z) = TlcScaledDemo.rawFixture(spark)
+    y.write.mode("overwrite").parquet(s"$dir/yellow.parquet")
+    g.coalesce(1).write.mode("overwrite").parquet(s"$dir/green.parquet")
+    h.write.mode("overwrite").parquet(s"$dir/hvfhv.parquet")
+    z.coalesce(1).write.mode("overwrite").parquet(s"$dir/zones.parquet")
+    // cut green's one data file in half: its parquet footer is gone
+    val part = Files.list(Paths.get(s"$dir/green.parquet")).toArray.map(_.toString)
+      .filter(_.endsWith(".parquet")).head
+    val bytes = Files.readAllBytes(Paths.get(part))
+    Files.write(Paths.get(part), java.util.Arrays.copyOf(bytes, bytes.length / 2))
+
+    val out = s"$dir/warehouse"
+    val err = intercept[Cli.WriteFailed] {
+      Cli.runPipeline(spark, Map(
+        "yellow" -> s"$dir/yellow.parquet", "green" -> s"$dir/green.parquet",
+        "hvfhv" -> s"$dir/hvfhv.parquet", "zones" -> s"$dir/zones.parquet",
+        "out" -> out))
+    }
+    assert(err.table == "green" && err.getMessage.contains("green"), err.getMessage)
+    assert(!Files.exists(Paths.get(out, "fact_trips")), "a fact was written")
+    assert(!Files.exists(Paths.get(out, "ingestion_log")), "a log was written")
   }
 }

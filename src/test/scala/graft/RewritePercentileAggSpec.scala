@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.ListenerBusAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -299,6 +299,47 @@ class RewritePercentileAggSpec extends AnyFunSuite {
             case (a, e) => RewritePercentileAggSpec.sameRow(a, e) },
           s"n=$n seed=$seed\n$sql\n  rewrite: $actual\n  builtin: $expected")
       }
+    }
+  }
+
+  /** The tasks `body` runs and its result. */
+  private def tasksOf[T](body: => T): (T, Int) = {
+    val tasks = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onTaskStart(e: SparkListenerTaskStart): Unit = tasks.incrementAndGet()
+    }
+    ListenerBusAccess.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val r = body
+      ListenerBusAccess.drain(spark.sparkContext)
+      (r, tasks.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("task counts follow the data, not spark.sql.shuffle.partitions") {
+    // 2 groups x 2,520 rows: pass 1's final aggregate and the operator's
+    // own shuffles must shrink with the data as the builtin's do
+    spark.range(0, 5040, 1, 4)
+      .select((col("id") % 2).as("g"), (col("id") * 0.37 + col("id") % 13).as("v"))
+      .createOrReplaceTempView("t_tasks")
+    val sql = """SELECT g, COUNT(*) AS n,
+                        PERCENTILE_CONT(0.25) WITHIN GROUP (ORDER BY v) AS p25,
+                        PERCENTILE_CONT(0.5) WITHIN GROUP (ORDER BY v) AS p50
+                 FROM t_tasks GROUP BY g"""
+    def sorted(rows: Array[Row]) = rows.toSeq.sortBy(_.getLong(0))
+    Fixtures.withConf(spark, "spark.sql.shuffle.partitions" -> "200") {
+      val expected = Fixtures.withConf(spark, Fixtures.builtinPercentile) {
+        sorted(spark.sql(sql).collect())
+      }
+      val df = spark.sql(sql)
+      df.collect() // warm: the count below is the steady state
+      val (actual, tasks) = tasksOf(sorted(spark.sql(sql).collect()))
+      assert(!df.queryExecution.executedPlan.toString.contains("percentile("))
+      assert(tasks <= 29, s"$tasks tasks at 200 shuffle partitions")
+      assert(actual.size == 2 && actual.zip(expected).forall {
+          case (a, e) => RewritePercentileAggSpec.sameRow(a, e) },
+        s"rewrite: $actual\n  builtin: $expected")
     }
   }
 }

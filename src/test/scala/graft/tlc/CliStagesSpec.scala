@@ -66,6 +66,26 @@ class CliStagesSpec extends AnyFunSuite {
     Cli.writeConcurrently(4, Seq.empty)
   }
 
+  test("results come back in input order when the first task finishes last") {
+    val finished = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val othersDone = new CountDownLatch(2)
+    def quick(name: String): (String, () => String) = name -> { () =>
+      finished.add(name)
+      othersDone.countDown()
+      name.toUpperCase
+    }
+    val got = Cli.writeConcurrently(3, Seq(
+      "yellow" -> { () =>
+        assert(othersDone.await(10, TimeUnit.SECONDS))
+        finished.add("yellow")
+        "YELLOW"
+      },
+      quick("green"),
+      quick("hvfhv")))
+    assert(finished.toArray.toSeq.last == "yellow", s"finish order: $finished")
+    assert(got == Seq("YELLOW", "GREEN", "HVFHV"))
+  }
+
   test("the timings total sums the stages, not the sub-timings inside them") {
     val t = new Cli.Timings
     t.record("load", 1.0)

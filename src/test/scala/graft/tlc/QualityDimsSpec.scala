@@ -97,12 +97,15 @@ class QualityDimsSpec extends AnyFunSuite {
   }
 
   test("idempotent load drops rows from already-loaded files (loader.py:147–165)") {
+    // a loaded frame carries one source_file, so the sink's file set decides
+    // each incoming file whole: the replayed one goes, the new one stays
     val first = Fixtures.yellow(spark)
-    val incoming = first.unionByName(
-      first.withColumn("source_file", lit("new_file.parquet")))
-    val result = RawLoader.dropAlreadyLoaded(incoming, first)
-    assert(result.count() == 4)
-    assert(result.select("source_file").distinct().head().getString(0)
+    val incoming = Seq(first, first.withColumn("source_file", lit("new_file.parquet")))
+    val loaded = RawLoader.loadedFiles(first)
+    assert(loaded == Set("yellow_fixture.parquet"))
+    val result = incoming.filterNot(df => loaded(df.select("source_file").head().getString(0)))
+    assert(result.map(_.count()) == Seq(4L))
+    assert(result.head.select("source_file").distinct().head().getString(0)
       == "new_file.parquet")
   }
 }

@@ -28,6 +28,16 @@ class SqlRunnerSpec extends AnyFunSuite {
     assert(stmts == Seq("SELECT 'x--y' AS s"))
   }
 
+  test("a missing SQL file is named by its absolute path and the working directory") {
+    val cwd = java.nio.file.Paths.get("").toAbsolutePath
+    val err = intercept[java.io.FileNotFoundException] {
+      SqlRunner.runFile(spark, "sql/analytics/99_no_such_query.sql")
+    }
+    assert(err.getMessage.contains(cwd.resolve("sql/analytics/99_no_such_query.sql").toString),
+      err.getMessage)
+    assert(err.getMessage.contains(s"working directory $cwd"), err.getMessage)
+  }
+
   test("runScript returns the last statement's result") {
     val df = SqlRunner.runScript(spark,
       "CREATE OR REPLACE TEMP VIEW t_sqlrunner AS SELECT 41 AS v; SELECT v + 1 AS ans FROM t_sqlrunner;")
