@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
   * negatives order below smaller ones. Total order of the longs == total
   * order of the doubles (-0.0 lands immediately below +0.0).
   *
-  * Why an Expression: [[graft.operators.QuantileRefine]] buckets values by
+  * Why an Expression: [[graft.plans.PercentileAggregate]] buckets values by
   * BIT PREFIX (`shiftright(sortable_double_bits(v), s)`), which is monotone
   * by construction and has a FIXED key space of 2^(64−s) buckets — so the
   * histogram pass needs no min/max pre-pass over the data to establish a

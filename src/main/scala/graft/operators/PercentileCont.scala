@@ -1,16 +1,20 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{DataFrame, GraftSqlAccess}
+import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType}
+
+import graft.plans.RewritePercentileAgg
 
 /** Exact interpolated percentiles (PERCENTILE_CONT / Spark's built-in
-  * `percentile`) computed through [[QuantileRefine]]'s mergeable two-pass
-  * histogram refinement — the scale-safe replacement for the builtin on the
-  * TLC fact paths (r13 verdict item 1). Library code asks for it by
-  * writing Spark's `percentile`; [[graft.plans.RewritePercentileAgg]] plans
-  * that onto the same two passes and this interpolation in
-  * [[graft.plans.PercentileAggregate]]. [[group]] serves the callers that
-  * build their own frames (SessionScaleOps a13, ScalarOps q2).
+  * `percentile`) computed by [[graft.plans.PercentileAggregate]]'s
+  * mergeable two-pass histogram refinement — the scale-safe replacement for
+  * the builtin on the TLC fact paths. Library code asks for it by writing
+  * Spark's `percentile`, which [[graft.plans.RewritePercentileAgg]] plans
+  * with the [[ranks]] and [[interpolate]] below; [[group]] serves the
+  * callers that build their own frames (SessionScaleOps a13, ScalarOps q2).
   *
   * Why replace the builtin: Spark's `Percentile` is a
   * TypedImperativeAggregate whose final merge materializes a value → count
@@ -19,8 +23,8 @@ import org.apache.spark.sql.functions._
   * 2 companies, ~265 zones × 24 hours) while fares are near-unique doubles,
   * so that buffer grows LINEARLY with the corpus — at 370M rows the q05
   * `service_type` group map is ~a third of the fact in one task. Every pass
-  * here is a partial-merge hash-agg or a bounded-state window instead
-  * (QuantileRefine's scaladoc), so no task's footprint grows with the
+  * here is a partial-merge hash-agg or bounded per-group state instead
+  * (PercentileAggregate's scaladoc), so no task's footprint grows with the
   * corpus.
   *
   * Why the values are UNCHANGED (the gates stay hash-green without touching
@@ -29,8 +33,8 @@ import org.apache.spark.sql.functions._
   *
   *   - same element selection: value at 0-indexed `floor(position)` and
   *     `ceil(position)` for `position = (n−1)·p` over the non-null values
-  *     in ascending order (ties contiguous), via one QuantileRefine rank
-  *     batch of (rl, rh) = (pos DIV den + 1, +1 if rem > 0) pairs;
+  *     in ascending order (ties contiguous), i.e. the 1-based ranks
+  *     (rl, rh) = (pos DIV den + 1, +1 if rem > 0);
   *   - same interpolation EXPRESSION TREE: `(1−f)·lo + f·hi` with
   *     f = rem/den. For the dyadic fractions the reference uses
   *     (p ∈ {¼, ½, ¾} → den ∈ {2, 4}) both `position` and `f` are exactly
@@ -40,97 +44,76 @@ import org.apache.spark.sql.functions._
   *     return `lo` directly — the builtin returns the lower key in both
   *     cases without arithmetic, and `(1−f)·v + f·v` is NOT guaranteed to
   *     round back to `v`, so the explicit branch matters for bit-parity;
-  *   - same NULL semantics: per-column n counts only non-null values
-  *     (handled inside QuantileRefine); a group with no non-null values is
-  *     absent here and comes back NULL through the caller's left join,
-  *     exactly like the builtin's NULL-on-empty.
+  *   - same NULL semantics: n counts only non-null values, and a group with
+  *     none has no value at either rank, so its percentile is NULL, like the
+  *     builtin's NULL-on-empty.
   *
   * PercentileContSpec pins the bit-identity (`==` on raw doubles) against
   * the builtin across group sizes 1..1000, null-heavy conditional columns,
   * integer inputs, tied neighbours, and 90%-tied zero-inflated data.
   *
-  * Cost model: ONE stacked unpivot of the requested value columns feeds a
-  * single QuantileRefine batch — 2 corpus passes total for ANY number of
-  * percentile columns and fractions (vs 1 pass with corpus-sized task state
-  * for the builtin), plus group-proportional state work. The unpivot feeds
-  * each row to pass 1 once per value column, but pass 1's codegen hash
-  * aggregate combines them per (group, pcol, bucket) before its exchange,
-  * so the shuffle carries bucket rows, never corpus rows (pinned by
-  * PlanAuditSpec). [[group]] reads its input three times (pass 1, pass 2
-  * and the caller's main aggregate), and its callers pay one extra join
-  * (group-keyed, AQE-broadcastable state) to attach the results to their
-  * main aggregate; a rewritten aggregate reads its child twice and joins
-  * nothing (PercentileAggregate's scaladoc).
+  * Cost model: one aggregate reads its input twice (pass 1 with the
+  * aggregate's other functions riding it, and pass 2) for ANY number of
+  * percentile columns and fractions, vs once with corpus-sized task state
+  * for the builtin. Pass 1 feeds each row once per value column, but its
+  * codegen hash aggregate combines them per (group, pcol, bucket) before
+  * its exchange, so the shuffle carries bucket rows, never corpus rows
+  * (pinned by PlanAuditSpec).
   */
 object PercentileCont {
 
   /** `out` column = percentile_cont(num/den) WITHIN GROUP (ORDER BY value).
-    * `den` MUST be a power of two for the bit-parity guarantee (2 and 4
-    * cover the reference's entire percentile surface). */
+    * `den` MUST be a power of two, at most 1024 (the rewrite's dyadic
+    * bound), for the bit-parity guarantee (2 and 4 cover the reference's
+    * entire percentile surface). */
   final case class Spec(out: String, value: String, num: Int, den: Int) {
     require(num >= 0 && num <= den, s"p=$num/$den outside [0,1]")
-    require((den & (den - 1)) == 0 && den > 0,
-      s"den=$den must be a power of two: rem/den is then an exact dyadic " +
-        "double and the interpolation is bit-identical to the builtin")
-    private[PercentileCont] def pairKey = s"${num}_$den"
+    require((den & (den - 1)) == 0 && den > 0 && den <= 1024,
+      s"den=$den must be a power of two up to 1024: rem/den is then an exact " +
+        "dyadic double and the interpolation is bit-identical to the builtin")
+  }
+
+  /** The 1-based floor and ceil ranks of percentile num/den: bigint
+    * expressions over n, the non-null count (input ordinal 0). */
+  private[graft] def ranks(num: Int, den: Int): Seq[Expression] = {
+    val pos = Multiply(Subtract(BoundReference(0, LongType, nullable = false), Literal(1L)),
+      Literal(num.toLong))
+    val lo = Add(IntegralDivide(pos, Literal(den.toLong)), Literal(1L))
+    Seq(lo, Add(lo, If(GreaterThan(Remainder(pos, Literal(den.toLong)), Literal(0L)),
+      Literal(1L), Literal(0L))))
+  }
+
+  /** The builtin's interpolation between the values `lo` and `hi` at
+    * [[ranks]], `n` the non-null count: NULL when they are. */
+  private[graft] def interpolate(lo: Expression, hi: Expression, n: Expression,
+      num: Int, den: Int): Expression = {
+    val rem = Remainder(Multiply(Subtract(n, Literal(1L)), Literal(num.toLong)),
+      Literal(den.toLong))
+    val f = Divide(Cast(rem, DoubleType), Literal(den.toDouble)) // exact dyadic
+    If(Or(EqualTo(rem, Literal(0L)), EqualTo(lo, hi)), lo,
+      Add(Multiply(Subtract(Literal(1.0), f), lo), Multiply(f, hi)))
   }
 
   /** All `specs` per `groupCols` group, one row per group that has at least
     * one non-null value in any spec column: (groupCols..., specs.out...).
+    * It is `percentile` per spec in one aggregate, planned by the rewrite
+    * whatever `spark.graft.sqlPercentileRewrite` says.
     * Callers LEFT-join this onto their main aggregate on `groupCols`.
     *
-    * NULL GROUP KEYS (ADVICE r13): a NULL group key groups normally HERE
-    * (GROUP BY treats NULL as a group, both engines), but an equality left
-    * join drops it — a NULL-keyed group would come back with NULL
-    * percentiles while the builtin computes real values. The two callers,
-    * SessionScaleOps a13 and ScalarOps q2, group by keys that are never
-    * NULL (`o_orderpriority`, a literal). A new caller with a nullable key
-    * must join null-safely too.
-    *
-    * @param manyGroups passed through to QuantileRefine — set when the
-    *                   group count grows with the data (zone×hour×date). */
-  def group(df: DataFrame, groupCols: Seq[String], specs: Seq[Spec],
-            manyGroups: Boolean = false): DataFrame = {
-    require(groupCols.nonEmpty,
-      "global percentiles: group by a lit(1) dummy and drop it after")
-    // 1. unpivot the distinct value columns: (groupCols..., pcol, v, c) —
-    //    one corpus pass feeds every column's histogram at once
-    val valueCols = specs.map(_.value).distinct
-    val stackSql = s"stack(${valueCols.size}, " + valueCols.map(c =>
-      s"'$c', CAST(`$c` AS DOUBLE)").mkString(", ") + ") AS (pcol, v)"
-    val stacked = df
-      .selectExpr(groupCols.map(c => s"`$c`") :+ stackSql: _*)
-      .withColumn("c", lit(1L))
-    // 2. one rank batch over the distinct (num, den) pairs: rl picks the
-    //    floor element, rh the ceil element (same rank when rem = 0)
-    val pairs = specs.map(s => (s.num, s.den)).distinct
-    val rankSpecs = pairs.flatMap { case (num, den) =>
-      Seq(
-        s"l_${num}_$den" -> s"((n - 1) * $num) DIV $den + 1",
-        s"h_${num}_$den" -> (s"((n - 1) * $num) DIV $den + 1 + " +
-          s"(CASE WHEN ((n - 1) * $num) % $den > 0 THEN 1 ELSE 0 END)"))
-    }
-    val at = QuantileRefine.atRankExprs(stacked, groupCols :+ "pcol",
-      rankSpecs, manyGroups = manyGroups)
-    // 3. pivot wide per group and rebuild the builtin's interpolation
-    def pick(s: Spec, rid: String, c: Column): Column =
-      max(when(col("pcol") === s.value && col("rid") === rid, c))
-    val aggs = specs.zipWithIndex.flatMap { case (s, i) =>
-      Seq(
-        pick(s, s"l_${s.pairKey}", col("v")).as(s"__lo$i"),
-        pick(s, s"h_${s.pairKey}", col("v")).as(s"__hi$i"),
-        pick(s, s"l_${s.pairKey}", col("n")).as(s"__n$i"))
-    }
-    val wide = at.groupBy(groupCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
-    val outCols = groupCols.map(col) ++ specs.zipWithIndex.map { case (s, i) =>
-      val lo = col(s"__lo$i")
-      val hi = col(s"__hi$i")
-      val rem = (col(s"__n$i") - 1) * s.num % s.den
-      val f = rem.cast("double") / s.den.toDouble // exact dyadic
-      when(rem === 0 || lo === hi, lo)
-        .otherwise((lit(1.0) - f) * lo + f * hi)
-        .as(s.out)
-    }
-    wide.select(outCols: _*)
+    * NULL GROUP KEYS: a NULL group key groups normally HERE (GROUP BY
+    * treats NULL as a group), but an equality left join drops it — a
+    * NULL-keyed group would come back with NULL percentiles while the
+    * builtin computes real values. The two callers, SessionScaleOps a13 and
+    * ScalarOps q2, group by keys that are never NULL (`o_orderpriority`, a
+    * literal). A new caller with a nullable key must join null-safely too. */
+  def group(df: DataFrame, groupCols: Seq[String], specs: Seq[Spec]): DataFrame = {
+    val spark = df.sparkSession
+    graft.GraftExtensions.register(spark)
+    val pcts = specs.map(s => percentile(col(s.value), lit(s.num.toDouble / s.den)).as(s.out))
+    val agg = GraftSqlAccess.analyzedPlan(df.groupBy(groupCols.map(col): _*)
+      .agg(pcts.head, pcts.tail: _*)).asInstanceOf[Aggregate]
+    require(RewritePercentileAgg.shouldRewrite(agg), s"not rewritable: $agg")
+    GraftSqlAccess.ofRows(spark, RewritePercentileAgg.rewrite(agg))
+      .filter(specs.map(s => col(s.out).isNotNull).reduce(_ || _))
   }
 }

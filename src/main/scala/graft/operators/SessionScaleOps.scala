@@ -158,16 +158,15 @@ object SessionScaleOps extends graft.QueryFamily {
         .join(broadcast(daily.select(col("day").as("report_day"))),
           Seq("report_day"), "left_semi")
       // discrete median via QuantileRefine (rank ⌈n/2⌉, the proven
-      // quantile_disc mapping), manyGroups: report days grow with the
-      // span. Each group holds ≤7 contributions, so the old
-      // percentile_disc builtin was bounded HERE — this rewire is for the
-      // zero-ordered-set-builtins invariant the r13 source tripwire pins,
-      // not a scale fix.
+      // quantile_disc mapping); report days grow with the span. Each
+      // group holds ≤7 contributions, so the old percentile_disc builtin
+      // was bounded HERE — this rewire is for the zero-ordered-set-builtins
+      // invariant the r13 source tripwire pins, not a scale fix.
       QuantileRefine.atRankExprs(
         contrib.select(col("report_day"), col("day_value").as("v"),
           lit(1L).as("c")),
         Seq("report_day"),
-        Seq("med" -> "(n + 1) DIV 2"), manyGroups = true)
+        Seq("med" -> "(n + 1) DIV 2"))
         .select(col("report_day"), col("n").as("n_days"),
           col("v").as("median_7d"))
         .orderBy("report_day")

@@ -5,23 +5,26 @@ import scala.collection.mutable
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet, BoundReference, GenericInternalRow, InterpretedUnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet, BoundReference, Expression, GenericInternalRow, InterpretedUnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, Statistics}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.adaptive.CoalesceShufflePartitions
 import org.apache.spark.sql.types.DataType
 
-/** The exact percentiles of one aggregate, planned by
-  * [[RewritePercentileAgg]]: the two passes of QuantileRefine's histogram
+/** The values at weighted ranks of one aggregate, planned by
+  * [[RewritePercentileAgg]]: the two passes of a bit-prefix histogram
   * refinement as Spark plans, and everything between and after them in ONE
-  * operator that generates no code.
+  * operator that generates no code. It is this library's one exact
+  * value-at-rank engine: the percentile rewrite, PercentileCont.group and
+  * QuantileRefine.atRankExprs all plan onto it.
   *
   * `pass1` is the bit-prefix histogram with the aggregate's other functions
-  * riding it: (keys..., pcol, b, bc, blo, bhi, mains...), one row per
-  * (group, value column, bucket) plus one main row per group whose pcol is
-  * NULL. `pass2` is the value rows: (keys..., pcol, v), v non-NULL. Output:
-  * (keys..., one double per spec, mains...).
+  * riding it: (keys..., pcol, b, bw, blo, bhi, mains...), one row per
+  * (group, value column, bucket) of weight bw plus one main row per group
+  * whose pcol is NULL. `pass2` is the value rows: (keys..., pcol, v, w), v
+  * non-NULL, weight w > 0. Output: (keys..., the value at each rank, the
+  * total weight n per value column, mains...).
   *
   * The operator (i) gathers each group's histogram in one task — bounded by
   * the 2^16 bucket key space, never by the corpus — and locates every rank
@@ -29,16 +32,20 @@ import org.apache.spark.sql.types.DataType
   * collects the other ranks' residual intervals (a few per group) and
   * broadcasts them; (iii) keeps the pass-2 rows inside an interval, and
   * (iv) sorts them per group beside the group's located state, so one
-  * streaming pass selects each rank's value and interpolates. Pass 2 is not
-  * run when no rank needs it. Nothing is cached: step (ii) and step (iv)
-  * both read the located state back from step (i)'s one shuffle.
+  * streaming pass selects each rank's value: the first row whose running
+  * weight reaches the residual rank. Pass 2 is not run when no rank needs
+  * it. Nothing is cached: step (ii) and step (iv) both read the located
+  * state back from step (i)'s one shuffle.
   *
-  * @param specs (value column, num, den) per output percentile, p = num/den
+  * @param ranks per output value, (value column, rank): the rank is a
+  *              bigint expression over the column's total weight n (input
+  *              ordinal 0), evaluated interpreted; a rank outside [1, n]
+  *              has no value (NULL)
   */
 case class PercentileAggregate(
     output: Seq[Attribute],
     keys: Int,
-    specs: Seq[(Int, Int, Int)],
+    ranks: Seq[(Int, Expression)],
     sizeInBytes: BigInt,
     pass1: LogicalPlan,
     pass2: LogicalPlan) extends BinaryNode {
@@ -55,7 +62,7 @@ case class PercentileAggregate(
 case class PercentileAggregateExec(
     output: Seq[Attribute],
     keys: Int,
-    specs: Seq[(Int, Int, Int)],
+    ranks: Seq[(Int, Expression)],
     pass1: SparkPlan,
     pass2: SparkPlan) extends BinaryExecNode {
   import PercentileAggregateExec._
@@ -65,7 +72,7 @@ case class PercentileAggregateExec(
 
   override protected def doExecute(): RDD[InternalRow] = {
     val k = keys
-    val sp = specs.toArray
+    val rk = ranks.toArray
     val types = output.map(_.dataType)
     val keyTypes = types.take(k)
     val mainTypes = pass1.output.drop(k + 5).map(_.dataType)
@@ -83,13 +90,13 @@ case class PercentileAggregateExec(
     val located = hist.mapPartitions { rows =>
       val key = projection(keyTypes)
       rows.map(r => (key(r).copy(), r.copy()))
-    }.groupByKey(new HashPartitioner(parts)).mapValues(locate(k, sp, mainTypes, _))
+    }.groupByKey(new HashPartitioner(parts)).mapValues(locate(k, rk, mainTypes, _))
 
     // (ii) the residual intervals of the ranks not yet answered
     val live = located.flatMap { case (g, s) =>
-      s.r.indices.filter(s.r(_) > 0).map(j => (g, sp(j / 2)._1) -> (j, s.lo(j), s.hi(j)))
+      s.r.indices.filter(s.r(_) > 0).map(j => (g, rk(j)._1) -> (j, s.lo(j), s.hi(j)))
     }.collect().groupBy(_._1).map { case (gp, js) => gp -> js.map(_._2) }
-    val states = located.map { case (g, s) => (Key(g, -1, 0.0), s) }
+    val states = located.map { case (g, s) => (Key(g, -1, 0.0, 0L), s) }
     val rows = if (live.isEmpty) states else {
       // (iii) pass 2: the rows inside a live rank's interval, once per rank
       val intervals = sparkContext.broadcast(live)
@@ -100,7 +107,7 @@ case class PercentileAggregateExec(
           val v = r.getDouble(k + 1)
           intervals.value.getOrElse((g, r.getInt(k)), Array.empty[(Int, Double, Double)])
             .iterator.collect { case (j, lo, hi) if compareDoubles(v, lo) >= 0 &&
-              compareDoubles(v, hi) <= 0 => (Key(g.copy(), j, v), null: State) }
+              compareDoubles(v, hi) <= 0 => (Key(g.copy(), j, v, r.getLong(k + 2)), null: State) }
         }
       })
     }
@@ -122,10 +129,11 @@ case class PercentileAggregateExec(
           while (in.hasNext && in.head._1.rank >= 0) {
             val row = in.next()._1
             if (row.rank != rank) { rank = row.rank; seen = 0L }
-            seen += 1
-            if (seen == s.r(rank)) s.at(rank) = row.v
+            // the first row whose running weight reaches the residual rank
+            if (seen < s.r(rank) && seen + row.w >= s.r(rank)) s.at(rank) = row.v
+            seen += row.w
           }
-          out(s.row(group.g, k, sp, types))
+          out(s.row(group.g, k, types))
         }
       }
     }
@@ -144,9 +152,9 @@ object PercentileAggregateExec {
       case (t, i) => BoundReference(i, t, nullable = true) })
 
   /** A shuffle key: the group, the rank (−1: the group's state, sorted
-    * first) and the value. Hashes by group only, so a group meets in one
-    * task. */
-  case class Key(g: UnsafeRow, rank: Int, v: Double) {
+    * first), the value and its weight. Hashes by group only, so a group
+    * meets in one task; sorts by group, rank and value. */
+  case class Key(g: UnsafeRow, rank: Int, v: Double, w: Long) {
     override def hashCode: Int = g.hashCode
   }
 
@@ -157,37 +165,26 @@ object PercentileAggregateExec {
     else compareDoubles(a.v, b.v)
   }
 
-  /** One group's located state: per column its non-NULL count `n`; per rank
-    * (2 per spec: the floor and ceil elements) its answer `at`, or, while
-    * `r` > 0, its residual interval [lo, hi] and the rank within it. */
-  case class State(main: InternalRow, n: Array[Long], at: Array[Double],
+  /** One group's located state: per value column its total weight `n`; per
+    * rank its value `at` (NULL: none yet), or, while `r` > 0, its residual
+    * interval [lo, hi] and the rank within it. */
+  case class State(main: InternalRow, n: Array[Long], at: Array[java.lang.Double],
       r: Array[Long], lo: Array[Double], hi: Array[Double]) {
 
-    /** The output row: keys, the builtin's interpolation per spec (PercentileCont's
-      * expression tree, so bit-identical), the main aggregates. */
-    def row(g: UnsafeRow, k: Int, specs: Array[(Int, Int, Int)],
-        types: Seq[DataType]): InternalRow = {
-      val o = new GenericInternalRow(types.size)
-      for (i <- 0 until k) o.update(i, g.get(i, types(i)))
-      for (((c, num, den), i) <- specs.zipWithIndex if n(c) > 0) {
-        val (lower, higher) = (at(2 * i), at(2 * i + 1))
-        val rem = (n(c) - 1) * num % den
-        val f = rem.toDouble / den
-        o.update(k + i, if (rem == 0 || compareDoubles(lower, higher) == 0) lower
-          else (1.0 - f) * lower + f * higher)
-      }
-      if (main != null) for (j <- 0 until main.numFields)
-        o.update(k + specs.length + j, main.get(j, types(k + specs.length + j)))
-      o
+    /** The output row: keys, the value at each rank, n per value column,
+      * the main aggregates. */
+    def row(g: UnsafeRow, k: Int, types: Seq[DataType]): InternalRow = {
+      val vals = (0 until k).map(i => g.get(i, types(i))) ++ at ++ n ++
+        (if (main == null) Nil else main.toSeq(types.drop(k + at.length + n.length)))
+      new GenericInternalRow(vals.toArray[Any])
     }
   }
 
   /** Locates every rank of one group in its buckets (pass-1 rows). */
-  private def locate(k: Int, specs: Array[(Int, Int, Int)],
+  private def locate(k: Int, ranks: Array[(Int, Expression)],
       mainTypes: Seq[DataType],
       rows: Iterable[InternalRow]): State = {
-    val cols = specs.map(_._1).max + 1
-    val buckets = Array.fill(cols)(mutable.ArrayBuffer.empty[InternalRow])
+    val buckets = Array.fill(ranks.map(_._1).max + 1)(mutable.ArrayBuffer.empty[InternalRow])
     var main: InternalRow = null
     rows.foreach { r =>
       if (r.isNullAt(k)) main = new GenericInternalRow(
@@ -196,14 +193,14 @@ object PercentileAggregateExec {
     }
     val n = buckets.map(_.iterator.map(_.getLong(k + 2)).sum)
     val sorted = buckets.map(_.sortBy(_.getLong(k + 1)))
-    val s = State(main, n, new Array(2 * specs.length), new Array(2 * specs.length),
-      new Array(2 * specs.length), new Array(2 * specs.length))
-    for (j <- s.r.indices) {
-      val (c, num, den) = specs(j / 2)
-      if (n(c) > 0) {
-        // 1-based rank of the floor (even j) or ceil (odd j) element
-        val pos = (n(c) - 1) * num
-        val rank = pos / den + 1 + (if (j % 2 == 1 && pos % den > 0) 1 else 0)
+    val s = State(main, n, new Array(ranks.length), new Array(ranks.length),
+      new Array(ranks.length), new Array(ranks.length))
+    for (((c, rankOf), j) <- ranks.zipWithIndex) {
+      val rank = rankOf.eval(InternalRow(n(c))) match {
+        case r: Long if r >= 1 && r <= n(c) => r
+        case _ => 0L
+      }
+      if (rank > 0) {
         var below = 0L
         val b = sorted(c).find { b => below += b.getLong(k + 2); below >= rank }.get
         val (lo, hi) = (b.getDouble(k + 3), b.getDouble(k + 4))
@@ -222,7 +219,7 @@ object PercentileAggregateExec {
 object PercentileAggregateStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case p: PercentileAggregate =>
-      PercentileAggregateExec(p.output, p.keys, p.specs, planLater(p.pass1), planLater(p.pass2)) :: Nil
+      PercentileAggregateExec(p.output, p.keys, p.ranks, planLater(p.pass1), planLater(p.pass2)) :: Nil
     case _ => Nil
   }
 }

@@ -4,21 +4,25 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{GraftSqlAccess, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Max, Min, Percentile, PercentileCont => PercentileContCall}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Max, Min, Percentile, PercentileCont => PercentileContCall, Sum}
 import org.apache.spark.sql.catalyst.plans.LeftOuter
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Expand, Filter, Join, JoinHint, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, NumericType}
 
 import graft.functions.SortableDoubleBits
+import graft.operators.PercentileCont
 
 /** Optimizer rule: rewrite `PERCENTILE_CONT(p) WITHIN GROUP (ORDER BY v)`
   * aggregates (Spark's builtin `Percentile` / its `PercentileCont` sugar)
-  * onto [[graft.operators.PercentileCont]]'s mergeable two-pass
-  * reconstruction. It is the one way this library asks for an exact
-  * percentile: the `sql/analytics` files reach it through SqlRunner, and
-  * the DataFrame library (tlc.Aggregations, tlc.Analytics, AggOps a2)
-  * writes `percentile(col, lit(p))` inside its own aggregates.
+  * onto [[PercentileAggregate]], this library's one exact value-at-rank
+  * engine, with [[graft.operators.PercentileCont]]'s ranks and
+  * interpolation. It is the one way this library asks for an exact
+  * percentile: the `sql/analytics` files reach it through SqlRunner, the
+  * DataFrame library (tlc.Aggregations, tlc.Analytics, AggOps a2) writes
+  * `percentile(col, lit(p))` inside its own aggregates, and
+  * `PercentileCont.group` applies [[rewrite]] directly. Its plan builder,
+  * [[build]], also serves `QuantileRefine.atRankExprs`'s weighted ranks.
   *
   * Why: the builtin is a TypedImperativeAggregate whose final merge
   * materializes each group's DISTINCT-value count map in ONE task
@@ -43,8 +47,9 @@ import graft.functions.SortableDoubleBits
   * percentile calls becomes
   *
   * {{{
-  *   Project(aggs over keys, percentiles, main results)  — original names
-  *     PercentileAggregate(                               — and ExprIds
+  *   Project(aggs over keys, interpolated        — original names
+  *           percentiles, main results)          — and ExprIds
+  *     PercentileAggregate(floor and ceil rank per percentile,
   *       pass 1: Aggregate(G, pcol, bucket: histogram + main aggregates,
   *                 Expand(row, row per value column, child)),
   *       pass 2: Expand(row per value column, child))
@@ -123,7 +128,7 @@ object RewritePercentileAgg extends Rule[LogicalPlan] {
     * under it is deterministic: the rewrite evaluates the child twice (pass
     * 1 with the main aggregates, and pass 2), and with rand()/uuid() in it the two evaluations would see
     * different rows, where the builtin sees one. */
-  private def shouldRewrite(agg: Aggregate): Boolean = {
+  private[graft] def shouldRewrite(agg: Aggregate): Boolean = {
     val aes = agg.aggregateExpressions.flatMap(_.collect {
       case ae: AggregateExpression => ae
     })
@@ -146,8 +151,9 @@ object RewritePercentileAgg extends Rule[LogicalPlan] {
     }
   }
 
-  private def rewrite(agg: Aggregate): LogicalPlan = {
-    val child = agg.child
+  /** `agg` planned onto [[PercentileAggregate]]; every percentile call in
+    * it must be rewritable (`shouldRewrite`). */
+  private[graft] def rewrite(agg: Aggregate): LogicalPlan = {
     val keys = agg.groupingExpressions
 
     // ---- distinct value expressions, (value, num, den) specs and main
@@ -166,69 +172,23 @@ object RewritePercentileAgg extends Rule[LogicalPlan] {
       case _ => ()
     })
 
-    // ---- the child, read twice: per row its group key (float keys
-    // normalized as GROUP BY normalizes them) and per value column (pcol,
-    // v), v the value as a double
-    def attr(n: String, e: Expression) = AttributeReference(n, e.dataType, e.nullable)()
-    val g = keys.map(GraftSqlAccess.normalizeFloats)
-    def pcol = AttributeReference("__pcol", IntegerType)()
-    def v = AttributeReference("__v", DoubleType)()
-    val asDouble = values.map(Cast(_, DoubleType))
-
-    // ---- pass 1 and the main aggregates in ONE hash aggregate (Spark's
-    // RewriteDistinctAggregates pattern): each row once as itself (pcol, v,
-    // b NULL), read by the main aggregates, and once per value column with
-    // its bucket, read by the histogram. A main aggregate that cannot ride
-    // it (DISTINCT, or a buffer the hash aggregate cannot hold) runs as its
-    // own aggregate, joined on the group key.
-    val (riding, apart) = mains.partition(ae => !ae.isDistinct &&
-      Aggregate.supportsHashAggregate(ae.aggregateFunction.aggBufferAttributes, Nil))
-    val read = AttributeSet(riding.flatMap(_.references)).toSeq
-    val readAs = read.map(a => AttributeReference(a.name, a.dataType)())
-    val (g1, p1, v1, b1) = (keys.indices.map(i => attr(s"__pg$i", keys(i))), pcol, v,
-      AttributeReference("__b", LongType)())
-    val expand1 = Expand(
-      (g ++ read ++ Seq(Literal(null, IntegerType), Literal(null, DoubleType),
-        Literal(null, LongType))) +: asDouble.zipWithIndex.map { case (x, i) =>
-        g ++ read.map(a => Literal(null, a.dataType)) ++
-          Seq(Literal(i), x, ShiftRight(SortableDoubleBits(x), Literal(48)))
-      }.toSeq, g1 ++ readAs ++ Seq(p1, v1, b1), child)
-    val onRead = AttributeMap(read.zip(readAs))
-    val ridingOut = riding.zipWithIndex.map { case (ae, j) =>
-      val own = ae.transform { case a: Attribute => onRead.getOrElse(a, a) }
-        .asInstanceOf[AggregateExpression]
-      Alias(own.copy(filter = Some(own.filter.fold[Expression](IsNull(p1))(And(IsNull(p1), _)))),
-        s"__ma$j")()
-    }
-    val pass1 = Aggregate(g1 ++ Seq(p1, b1), g1 ++ Seq(p1, b1,
-      Alias(Count(v1).toAggregateExpression(), "__bc")(),
-      Alias(Min(v1).toAggregateExpression(), "__blo")(),
-      Alias(Max(v1).toAggregateExpression(), "__bhi")()) ++ ridingOut,
-      Filter(Or(IsNull(p1), IsNotNull(v1)), expand1))
-    val (g2, p2, v2) = (keys.indices.map(i => attr(s"__pg$i", keys(i))), pcol, v)
-    val pass2 = Filter(IsNotNull(v2), Expand(asDouble.zipWithIndex.map { case (x, i) =>
-      g ++ Seq(Literal(i), x) }.toSeq, g2 ++ Seq(p2, v2), child))
-
-    val keysOut = g1.map(_.newInstance())
-    val pctOut = specs.values.toSeq.map(i => AttributeReference(s"__pq$i", DoubleType)())
-    val ridingAttrs = ridingOut.map(a => AttributeReference(a.name, a.dataType)())
-    val node = PercentileAggregate(keysOut ++ pctOut ++ ridingAttrs, keys.size,
-      specs.keys.toSeq, agg.stats.sizeInBytes, pass1, pass2)
-    val apartOut = apart.zipWithIndex.map { case (ae, j) => Alias(ae, s"__mb$j")() }
-    val top = if (apart.isEmpty) node else {
-      val ks = keys.zipWithIndex.map { case (k, i) => Alias(k, s"__ak$i")() }
-      Join(node, Aggregate(keys, ks ++ apartOut, child), LeftOuter,
-        keysOut.zip(ks).map { case (a, k) => EqualNullSafe(a, k.toAttribute): Expression }
-          .reduceOption(And), JoinHint.NONE)
-    }
-    val mainAttr = (riding.zip(ridingAttrs) ++ apart.zip(apartOut.map(_.toAttribute))).toSeq
+    // ---- per spec its floor and ceil ranks, each row weighing 1
+    val specSeq = specs.keys.toSeq
+    val ranks = specSeq.flatMap { case (c, num, den) => PercentileCont.ranks(num, den).map(c -> _) }
+    val (top, out) = build(agg.child, keys, values.toSeq, Literal(1L), ranks, mains.toSeq,
+      agg.stats.sizeInBytes)
+    val k = keys.size
+    val (keysOut, mainOut) = (out.take(k), out.takeRight(mains.size))
+    val (at, n) = (out.slice(k, k + ranks.size), out.slice(k + ranks.size, out.size - mains.size))
 
     // ---- the original outputs, ExprIds intact
     def substitute(e: Expression): Expression = e.transformDown {
       case ae: AggregateExpression => pctIdx(ae) match {
-        case Some(i) => pctOut(i)
+        case Some(i) =>
+          val (c, num, den) = specSeq(i)
+          PercentileCont.interpolate(at(2 * i), at(2 * i + 1), n(c), num, den)
         case None =>
-          val m = mainAttr.find(_._1.semanticEquals(ae)).get._2
+          val m = mainOut(mains.indexWhere(_.semanticEquals(ae)))
           // COUNT over no rows is 0, not NULL: the one-row global answer
           ae.aggregateFunction.defaultResult.fold[Expression](m)(d => Coalesce(Seq(m, d)))
       }
@@ -244,5 +204,75 @@ object RewritePercentileAgg extends Rule[LogicalPlan] {
         a.exprId == b.exprId && a.name == b.name && a.dataType == b.dataType
       }, "percentile rewrite changed the aggregate's output contract")
     newPlan
+  }
+
+  /** The [[PercentileAggregate]] plan of `child` grouped by `keys`: per
+    * `ranks` entry (value index, rank over n), the value at that weighted
+    * rank among the rows whose value is not NULL, each row weighing
+    * `weight` (a bigint, > 0 on every row), and the `mains` aggregates.
+    * Returns the plan and its outputs: the keys, one double per rank, the
+    * total weight n per value, one attribute per main aggregate. */
+  private[graft] def build(child: LogicalPlan, keys: Seq[Expression],
+      values: Seq[Expression], weight: Expression, ranks: Seq[(Int, Expression)],
+      mains: Seq[AggregateExpression], sizeInBytes: BigInt): (LogicalPlan, Seq[Attribute]) = {
+    // ---- the child, read twice: per row its group key (float keys
+    // normalized as GROUP BY normalizes them) and per value column (pcol,
+    // v, w), v the value as a double, w its weight
+    def attr(n: String, e: Expression) = AttributeReference(n, e.dataType, e.nullable)()
+    val g = keys.map(GraftSqlAccess.normalizeFloats)
+    def pcol = AttributeReference("__pcol", IntegerType)()
+    def v = AttributeReference("__v", DoubleType)()
+    def w = AttributeReference("__w", LongType)()
+    val asDouble = values.map(Cast(_, DoubleType))
+
+    // ---- pass 1 and the main aggregates in ONE hash aggregate (Spark's
+    // RewriteDistinctAggregates pattern): each row once as itself (pcol, v,
+    // w, b NULL), read by the main aggregates, and once per value column
+    // with its bucket, read by the histogram. A main aggregate that cannot
+    // ride it (DISTINCT, or a buffer the hash aggregate cannot hold) runs
+    // as its own aggregate, joined on the group key.
+    val (riding, apart) = mains.partition(ae => !ae.isDistinct &&
+      Aggregate.supportsHashAggregate(ae.aggregateFunction.aggBufferAttributes, Nil))
+    val read = AttributeSet(riding.flatMap(_.references)).toSeq
+    val readAs = read.map(a => AttributeReference(a.name, a.dataType)())
+    val (g1, p1, v1, w1, b1) = (keys.indices.map(i => attr(s"__pg$i", keys(i))), pcol, v, w,
+      AttributeReference("__b", LongType)())
+    val expand1 = Expand(
+      (g ++ read ++ Seq(Literal(null, IntegerType), Literal(null, DoubleType),
+        Literal(null, LongType), Literal(null, LongType))) +: asDouble.zipWithIndex.map {
+        case (x, i) => g ++ read.map(a => Literal(null, a.dataType)) ++
+          Seq(Literal(i), x, weight, ShiftRight(SortableDoubleBits(x), Literal(48)))
+      }, g1 ++ readAs ++ Seq(p1, v1, w1, b1), child)
+    val onRead = AttributeMap(read.zip(readAs))
+    val ridingOut = riding.zipWithIndex.map { case (ae, j) =>
+      val own = ae.transform { case a: Attribute => onRead.getOrElse(a, a) }
+        .asInstanceOf[AggregateExpression]
+      Alias(own.copy(filter = Some(own.filter.fold[Expression](IsNull(p1))(And(IsNull(p1), _)))),
+        s"__ma$j")()
+    }
+    val pass1 = Aggregate(g1 ++ Seq(p1, b1), g1 ++ Seq(p1, b1,
+      Alias(Sum(w1).toAggregateExpression(), "__bw")(),
+      Alias(Min(v1).toAggregateExpression(), "__blo")(),
+      Alias(Max(v1).toAggregateExpression(), "__bhi")()) ++ ridingOut,
+      Filter(Or(IsNull(p1), IsNotNull(v1)), expand1))
+    val (g2, p2, v2, w2) = (keys.indices.map(i => attr(s"__pg$i", keys(i))), pcol, v, w)
+    val pass2 = Filter(IsNotNull(v2), Expand(asDouble.zipWithIndex.map { case (x, i) =>
+      g ++ Seq(Literal(i), x, weight) }, g2 ++ Seq(p2, v2, w2), child))
+
+    val keysOut = g1.map(_.newInstance())
+    val atOut = ranks.indices.map(j => AttributeReference(s"__r$j", DoubleType)())
+    val nOut = values.indices.map(i => AttributeReference(s"__n$i", LongType)())
+    val ridingAttrs = ridingOut.map(a => AttributeReference(a.name, a.dataType)())
+    val node = PercentileAggregate(keysOut ++ atOut ++ nOut ++ ridingAttrs, keys.size,
+      ranks, sizeInBytes, pass1, pass2)
+    val apartOut = apart.zipWithIndex.map { case (ae, j) => Alias(ae, s"__mb$j")() }
+    val top = if (apart.isEmpty) node else {
+      val ks = keys.zipWithIndex.map { case (k, i) => Alias(k, s"__ak$i")() }
+      Join(node, Aggregate(keys, ks ++ apartOut, child), LeftOuter,
+        keysOut.zip(ks).map { case (a, k) => EqualNullSafe(a, k.toAttribute): Expression }
+          .reduceOption(And), JoinHint.NONE)
+    }
+    val mainAttr = riding.zip(ridingAttrs) ++ apart.zip(apartOut.map(_.toAttribute))
+    (top, keysOut ++ atOut ++ nOut ++ mains.map(ae => mainAttr.find(_._1 eq ae).get._2))
   }
 }

@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   * Percentiles are EXACT interpolated PERCENTILE_CONT, like the reference's
   * (aggregations.py:33–50), written as Spark's `percentile` inside each
   * table's own aggregate. [[graft.plans.RewritePercentileAgg]] plans them
-  * onto [[graft.operators.PercentileCont]] (QuantileRefine's mergeable
-  * two-pass histogram refinement) instead of the builtin, whose final merge
+  * onto [[graft.plans.PercentileAggregate]]'s mergeable two-pass histogram
+  * refinement instead of the builtin, whose final merge
   * holds a per-group value-count map in ONE task; on these tables the fares
   * are near-unique doubles, so that buffer grows linearly with the corpus
   * (r13 verdict item 1). The reconstruction is bit-identical to the builtin
@@ -23,11 +23,10 @@ import org.apache.spark.sql.functions._
   * `percentile_approx` would not match a DuckDB oracle at all (SURVEY.md
   * §2.4).
   *
-  * Scale posture: each table is one hash-aggregate over the fact plus the
-  * rule's stacked QuantileRefine batch (two more mergeable passes), joined
-  * on the group key — the percentile state is group-proportional, never
-  * corpus-sized, and carries no broadcast hint (AQE broadcasts it while it
-  * is actually small). The reference truncate-rebuilds (`DELETE FROM
+  * Scale posture: each table reads the fact twice — pass 1, one hash
+  * aggregate carrying the histogram and the table's other aggregates, and
+  * pass 2 — and joins nothing; the percentile state is group-proportional,
+  * never corpus-sized (PercentileAggregate's scaladoc). The reference truncate-rebuilds (`DELETE FROM
   * agg_*`, aggregations.py:19,77,129,178); at 100 TB these are written
   * `partitionBy("trip_date")` by `write` and rebuilt only for affected
   * dates by `refresh`.

@@ -395,8 +395,8 @@ object Cli {
     *     the bounded dims rebuild in full. The five tables write
     *     concurrently, as do the dims.
     *
-    *   - analytics: the three percentile-surface queries (q04/q11/q13 —
-    *     the QuantileRefine family) re-run concurrently over the FULL
+    *   - analytics: the three percentile-surface queries (q04/q11/q13,
+    *     planned onto PercentileAggregate) re-run concurrently over the FULL
     *     folded warehouse, each sub-timed, so their stage-floor
     *     amortization is measured where it is supposed to pay. They are
     *     query-time work, not state maintenance.
@@ -452,7 +452,7 @@ object Cli {
     }
     val tables = factAll.map(Pipeline.tables(spark, _, run.zones))
     timed("dims")(tables.foreach(run.writeDims))
-    // The QuantileRefine-family analytics over the FULL warehouse:
+    // The percentile-surface analytics over the FULL warehouse:
     // q04/q11/q13 are the percentile-surface queries expected to amortize
     // their stage floor once real work dominates — running them here, over
     // the whole fact the month was folded into, measures that inside the

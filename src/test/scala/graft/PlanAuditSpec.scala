@@ -303,18 +303,11 @@ class PlanAuditSpec extends AnyFunSuite {
       s"fences must come from the bit-prefix histogram:\n$phys")
     assert(!phys.toString.contains("percentile("),
       s"no value-count-map percentile aggregate:\n$phys")
-    // the only windows are QuantileRefine's (rid-partitioned: the
-    // constant-size bucket table and the residual interval)
-    val windows = phys.collect {
+    // the ranks are located and selected inside PercentileAggregate: no
+    // window at all, so none over raw fact order
+    assert(phys.collect {
       case w: org.apache.spark.sql.execution.window.WindowExec => w
-    }
-    // (the single-group literal key folds out of the bucket-table windows'
-    // partition specs — those windows are legitimate only because they sit
-    // on the coalesce(1)'d constant-size bucket table)
-    assert(windows.forall(w => w.partitionSpec.toString.contains("rid") ||
-        w.child.toString.contains("Coalesce 1")),
-      s"every window must be a refinement window (bucket-table or residual, " +
-        s"never over raw fact order):\n$phys")
+    }.isEmpty, s"no window may sort the fact:\n$phys")
     // Every global sort must sit above the banded aggregate (a 10-row
     // frame), never between the scan and the band projection.
     phys.collect {
@@ -682,19 +675,11 @@ class PlanAuditSpec extends AnyFunSuite {
     val p = plan("a26_weighted_median")
     assert(p.contains("sortable_double_bits"),
       s"pass 1 must bucket by sortable-bits prefix:\n$p")
-    assert(p.contains("Coalesce 1"),
-      s"bucket-table windows must run single-partition (constant-sized):\n$p")
-    assert(p.contains("BroadcastHashJoin"),
-      s"the residual state attaches broadcast:\n$p")
-    // r14: QuantileRefine scope-persists its groups×rid STATE frame (3 rows
-    // here) so the settled branch does not re-run pass 1 — the only cache
-    // allowed is that bounded state (every cached relation must carry the
-    // state's rid/lo/hi columns, never fact columns): the r11 interim
-    // form's corpus-sized distinct-value cache stays banned.
-    val cached = "InMemoryRelation \\[[^\\]]*\\]".r.findAllIn(p).toSeq
-    assert(cached.nonEmpty && cached.forall(c =>
-        c.contains("rid#") && c.contains("lo#") && !c.contains("l_extendedprice")),
-      s"the only persisted table may be the bounded refinement state:\n$p")
+    assert(p.contains("PercentileAggregate"),
+      s"ranks must be located and selected by PercentileAggregate:\n$p")
+    // nothing is cached at all: the r11 interim form's corpus-sized
+    // distinct-value cache stays banned, and the engine needs no state cache
+    assert(!p.contains("InMemoryRelation"), s"no persisted table:\n$p")
     assert(!p.contains("SortMergeJoin"), p)
   }
 
@@ -772,8 +757,8 @@ class PlanAuditSpec extends AnyFunSuite {
     val p = plan("w12_robust_mad")
     assert("sortable_double_bits".r.findAllIn(p).size >= 2,
       s"median AND MAD must bucket by sortable-bits prefix:\n$p")
-    assert(p.contains("Coalesce 1"),
-      s"bucket-table windows must run single-partition (constant-sized):\n$p")
+    assert("PercentileAggregate".r.findAllIn(p).size >= 2,
+      s"median AND MAD must be located by PercentileAggregate:\n$p")
     // the ONLY caches are the per-group (3-row) median/MAD frames — the
     // r11 interim form's corpus-sized distinct-value count table is gone
     assert(p.contains("InMemoryTableScan"),

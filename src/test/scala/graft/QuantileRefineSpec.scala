@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -30,7 +32,15 @@ class QuantileRefineSpec extends AnyFunSuite {
     rows.toDF("grp", "v").withColumn("c", lit(1L))
   }
 
-  private def builtin(q: Double): Map[String, Double] = {
+  /** [[data]] plus ±0.0, NaN and ±Inf groups whose ranks land on them. */
+  private lazy val nonFinite = {
+    val (nan, inf) = (Double.NaN, Double.PositiveInfinity)
+    data.unionByName((Seq(-0.0, 0.0, -0.0, 0.0, 1.0, -1.0, 0.0).map("gz" -> _) ++
+      Seq(nan, inf, -inf, 1.0, nan, inf, 2.0, -inf).map("gi" -> _) ++
+      Seq(nan, nan, 5.0).map("gn" -> _)).toDF("grp", "v").withColumn("c", lit(1L)))
+  }
+
+  private def builtin(q: Double, data: DataFrame = data): Map[String, Double] = {
     data.createOrReplaceTempView("qr_data")
     spark.sql(
       s"""SELECT grp, percentile_disc($q) WITHIN GROUP (ORDER BY v) AS p
@@ -46,9 +56,15 @@ class QuantileRefineSpec extends AnyFunSuite {
   for (q <- Seq(0.25, 0.5, 0.75)) {
     test(s"matches percentile_disc($q) on messy groups (rounds=0)") {
       val expected = builtin(q)
-      val got = QuantileRefine.atRankExprs(data, Seq("grp"), Seq("p" -> rankExprOf(q)))
-        .collect().map(r => r.getString(0) -> r.getDouble(2)).toMap
+      def disc(in: DataFrame) = QuantileRefine.atRankExprs(in, Seq("grp"),
+        Seq("p" -> rankExprOf(q))).collect().map(r => r.getString(0) -> r.getDouble(2)).toMap
+      val got = disc(data)
       assert(got == expected)
+      // equal as SQL compares them: NaN equals NaN and sorts above +Inf;
+      // -0.0 equals 0.0 (the builtin ties them, the histogram puts -0.0 first)
+      val (want, have) = (builtin(q, nonFinite), disc(nonFinite))
+      assert(have.keySet == want.keySet && have.forall { case (g, v) =>
+        SQLOrderingUtil.compareDoubles(v, want(g)) == 0 }, s"$have vs $want")
     }
   }
 
@@ -73,11 +89,14 @@ class QuantileRefineSpec extends AnyFunSuite {
   }
 
   test("weighted rank over non-distinct rows == rank over the count table") {
-    // same multiset expressed two ways: repeated unit rows vs weights
-    val unitRows = Seq.tabulate(60)(i => ("g", ((i * 31) % 7).toDouble, 1L))
-      .toDF("grp", "v", "c")
-    val weighted = unitRows.groupBy("grp", "v").agg(sum("c").as("c"))
-    for (rx <- Seq("(n + 1) DIV 2", "(n + 3) DIV 4", "1", "n")) {
+    // same multiset expressed two ways: repeated unit rows vs weights; the
+    // second input's five values share one bucket, so each weight-12 row
+    // straddles the middle ranks inside a multi-valued bucket
+    for (unitRows <- Seq(
+      Seq.tabulate(60)(i => ("g", ((i * 31) % 7).toDouble, 1L)).toDF("grp", "v", "c"),
+      Seq.tabulate(60)(i => ("g", 1.0 + (i % 5) * 1e-3, 1L)).toDF("grp", "v", "c"));
+      rx <- Seq("(n + 1) DIV 2", "(n + 3) DIV 4", "1", "n")) {
+      val weighted = unitRows.groupBy("grp", "v").agg(sum("c").as("c"))
       val a = QuantileRefine.atRankExprs(unitRows, Seq("grp"), Seq("x" -> rx))
         .select("v", "n").collect().toSeq
       val b = QuantileRefine.atRankExprs(weighted, Seq("grp"), Seq("x" -> rx))
@@ -91,7 +110,9 @@ class QuantileRefineSpec extends AnyFunSuite {
     // c <= 0 weight row contributes nothing rather than corrupting cum/n.
     val withNulls = data.unionByName(
       Seq(("g3", null.asInstanceOf[java.lang.Double], 1L),
-        ("g3", java.lang.Double.valueOf(1e9), 0L))
+        ("g3", java.lang.Double.valueOf(1e9), 0L),
+        ("g3", java.lang.Double.valueOf(-1e9), -5L),
+        ("g5", null.asInstanceOf[java.lang.Double], 3L))
         .toDF("grp", "v", "c"))
     val clean = QuantileRefine.atRankExprs(data, Seq("grp"),
       Seq("med" -> "(n + 1) DIV 2")).collect().toSet
@@ -112,13 +133,28 @@ class QuantileRefineSpec extends AnyFunSuite {
   }
 
   test("multi-rank batch returns one row per (group, rid) with shared n") {
+    // ranks 0 and n + 1 lie outside [1, n]: they answer no row
     val out = QuantileRefine.atRankExprs(data, Seq("grp"),
-      Seq("lo" -> "1", "med" -> "(n + 1) DIV 2", "hi" -> "n"))
+      Seq("lo" -> "1", "zero" -> "0", "med" -> "(n + 1) DIV 2", "hi" -> "n",
+        "past" -> "n + 1"))
     assert(out.count() == 18) // 6 groups x 3 rids
     val g3 = out.filter(col("grp") === "g3").collect()
       .map(r => r.getString(1) -> (r.getDouble(2), r.getLong(3))).toMap
     assert(g3("lo")._1 == -6.0 && g3("hi")._1 == 6.0)
     assert(g3.values.forall(_._2 == 40L))
+  }
+
+  test("group columns may share the engine's working names, not its output names") {
+    val med = Seq("med" -> "(n + 1) DIV 2")
+    def byGroup(df: DataFrame) = df.collect().map(r => r.getString(0) -> r.getDouble(2)).toMap
+    val want = byGroup(QuantileRefine.atRankExprs(data, Seq("grp"), med))
+    for (name <- Seq("b", "lo", "cum")) {
+      val got = QuantileRefine.atRankExprs(data.withColumnRenamed("grp", name), Seq(name), med)
+      assert(got.columns.toSeq == Seq(name, "rid", "v", "n") && byGroup(got) == want, name)
+    }
+    val e = intercept[IllegalArgumentException](QuantileRefine.atRankExprs(
+      data.withColumnRenamed("grp", "rid"), Seq("rid"), med))
+    assert(e.getMessage.contains("collide with its output names: rid"), e.getMessage)
   }
 
   test("sortable_double_bits is strictly monotone over a hostile value set") {
