@@ -31,8 +31,8 @@ import graft.plans.{PercentileAggregateStrategy, RewritePercentileAgg, RewriteTo
   *    plans onto);
   *  - optimizer rules: `RewriteTopKWindow` (row_number-then-filter top-N
   *    onto TopKPerGroup) and `RewritePercentileAgg` (ascending dyadic
-  *    PERCENTILE_CONT onto PercentileAggregate's two passes, bucketed
-  *    with `sortable_double_bits`);
+  *    PERCENTILE_CONT onto PercentileAggregate's one aggregate over the
+  *    distinct values, keyed by `sortable_double_bits`);
   *  - catalog functions, visible to `spark.sql`, `expr` and
   *    `DESCRIBE FUNCTION`: `cosine_sim`, `long_dot_prefix`, `jaro_winkler`,
   *    `ngrams`, `char_grams`, `sortable_double_bits`.

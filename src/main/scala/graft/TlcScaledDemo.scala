@@ -250,7 +250,7 @@ object TlcScaledDemo extends graft.QueryFamily {
     // pre-computed aggregate, hash-gated end-to-end since r13's rewire of
     // its five percentile columns through PercentileCont (the DuckDB
     // oracle replays the same generation + standardize + quantile_cont
-    // rollup, so the gate checks the mergeable two-pass reconstruction
+    // rollup, so the gate checks the mergeable reconstruction
     // against an independent engine's PERCENTILE_CONT on every
     // zone-hour-date cell).
     "tlc_agg_pricing" -> { (s, _) =>

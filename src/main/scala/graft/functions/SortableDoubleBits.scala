@@ -12,12 +12,12 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
   * negatives order below smaller ones. Total order of the longs == total
   * order of the doubles (-0.0 lands immediately below +0.0).
   *
-  * Why an Expression: [[graft.plans.PercentileAggregate]] buckets values by
-  * BIT PREFIX (`shiftright(sortable_double_bits(v), s)`), which is monotone
-  * by construction and has a FIXED key space of 2^(64−s) buckets — so the
-  * histogram pass needs no min/max pre-pass over the data to establish a
-  * bucketing domain, halving the corpus passes per quantile batch. Codegen
-  * is a single static call, fully inside whole-stage codegen.
+  * Why an Expression: [[graft.plans.PercentileAggregate]] groups each
+  * value by its sortable bits, a long that identifies the value exactly
+  * (−0.0 and 0.0 stay apart, as the builtin's boxed-Double keys keep them;
+  * NaN is one value, above +Inf) and orders like it, so the sort that
+  * follows is a plain long sort and [[toDouble]] gets the value back.
+  * Codegen is a single static call, fully inside whole-stage codegen.
   */
 case class SortableDoubleBits(child: Expression) extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult =
@@ -43,8 +43,10 @@ object SortableDoubleBits {
   /** bits ^ ((bits >> 63) & 0x7fff...): identity for positives, flips the
     * magnitude bits for negatives. Monotone: d1 < d2 ⟺ sortable(d1) <
     * sortable(d2) for all non-NaN doubles. */
-  def sortable(d: Double): Long = {
-    val bits = java.lang.Double.doubleToLongBits(d)
-    bits ^ ((bits >> 63) & 0x7fffffffffffffffL)
-  }
+  def sortable(d: Double): Long = flip(java.lang.Double.doubleToLongBits(d))
+
+  /** The double whose sortable bits are `s`: the flip is its own inverse. */
+  def toDouble(s: Long): Double = java.lang.Double.longBitsToDouble(flip(s))
+
+  private def flip(bits: Long): Long = bits ^ ((bits >> 63) & 0x7fffffffffffffffL)
 }

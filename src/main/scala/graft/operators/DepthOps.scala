@@ -57,7 +57,7 @@ object DepthOps extends graft.QueryFamily {
     // A27: GROUP QUANTILE PROFILE — the p10..p99 discrete-quantile battery
     // per group (the feature-distribution snapshot a data card or drift
     // monitor ships), all six ranks from ONE QuantileRefine batch: one
-    // bit-prefix histogram pass + one residual pass over the fact, total —
+    // aggregate over the distinct values + one sorted pass, one fact read —
     // not six percentile sort-aggs. Rank mapping ceil(q·n) as exact
     // integer arithmetic; DuckDB's quantile_disc matches it (probed over
     // 200 random multisets × 6 q values in r12), so every cell hash-gates.
@@ -355,9 +355,8 @@ object DepthOps extends graft.QueryFamily {
     //
     // Scale shape (r12): both medians run through
     // [[QuantileRefine.atRankExprs]] straight over the fact rows — each
-    // median is bucket-histogram agg (mergeable) → locate bucket on a
-    // constant-size table → exact pass over the residual interval. No task
-    // ever sorts a whole group (the r11-documented bound, retired), and
+    // median is one mergeable aggregate over the distinct values, then one
+    // sorted streaming pass that spills rather than buffering a group, and
     // nothing corpus-sized is persisted: the r11 interim form cached a
     // (flag, price)-count table that is ~fact-sized (prices are nearly
     // unique), so once ADVICE r11's cache-reuse skew was fixed, every

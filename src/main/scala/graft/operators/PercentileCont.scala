@@ -9,8 +9,8 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
 import graft.plans.RewritePercentileAgg
 
 /** Exact interpolated percentiles (PERCENTILE_CONT / Spark's built-in
-  * `percentile`) computed by [[graft.plans.PercentileAggregate]]'s
-  * mergeable two-pass histogram refinement — the scale-safe replacement for
+  * `percentile`) computed by [[graft.plans.PercentileAggregate]]'s one
+  * mergeable aggregate over the distinct values — the scale-safe replacement for
   * the builtin on the TLC fact paths. Library code asks for it by writing
   * Spark's `percentile`, which [[graft.plans.RewritePercentileAgg]] plans
   * with the [[ranks]] and [[interpolate]] below; [[group]] serves the
@@ -22,10 +22,11 @@ import graft.plans.RewritePercentileAgg
   * headline queries the group keys are low-cardinality (3 service types,
   * 2 companies, ~265 zones × 24 hours) while fares are near-unique doubles,
   * so that buffer grows LINEARLY with the corpus — at 370M rows the q05
-  * `service_type` group map is ~a third of the fact in one task. Every pass
-  * here is a partial-merge hash-agg or bounded per-group state instead
-  * (PercentileAggregate's scaladoc), so no task's footprint grows with the
-  * corpus.
+  * `service_type` group map is ~a third of the fact in one task. Here a
+  * group's values leave a map-side hash aggregate that sums the weight of
+  * each (group, value) and reach the rank selection as a sorted stream that
+  * spills (PercentileAggregate's scaladoc), so no task holds them in
+  * memory.
   *
   * Why the values are UNCHANGED (the gates stay hash-green without touching
   * their oracles): this reconstruction reproduces the builtin's result
@@ -52,13 +53,14 @@ import graft.plans.RewritePercentileAgg
   * the builtin across group sizes 1..1000, null-heavy conditional columns,
   * integer inputs, tied neighbours, and 90%-tied zero-inflated data.
   *
-  * Cost model: one aggregate reads its input twice (pass 1 with the
-  * aggregate's other functions riding it, and pass 2) for ANY number of
-  * percentile columns and fractions, vs once with corpus-sized task state
-  * for the builtin. Pass 1 feeds each row once per value column, but its
-  * codegen hash aggregate combines them per (group, pcol, bucket) before
-  * its exchange, so the shuffle carries bucket rows, never corpus rows
-  * (pinned by PlanAuditSpec).
+  * Cost model: one aggregate reads its input once, as the builtin does, for
+  * ANY number of percentile columns and fractions, with the aggregate's
+  * other functions riding the same hash aggregate. It feeds each row once
+  * per value column, but the codegen hash aggregate combines them per
+  * (group, pcol, value) before its one exchange, so the shuffle carries the
+  * distinct values the builtin's partial maps carry, never corpus rows
+  * (pinned by PlanAuditSpec). After it, one sort and one streaming pass
+  * that merges each group's main rows and ranks its values.
   */
 object PercentileCont {
 

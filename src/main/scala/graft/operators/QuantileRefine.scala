@@ -12,23 +12,23 @@ import graft.plans.RewritePercentileAgg
   * aggregations only (reference semantics: percentile_disc / median /
   * weighted median, cf. the reference's aggregations.sql percentile
   * rollups). It is a builder over [[graft.plans.PercentileAggregate]], the
-  * engine the percentile rewrite plans onto, whose scaladoc has the two
-  * passes: a bit-prefix histogram ([[graft.functions.SortableDoubleBits]],
-  * a fixed 2^16 key space) that locates each rank in one bucket, then an
-  * exact selection over the rows of the buckets holding more than one
-  * value. No task sorts a whole group and nothing is cached.
+  * engine the percentile rewrite plans onto, whose scaladoc has the steps:
+  * a map-side hash aggregate sums the weight of each (group, value), keyed
+  * by [[graft.functions.SortableDoubleBits]], one exchange brings a group
+  * to one task, and one streaming pass over its values, sorted, answers
+  * every rank. A group's values meet in that task as a sorted stream that
+  * spills, never as an in-memory buffer, and nothing is cached.
   *
   * NULL semantics: NULL values and non-positive weights are dropped up
   * front, matching the ordered-set builtins (percentile_disc /
   * percentile_cont ignore NULLs).
   *
-  * Exactness: bucket assignment is monotone non-decreasing in v, so
-  * cumulative bucket weights respect value order and the rank-r element
-  * lies in the located bucket by construction; the final pass then selects
-  * the exact element (equal values accumulate contiguously under any
-  * value-ordered total order, so the selection is independent of row order
-  * within ties). Input rows need NOT be distinct by value — raw fact rows
-  * with weight 1 work directly.
+  * Exactness: the sortable bits order like the values and identify them,
+  * so the running weight over the sorted values is the cumulative weight,
+  * and the rank-r element is the first value whose running weight reaches
+  * r (equal values are adjacent, so the selection is independent of row
+  * order). Input rows need NOT be distinct by value —
+  * raw fact rows with weight 1 work directly.
   */
 object QuantileRefine {
 
@@ -53,7 +53,7 @@ object QuantileRefine {
       groupCols: Seq[String],
       rankSpecs: Seq[(String, String)]): DataFrame = {
     require(values.schema("v").dataType == DoubleType,
-      s"QuantileRefine buckets by double bit-prefix; got " +
+      s"QuantileRefine ranks double values; got " +
         values.schema("v").dataType.simpleString)
     val clash = groupCols.toSet.intersect(Reserved)
     require(clash.isEmpty,

@@ -4,7 +4,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{GraftSqlAccess, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Max, Min, Percentile, PercentileCont => PercentileContCall, Sum}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Percentile, PercentileCont => PercentileContCall, Sum}
 import org.apache.spark.sql.catalyst.plans.LeftOuter
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Expand, Filter, Join, JoinHint, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -50,19 +50,20 @@ import graft.operators.PercentileCont
   *   Project(aggs over keys, interpolated        — original names
   *           percentiles, main results)          — and ExprIds
   *     PercentileAggregate(floor and ceil rank per percentile,
-  *       pass 1: Aggregate(G, pcol, bucket: histogram + main aggregates,
-  *                 Expand(row, row per value column, child)),
-  *       pass 2: Expand(row per value column, child))
+  *       Aggregate(G, pcol, sortable bits: weight per distinct value,
+  *                 n per value column + main aggregates,
+  *         Expand(row, row per value column, child)))
   * }}}
   *
-  * The child is evaluated twice and nothing is cached: pass 1's hash
-  * aggregate combines map-side before its one exchange, and
-  * [[PercentileAggregate]] does the rest without generating code (its
-  * scaladoc has the steps). A main aggregate the hash aggregate cannot
-  * carry (DISTINCT, or a buffer it cannot hold) runs as its own aggregate,
-  * left-joined on the group key. The replacement is built from resolved
-  * Catalyst nodes, never re-analysed; it is left to the optimizer batches
-  * that follow. Any failure while building it falls back to the original
+  * The child is evaluated once and nothing is cached: the aggregate's
+  * partial hash aggregate combines map-side before one exchange on the
+  * group keys, and [[PercentileAggregate]] reads that exchange once,
+  * sorted, merging the main rows and streaming the values (its scaladoc
+  * has the steps). A main aggregate the hash aggregate cannot carry
+  * (DISTINCT, or a buffer it cannot hold) runs as its own aggregate over a
+  * second read of the child, left-joined on the group key. The replacement
+  * is built from resolved Catalyst nodes, never re-analysed; it is left to
+  * the optimizer batches that follow. Any failure while building it falls back to the original
   * aggregate: the rule can only ever trade the builtin for the
   * proven-equal plan.
   *
@@ -125,9 +126,9 @@ object RewritePercentileAgg extends Rule[LogicalPlan] {
   /** Fire only when every percentile call in the aggregate is rewritable —
     * a half-rewritten aggregate would still carry the single-task merge,
     * paying both plans for nothing — and when the aggregate and everything
-    * under it is deterministic: the rewrite evaluates the child twice (pass
-    * 1 with the main aggregates, and pass 2), and with rand()/uuid() in it the two evaluations would see
-    * different rows, where the builtin sees one. */
+    * under it is deterministic: a DISTINCT main aggregate evaluates the
+    * child a second time, and with rand()/uuid() in it the two evaluations
+    * would see different rows, where the builtin sees one. */
   private[graft] def shouldRewrite(agg: Aggregate): Boolean = {
     val aes = agg.aggregateExpressions.flatMap(_.collect {
       case ae: AggregateExpression => ae
@@ -215,34 +216,36 @@ object RewritePercentileAgg extends Rule[LogicalPlan] {
   private[graft] def build(child: LogicalPlan, keys: Seq[Expression],
       values: Seq[Expression], weight: Expression, ranks: Seq[(Int, Expression)],
       mains: Seq[AggregateExpression], sizeInBytes: BigInt): (LogicalPlan, Seq[Attribute]) = {
-    // ---- the child, read twice: per row its group key (float keys
-    // normalized as GROUP BY normalizes them) and per value column (pcol,
-    // v, w), v the value as a double, w its weight
+    // ---- the child, read once: per row its group key (float keys
+    // normalized as GROUP BY normalizes them), the value columns as doubles
     def attr(n: String, e: Expression) = AttributeReference(n, e.dataType, e.nullable)()
+    // the operator finds a group by its keys' bytes, as the hash aggregate does
+    require(Aggregate.supportsHashAggregate(Nil, keys), "group keys not hashable by their bytes")
     val g = keys.map(GraftSqlAccess.normalizeFloats)
-    def pcol = AttributeReference("__pcol", IntegerType)()
-    def v = AttributeReference("__v", DoubleType)()
-    def w = AttributeReference("__w", LongType)()
     val asDouble = values.map(Cast(_, DoubleType))
 
-    // ---- pass 1 and the main aggregates in ONE hash aggregate (Spark's
-    // RewriteDistinctAggregates pattern): each row once as itself (pcol, v,
-    // w, b NULL), read by the main aggregates, and once per value column
-    // with its bucket, read by the histogram. A main aggregate that cannot
-    // ride it (DISTINCT, or a buffer the hash aggregate cannot hold) runs
-    // as its own aggregate, joined on the group key.
+    // ---- the distinct values and the main aggregates in ONE aggregate
+    // (Spark's RewriteDistinctAggregates pattern): each row once as itself
+    // (pcol, b, w NULL), read by the main aggregates and carrying its
+    // weight per non-NULL value column (c), and once per value column as
+    // its value's sortable bits b with weight w. A main aggregate that
+    // cannot ride it (DISTINCT, or a buffer the hash aggregate cannot hold)
+    // runs as its own aggregate, joined on the group key.
     val (riding, apart) = mains.partition(ae => !ae.isDistinct &&
       Aggregate.supportsHashAggregate(ae.aggregateFunction.aggBufferAttributes, Nil))
     val read = AttributeSet(riding.flatMap(_.references)).toSeq
     val readAs = read.map(a => AttributeReference(a.name, a.dataType)())
-    val (g1, p1, v1, w1, b1) = (keys.indices.map(i => attr(s"__pg$i", keys(i))), pcol, v, w,
-      AttributeReference("__b", LongType)())
-    val expand1 = Expand(
-      (g ++ read ++ Seq(Literal(null, IntegerType), Literal(null, DoubleType),
-        Literal(null, LongType), Literal(null, LongType))) +: asDouble.zipWithIndex.map {
-        case (x, i) => g ++ read.map(a => Literal(null, a.dataType)) ++
-          Seq(Literal(i), x, weight, ShiftRight(SortableDoubleBits(x), Literal(48)))
-      }, g1 ++ readAs ++ Seq(p1, v1, w1, b1), child)
+    val g1 = keys.indices.map(i => attr(s"__pg$i", keys(i)))
+    val (p1, b1, w1) = (AttributeReference("__pcol", IntegerType)(),
+      AttributeReference("__b", LongType)(), AttributeReference("__w", LongType)())
+    val c1 = values.indices.map(i => AttributeReference(s"__c$i", LongType)())
+    val expand = Expand(
+      (g ++ read ++ Seq(Literal(null, IntegerType), Literal(null, LongType),
+        Literal(null, LongType)) ++ asDouble.map(x => If(IsNotNull(x), weight, Literal(0L)))) +:
+        asDouble.zipWithIndex.map { case (x, i) =>
+          g ++ read.map(a => Literal(null, a.dataType)) ++
+            Seq(Literal(i), SortableDoubleBits(x), weight) ++ c1.map(_ => Literal(null, LongType))
+        }, g1 ++ readAs ++ Seq(p1, b1, w1) ++ c1, child)
     val onRead = AttributeMap(read.zip(readAs))
     val ridingOut = riding.zipWithIndex.map { case (ae, j) =>
       val own = ae.transform { case a: Attribute => onRead.getOrElse(a, a) }
@@ -250,21 +253,17 @@ object RewritePercentileAgg extends Rule[LogicalPlan] {
       Alias(own.copy(filter = Some(own.filter.fold[Expression](IsNull(p1))(And(IsNull(p1), _)))),
         s"__ma$j")()
     }
-    val pass1 = Aggregate(g1 ++ Seq(p1, b1), g1 ++ Seq(p1, b1,
-      Alias(Sum(w1).toAggregateExpression(), "__bw")(),
-      Alias(Min(v1).toAggregateExpression(), "__blo")(),
-      Alias(Max(v1).toAggregateExpression(), "__bhi")()) ++ ridingOut,
-      Filter(Or(IsNull(p1), IsNotNull(v1)), expand1))
-    val (g2, p2, v2, w2) = (keys.indices.map(i => attr(s"__pg$i", keys(i))), pcol, v, w)
-    val pass2 = Filter(IsNotNull(v2), Expand(asDouble.zipWithIndex.map { case (x, i) =>
-      g ++ Seq(Literal(i), x, weight) }, g2 ++ Seq(p2, v2, w2), child))
+    val body = Aggregate(g1 ++ Seq(p1, b1), g1 ++ Seq(p1, b1,
+      Alias(Sum(w1).toAggregateExpression(), "__bw")()) ++
+      c1.zipWithIndex.map { case (c, i) => Alias(Sum(c).toAggregateExpression(), s"__bn$i")() } ++
+      ridingOut, Filter(Or(IsNull(p1), IsNotNull(b1)), expand))
 
     val keysOut = g1.map(_.newInstance())
     val atOut = ranks.indices.map(j => AttributeReference(s"__r$j", DoubleType)())
     val nOut = values.indices.map(i => AttributeReference(s"__n$i", LongType)())
     val ridingAttrs = ridingOut.map(a => AttributeReference(a.name, a.dataType)())
     val node = PercentileAggregate(keysOut ++ atOut ++ nOut ++ ridingAttrs, keys.size,
-      ranks, sizeInBytes, pass1, pass2)
+      ranks, sizeInBytes, body)
     val apartOut = apart.zipWithIndex.map { case (ae, j) => Alias(ae, s"__mb$j")() }
     val top = if (apart.isEmpty) node else {
       val ks = keys.zipWithIndex.map { case (k, i) => Alias(k, s"__ak$i")() }

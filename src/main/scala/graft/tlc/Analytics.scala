@@ -352,7 +352,7 @@ object Analytics {
     // The ≤6-row result is CHECKPOINTED (r15, q14's lesson) because BOTH
     // the before and after branches consume it: a lazy persist left the
     // cache cold and the two branches raced it, each re-executing the whole
-    // two-pass refinement over the fact; the eager checkpoint materializes
+    // percentile aggregate over the fact; the eager checkpoint materializes
     // the ≤6 rows once at full parallelism.
     val byPeriod = ckpt(scoped
       .groupBy("period", "service_type")

@@ -396,10 +396,10 @@ object Cli {
     *     concurrently, as do the dims.
     *
     *   - analytics: the three percentile-surface queries (q04/q11/q13,
-    *     planned onto PercentileAggregate) re-run concurrently over the FULL
-    *     folded warehouse, each sub-timed, so their stage-floor
-    *     amortization is measured where it is supposed to pay. They are
-    *     query-time work, not state maintenance.
+    *     planned onto PercentileAggregate, each one scan, one exchange and
+    *     one sorted pass per percentile aggregate, as the builtin) re-run
+    *     concurrently over the FULL folded warehouse, each sub-timed. They
+    *     are query-time work, not state maintenance.
     *
     * Dynamic overwrite is a per-write option, never the session conf: the
     * writes of a stage run concurrently, and one restoring a session-wide

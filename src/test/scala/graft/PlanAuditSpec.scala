@@ -814,10 +814,10 @@ class PlanAuditSpec extends AnyFunSuite {
         s"$q must route percentiles through QuantileRefine's histogram:\n" +
           plans.mkString("\n"))
     }
-    // the multi-column batches: the stacked unpivot feeds every column's
-    // rows to pass 1, so its bucket projection must sit under a partial
-    // hash aggregate below the pass-1 exchange — the shuffle then moves
-    // bucket rows, never corpus rows
+    // the multi-column batches: the Expand feeds every column's rows to
+    // the one aggregate, so its sortable-bits projection must sit under a
+    // partial hash aggregate below the exchange — the shuffle then moves
+    // distinct (group, column, value) rows, never corpus rows
     for (q <- Seq("tlc_agg_pricing", "tlc_agg_congestion", "tlc_pipeline_q11")) {
       val p = SparkEntry.queries(q)(spark, sfDir).queryExecution.executedPlan
       val feeds = PlanAuditSpec.pass1Feeds(p)
@@ -954,8 +954,8 @@ object PlanAuditSpec {
     case _ => p +: p.children.flatMap(stage)
   }
 
-  /** The operator feeding each shuffle whose map-side stage computes a
-    * `sortable_double_bits` bucket: QuantileRefine's pass-1 exchanges. */
+  /** The operator feeding each shuffle whose map-side stage computes
+    * `sortable_double_bits`: PercentileAggregate's value exchanges. */
   def pass1Feeds(p: SparkPlan): Seq[SparkPlan] =
     operators(p).collect { case e: ShuffleExchangeLike => e.child }
       .filter(stage(_).exists(_.expressions.exists(

@@ -3,15 +3,18 @@ package graft
 import org.apache.spark.ListenerBusAccess
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.QuantileRefine
 import graft.tlc.{Fixtures, SqlRunner}
 
 /** RewritePercentileAgg (r14 verdict item 3): PERCENTILE_CONT SQL must plan
@@ -75,8 +78,8 @@ class RewritePercentileAggSpec extends AnyFunSuite {
       val rewritten = spark.sql(sql).queryExecution.executedPlan
       assert(!rewritten.toString.contains("percentile("),
         s"rewrite did not fire:\n$rewritten")
-      // pass 1 buckets by sortable_double_bits and combines map-side: its
-      // exchange moves bucket rows, never corpus rows
+      // the values are keyed by sortable_double_bits and combined
+      // map-side: the exchange moves distinct values, never corpus rows
       val feeds = PlanAuditSpec.pass1Feeds(rewritten)
       assert(feeds.nonEmpty && feeds.forall(PlanAuditSpec.isPartialAgg),
         s"rewrite must route through QuantileRefine's histogram:\n$rewritten")
@@ -181,14 +184,16 @@ class RewritePercentileAggSpec extends AnyFunSuite {
     } finally rm(dir)
   }
 
-  /** q04's final executed plan and the jobs its collect() ran. */
-  private def q04(warehouse: String, rewrite: Boolean): (SparkPlan, Int) = {
+  /** q04's final executed plan, the jobs its collect() ran and their call
+    * sites. */
+  private def q04(warehouse: String, rewrite: Boolean): (SparkPlan, Int, Seq[String]) = {
     SqlRunner.registerWarehouse(spark, warehouse)
     spark.conf.set("spark.graft.sqlPercentileRewrite", rewrite.toString)
     val df = SqlRunner.runFile(spark, "sql/analytics/04_hvfhv_platform_economics.sql")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        sites.add(e.stageInfos.map(s => s"${s.name}\n${s.details}").mkString("\n"))
     }
     ListenerBusAccess.drain(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
@@ -199,7 +204,8 @@ class RewritePercentileAggSpec extends AnyFunSuite {
       spark.sparkContext.removeSparkListener(listener)
       spark.conf.set("spark.graft.sqlPercentileRewrite", "true")
     }
-    (df.queryExecution.executedPlan, jobs.get)
+    val jobs = sites.toArray(Array.empty[String]).toSeq
+    (df.queryExecution.executedPlan, jobs.size, jobs)
   }
 
   /** Operators of a final adaptive plan, into query stages and cached
@@ -211,9 +217,9 @@ class RewritePercentileAggSpec extends AnyFunSuite {
     case _ => p +: p.children.flatMap(ran)
   }
 
-  test("q04's plan cost: the child is read twice, nothing is cached, and " +
-    "at most 3 jobs run beyond the builtin's") {
-    val ((on, jobsOn), (_, jobsOff)) = withWarehouse { wh =>
+  test("q04's plan cost: the fact is read once, nothing is cached, the " +
+    "builtin's shuffles, and at most 1 job beyond the builtin's") {
+    val ((on, jobsOn, sitesOn), (off, jobsOff, _)) = withWarehouse { wh =>
       (q04(wh, rewrite = true), q04(wh, rewrite = false))
     }
     val ops = ran(on)
@@ -221,17 +227,22 @@ class RewritePercentileAggSpec extends AnyFunSuite {
       case f: FileSourceScanExec if f.relation.location.rootPaths.exists(
         _.toString.contains("fact_trips")) => f
     }
-    assert(factScans.size == 2, s"the fact must be scanned exactly twice:\n$on")
+    assert(factScans.size == 1, s"the fact must be scanned exactly once:\n$on")
     assert(!ops.exists(_.isInstanceOf[InMemoryTableScanExec]),
       s"the rewrite must cache nothing:\n$on")
-    assert(jobsOn <= jobsOff + 3, s"$jobsOn jobs with the rewrite, $jobsOff without")
+    def shuffles(ops: Seq[SparkPlan]) = ops.count(_.isInstanceOf[ShuffleExchangeLike])
+    assert(shuffles(ops) == shuffles(ran(off)),
+      s"the rewrite must shuffle as often as the builtin:\n$on\n$off")
+    assert(jobsOn <= jobsOff + 1, s"$jobsOn jobs with the rewrite, $jobsOff without")
+    assert(!sitesOn.exists(_.contains("PercentileAggregate")),
+      s"the operator must start no job of its own:\n${sitesOn.mkString("\n")}")
   }
 
   /** A fixed-seed table: (g string, h int, w int, x double, y double,
     * d decimal(12,2)); keys and values NULL at times, `c` a rare (often
     * single-row) group, x and y drawn with −0.0/0.0, NaN, ±Inf and heavy
-    * ties. */
-  private def generated(n: Int, seed: Long): DataFrame = {
+    * ties. `skew` draws 95 of every 100 rows into group `a`. */
+  private def generated(n: Int, seed: Long, skew: Boolean = false): DataFrame = {
     def value(tie: Double): Gen[java.lang.Double] = Gen.frequency(
       1 -> Gen.const(null), 1 -> Gen.const(-0.0), 1 -> Gen.const(0.0),
       1 -> Gen.const(Double.NaN), 1 -> Gen.const(Double.PositiveInfinity),
@@ -239,8 +250,10 @@ class RewritePercentileAggSpec extends AnyFunSuite {
       6 -> Gen.choose(-1e3, 1e3).map(Double.box),
       3 -> Gen.choose(-5, 5).map(i => Double.box(i.toDouble)))
     val row = for {
-      g <- Gen.frequency(1 -> Gen.const(null), 4 -> Gen.const("a"),
-        3 -> Gen.const("b"), 1 -> Gen.const("c"))
+      g <- if (skew) Gen.frequency(1 -> Gen.const(null), 95 -> Gen.const("a"),
+          3 -> Gen.const("b"), 1 -> Gen.const("c"))
+        else Gen.frequency(1 -> Gen.const(null), 4 -> Gen.const("a"),
+          3 -> Gen.const("b"), 1 -> Gen.const("c"))
       h <- Gen.frequency(1 -> Gen.const(null), 4 -> Gen.choose(0, 2).map(Int.box))
       w <- Gen.choose(0, 9)
       x <- value(1.25)
@@ -257,13 +270,13 @@ class RewritePercentileAggSpec extends AnyFunSuite {
 
   test("generated tables: every plan shape stays bit-identical to the builtin") {
     val queries = Seq(
-      // main aggregates that ride pass 1, two value columns
+      // main aggregates that ride the one aggregate, two value columns
       """SELECT g, COUNT(*) AS n, COUNT(x) AS nx, AVG(x) AS ax, SUM(y) AS sy,
                 AVG(d) AS ad, SUM(d) AS sd, MIN(x) AS mn, MAX(d) AS mx,
                 PERCENTILE_CONT(0.5) WITHIN GROUP (ORDER BY x) AS p50,
                 PERCENTILE_CONT(0.25) WITHIN GROUP (ORDER BY y) AS q1
          FROM t GROUP BY g ORDER BY g NULLS FIRST""",
-      // DISTINCT runs beside pass 1 (the congestion shape); FILTER rides it
+      // DISTINCT runs beside the aggregate (the congestion shape); FILTER rides it
       """SELECT g, h, COUNT(DISTINCT w) AS dw, COUNT(*) FILTER (WHERE x > 0) AS pos,
                 SUM(d) FILTER (WHERE y IS NULL) AS sdy,
                 PERCENTILE_CONT(0.75) WITHIN GROUP (ORDER BY x) AS p75
@@ -285,21 +298,51 @@ class RewritePercentileAggSpec extends AnyFunSuite {
                 PERCENTILE_CONT(0.875) WITHIN GROUP (ORDER BY y) AS p875
          FROM t""",
       """SELECT PERCENTILE_CONT(0.25) WITHIN GROUP (ORDER BY x + y) AS q1 FROM t""")
-    for ((n, seed) <- Seq(0 -> 1L, 1 -> 2L, 9 -> 3L, 80 -> 4L, 600 -> 5L)) {
-      generated(n, seed).createOrReplaceTempView("t")
+    // five sizes; a 5,000-row table whose group "a" holds >= 90% of the
+    // rows; the same table with every hash aggregate, the final one
+    // included, spilling to its sort fallback every 500 keys
+    val skewed = generated(5000, 6L, skew = true)
+    assert(skewed.filter(col("g") === "a").count() >= 4500)
+    val inputs = Seq(0 -> 1L, 1 -> 2L, 9 -> 3L, 80 -> 4L, 600 -> 5L).map { case (n, seed) =>
+      (s"n=$n seed=$seed", generated(n, seed), None) } ++ Seq(
+      ("skewed n=5000", skewed, None),
+      ("skewed n=5000, sort fallback", skewed,
+        Some("spark.sql.TungstenAggregate.testFallbackStartsAt" -> "250, 500")))
+    for ((input, table, conf) <- inputs) {
+      table.createOrReplaceTempView("t")
+      def under[T](body: => T): T = conf.fold(body)(kv => Fixtures.withConf(spark, kv)(body))
       for (sql <- queries) {
-        val expected = Fixtures.withConf(spark, Fixtures.builtinPercentile) {
+        val expected = under(Fixtures.withConf(spark, Fixtures.builtinPercentile) {
           spark.sql(sql).collect().toSeq
+        })
+        val (plan, actual) = under {
+          val df = spark.sql(sql)
+          (df.queryExecution.executedPlan.toString, df.collect().toSeq)
         }
-        val df = spark.sql(sql)
-        assert(!df.queryExecution.executedPlan.toString.contains("percentile("),
-          s"rewrite did not fire:\n$sql")
-        val actual = df.collect().toSeq
+        assert(!plan.contains("percentile("), s"rewrite did not fire:\n$sql")
         assert(actual.size == expected.size && actual.zip(expected).forall {
             case (a, e) => RewritePercentileAggSpec.sameRow(a, e) },
-          s"n=$n seed=$seed\n$sql\n  rewrite: $actual\n  builtin: $expected")
+          s"$input\n$sql\n  rewrite: $actual\n  builtin: $expected")
       }
     }
+
+    // weighted ranks: QuantileRefine.atRankExprs over (g, x, weight w)
+    // against percentile_disc over each row repeated w times, equal as SQL
+    // compares doubles (the builtin ties -0.0 with 0.0)
+    generated(2000, 8L).createOrReplaceTempView("t")
+    val disc = Seq("p25" -> (0.25, "(n + 3) DIV 4"), "p50" -> (0.5, "(n + 1) DIV 2"),
+      "p75" -> (0.75, "(3 * n + 3) DIV 4"))
+    val got = QuantileRefine.atRankExprs(
+        spark.table("t").select(col("g"), col("x").as("v"), col("w").as("c")), Seq("g"),
+        disc.map { case (rid, (_, rank)) => rid -> rank })
+      .collect().map(r => (Option(r.getString(0)), r.getString(1)) -> r.getDouble(2)).toMap
+    val want = spark.sql(s"""SELECT g, ${disc.map { case (rid, (p, _)) =>
+        s"percentile_disc($p) WITHIN GROUP (ORDER BY v) AS $rid" }.mkString(", ")}
+        FROM (SELECT g, explode(array_repeat(x, w)) AS v FROM t) GROUP BY g""")
+      .collect().flatMap(r => disc.indices.filterNot(i => r.isNullAt(i + 1))
+        .map(i => (Option(r.getString(0)), disc(i)._1) -> r.getDouble(i + 1))).toMap
+    assert(want.nonEmpty && got.keySet == want.keySet && got.forall { case (key, v) =>
+      SQLOrderingUtil.compareDoubles(v, want(key)) == 0 }, s"$got\n  vs $want")
   }
 
   /** The tasks `body` runs and its result. */
@@ -318,8 +361,8 @@ class RewritePercentileAggSpec extends AnyFunSuite {
   }
 
   test("task counts follow the data, not spark.sql.shuffle.partitions") {
-    // 2 groups x 2,520 rows: pass 1's final aggregate and the operator's
-    // own shuffles must shrink with the data as the builtin's do
+    // 2 groups x 2,520 rows: the one exchange and the operator's reads of
+    // it must shrink with the data as the builtin's do
     spark.range(0, 5040, 1, 4)
       .select((col("id") % 2).as("g"), (col("id") * 0.37 + col("id") % 13).as("v"))
       .createOrReplaceTempView("t_tasks")
